@@ -549,7 +549,7 @@ object Cli {
       // appended deltas, rewrite the partitioned layout, consume the deltas
       graft.ops.Similarity.ivfCompact(spark, ivfDir,
         lists = opt(rest, "--lists", "0").toInt)
-      println(s"ivf compacted -> ${graft.ops.Similarity.ivfRoot(ivfDir)}")
+      println(s"ivf compacted -> ${graft.index.Epochs.root(ivfDir)}")
 
     case "decontaminate" :: corpusDir :: refDir :: rest =>
       // benchmark decontamination: corpus docs near-duplicating any doc of

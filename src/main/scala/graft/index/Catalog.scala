@@ -1,7 +1,7 @@
 package graft.index
 
 /** Driver-side catalog of an index directory's ACTIVE state: which epoch
-  * root is current (compaction flips `CURRENT`, Compactor.scala) and which
+  * root is current (compaction flips `CURRENT`, Epochs.scala) and which
   * streamed segments are live (completed, not yet folded).
   *
   * Why a cache: every query needs this state, and resolving it costs
@@ -55,27 +55,21 @@ object Catalog {
   }
 
   private def load(dir: String): State = {
-    val epoch = Fs.readString(s"$dir/CURRENT").map(_.trim).filter(_.nonEmpty)
-    val root = epoch.map(e => s"$dir/$e").getOrElse(dir)
+    val epoch = Epochs.current(dir)
+    val root = Epochs.rootOf(dir, epoch)
     // Segments the current epoch already folded in: excluded from reads the
     // instant CURRENT flips (their docs live in the epoch's tables); the
     // directories themselves are deleted lazily by the compactor.
-    val folded: Set[String] = Fs.readString(s"$root/folded_segments")
-      .map(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val completed = Fs.listDirs(s"$dir/ingest_segments")
-      .filter(d => Fs.exists(s"$d/_DONE"))
+    val folded = Epochs.readList(s"$root/${Epochs.FoldedSegments}").toSet
+    val completed = Epochs.committedDeltas(s"$dir/ingest_segments")
     // Minor compaction (Compactor.mergeSegments): a completed merged
     // segment's `replaces` file hides its source segments the moment its
     // _DONE lands — same one-marker visibility flip as the epoch pointer.
-    val replaced: Set[String] = completed.flatMap(d =>
-      Fs.readString(s"$d/replaces").toSeq
-        .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty))).toSet
+    val replaced = completed.flatMap(d => Epochs.readList(s"$d/${Epochs.Replaces}")).toSet
     val segs = completed.filter(d => !folded(Fs.name(d)) && !replaced(Fs.name(d)))
     // committed tombstone deltas (marker-gated like segments); epoch-scoped
     // — docIds are re-ranked at each fold, so a new epoch starts clean
-    val tombs = Fs.listDirs(s"$root/tombstones")
-      .filter(d => Fs.exists(s"$d/_DONE"))
+    val tombs = Epochs.committedDeltas(s"$root/tombstones")
     // stamp the fingerprint with the postings-stage marker mtime: a
     // delete+rebuild of the SAME dir (create-index --force + export in one
     // session) would otherwise fingerprint identically and serve the old

@@ -25,254 +25,46 @@ import graft.index.IndexBuilder.{Config, Handle}
   *    bound factor returns to exactly what a fresh build over the union
   *    would have (≈1; the segment-accumulation degradation is gone).
   *
-  * Commit protocol (LevelDB CURRENT / Lucene segments_N analog): all new
-  * tables + lineage are written under `dir/epoch-N/`, the epoch records
-  * which segments it folded (`folded_segments`), and ONE atomic rename of
-  * the `CURRENT` pointer makes the epoch active and the folded segments
-  * invisible together (Catalog.load reads both from the same pointer).
-  * Crash before the flip: the half-written epoch dir is inert garbage,
-  * overwritten by the next attempt. Crash after: consistent; folded segment
-  * directories are deleted lazily on the next compact/cleanup. The genesis
-  * tables (`dir/docmeta` etc.) are retained as the resume base for
-  * `IndexBuilder.build`'s stage markers; prior epoch dirs are deleted.
+  * Commit protocol: `Epochs.commitEpoch` — the new tables are written under
+  * the next `epoch-N`, the epoch records which segments it folded
+  * (`folded_segments`), and ONE atomic flip of the `CURRENT` pointer makes
+  * the epoch active and the folded segments invisible together (Catalog.load
+  * reads both from the same pointer). A crash before the flip leaves the
+  * old state plus an inert, never-visible epoch dir, which the next fold
+  * re-mints and any maintenance op's `Epochs.reconcile` deletes once older
+  * than the GC grace. A crash after the flip is consistent; the folded
+  * segments and the old root are deferred to the GC ledger (re-recorded by
+  * reconcile if the crash skipped that). The genesis tables (`dir/docmeta`
+  * etc.) stay as the resume base for `IndexBuilder.build`'s stage markers.
   */
 object Compactor {
-
-  private def epochName(k: Int): String = f"epoch-$k%06d"
-
-  private def parseEpoch(name: String): Int =
-    name.stripPrefix("epoch-").toInt
-
-  // ---- deferred GC --------------------------------------------------------
-  // Dirs made invisible by a commit are NOT deleted in the same call: an
-  // in-flight query (or a TTL-stale catalog, ≤2 s) may still be scanning
-  // them. Their dir-relative paths are recorded in `$dir/_gc` and physically
-  // deleted at the START of the NEXT maintenance op — a full maintenance
-  // cycle of grace, which is the practical analog of Lucene's
-  // reader-refcounted deletes without distributed reference counting.
-
-  /** Minimum age before a deferred dir is physically deleted — must exceed
-    * the Catalog TTL plus a generous query runtime, so even a reader
-    * holding TTL-stale state never loses files mid-scan (back-to-back
-    * auto-merges would otherwise sweep a dir deferred moments earlier).
-    */
-  def gcGraceMs: Long = sys.props.getOrElse("graft.gc.grace.ms", "10000").toLong
-
-  private[graft] def gcDefer(dir: String, relPaths: Seq[String]): Unit = {
-    val prior = Fs.readString(s"$dir/_gc").toSeq
-      .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty))
-    val now = System.currentTimeMillis()
-    val entries = prior ++ relPaths.map(p => s"$p|$now")
-    Fs.writeString(s"$dir/_gc", entries.distinct.mkString("\n"))
-  }
-
-  private[graft] def gcSweep(dir: String): Unit =
-    Fs.readString(s"$dir/_gc").foreach { c =>
-      val now = System.currentTimeMillis()
-      val (ripe, young) = c.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-        .partition { e =>
-          val at = e.split('|') match {
-            case Array(_, ts) => ts.toLongOption.getOrElse(0L)
-            case _ => 0L
-          }
-          now - at >= gcGraceMs
-        }
-      ripe.foreach(e => Fs.delete(s"$dir/${e.split('|').head}"))
-      if (young.isEmpty) Fs.delete(s"$dir/_gc")
-      else Fs.writeString(s"$dir/_gc", young.mkString("\n"))
-    }
 
   private def segRel(segPath: String): String =
     s"ingest_segments/${Fs.name(segPath)}"
 
-  /** Reconcile on-disk state with the GC ledger — the crash-window sweep
-    * (ADVICE r3 item 3): directories a commit made invisible but whose
-    * gcDefer never ran (crash between the commit marker and the defer) are
-    * recorded now, and _DONE-less `merged=*` dirs older than the grace
-    * period (crashed merges — never visible, and the maintenance lock
-    * guarantees none is in flight) are deleted outright. Without this, such
-    * dirs leak forever: later merges mint fresh names and hidden names stay
-    * hidden permanently.
+  /** The posting index's part of the epoch protocol: `merged=k` segments
+    * and `del-K` tombstone deltas; the genesis delete set dies at the first
+    * flip; segments hidden by a folded/replaces list are dead.
     */
-  private def gcReconcile(dir: String): Unit = {
-    val st = Catalog.of(dir)
-    val inGc: Set[String] = Fs.readString(s"$dir/_gc").toSeq
-      .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty))
-      .map(_.split('|').head).toSet
-    val onDisk = Fs.listDirs(s"$dir/ingest_segments")
-    val leakedSegs = onDisk
-      .filter(d => st.hidden(Fs.name(d)) && !inGc(segRel(d)))
-      .map(segRel)
-    // epoch dirs below CURRENT (crash between the pointer flip and gcDefer)
-    val curEpoch = st.epoch.map(parseEpoch).getOrElse(0)
-    val leakedEpochs = Fs.listDirs(dir).map(Fs.name)
-      .filter(n => n.startsWith("epoch-") &&
-        n.stripPrefix("epoch-").forall(_.isDigit) &&
-        parseEpoch(n) < curEpoch && !inGc(n))
-    if (leakedSegs.nonEmpty || leakedEpochs.nonEmpty)
-      gcDefer(dir, leakedSegs ++ leakedEpochs)
-    val now = System.currentTimeMillis()
-    onDisk.filter(d => Fs.name(d).startsWith("merged=") &&
-        !Fs.exists(s"$d/_DONE") && now - Fs.mtime(d) > gcGraceMs)
-      .foreach(Fs.delete)
-    // crashed tombstone deltas (same class as dead half-merges: _DONE-less,
-    // never visible; later commits mint fresh del-K names so nothing ever
-    // reuses these)
-    val root = st.epoch.map(e => s"$dir/$e").getOrElse(dir)
-    Fs.listDirs(s"$root/tombstones")
-      .filter(d => Fs.name(d).startsWith("del-") &&
-        !Fs.exists(s"$d/_DONE") && now - Fs.mtime(d) > gcGraceMs)
-      .foreach(Fs.delete)
-    // genesis delete set orphaned by an epoch flip that crashed before its
-    // gcDefer (once CURRENT points at an epoch, `$dir/tombstones` is dead)
-    if (st.epoch.nonEmpty && Fs.exists(s"$dir/tombstones") && !inGc("tombstones"))
-      gcDefer(dir, Seq("tombstones"))
-  }
+  private[graft] val layout = Epochs.Layout(
+    consumedList = Epochs.FoldedSegments,
+    deltas = (dir, root) => Seq(s"$dir/ingest_segments" -> "merged=", s"$root/tombstones" -> "del-"),
+    deadAtGenesis = _ == "tombstones",
+    hidden = dir => {
+      val st = Catalog.of(dir)
+      Fs.listDirs(s"$dir/ingest_segments").filter(d => st.hidden(Fs.name(d))).map(segRel)
+    })
 
-  // ---- maintenance mutual exclusion --------------------------------------
-  // compact and mergeSegments must never interleave on one index dir
-  // (in-process or cross-process): a merge committing `merged=k` from
-  // sources a concurrent compact is folding would leave k live while its
-  // sources' docs are also in the new epoch — every streamed doc
-  // double-counted with no error (ADVICE r3 item 2). One file lock
-  // (`$dir/_MAINT`, atomic create) serializes all maintenance; a crashed
-  // holder's lock is broken after a staleness timeout.
-
-  def maintLockStaleMs: Long =
-    sys.props.getOrElse("graft.maint.lock.stale.ms", "600000").toLong
-
-  // every holder in this JVM gets a unique token written INTO the lock
-  // file: refresh/release verify ownership before touching it, so a stolen
-  // lock is detected (the victim aborts) instead of silently clobbered,
-  // and a breaker can confirm it is deleting the same dead holder's lock
-  // it judged stale. File-based locking is inherently best-effort — at
-  // multi-writer production scale this is where a real lock service (ZK,
-  // a conditional-put on the metastore) slots in; the protocol here makes
-  // every failure LOUD rather than a silent double-commit.
-  private def newToken(): String =
-    s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}|" +
-      s"${java.util.UUID.randomUUID()}"
-
-  private[graft] def tryMaintLock(dir: String): Option[String] = {
-    val p = s"$dir/_MAINT"
-    def claim(): Option[String] = {
-      if (!Fs.tryCreateNew(p)) None
-      else {
-        val tok = newToken()
-        Fs.writeString(p, tok) // own file; stamps mtime + ownership
-        Some(tok)
-      }
-    }
-    claim().orElse {
-      val at = Fs.mtime(p)
-      if (at == 0L) claim() // released between attempts: retry once
-      else if (System.currentTimeMillis() - at > maintLockStaleMs) {
-        // crashed holder: break the stale lock ATOMICALLY by renaming it to
-        // a per-breaker name (ADVICE r4: a delete-based break is
-        // check-then-act — two waiters poll on the same 100 ms cadence, so
-        // both can pass the staleness recheck and the slower one's delete
-        // removes the winner's freshly claimed lock, letting two
-        // maintenance ops run). Rename is atomic: of N concurrent breakers
-        // exactly one wins; losers' renames fail because the source is
-        // gone. Live long-running holders never look stale — the heartbeat
-        // thread re-stamps the lock at staleMs/3 cadence.
-        val tok = Fs.readString(p)
-        if (Fs.mtime(p) == at && Fs.readString(p) == tok) {
-          val aside = s"$p.breaking.${java.util.UUID.randomUUID()}"
-          if (!Fs.tryRename(p, aside)) None // another breaker won the race
-          else if (Fs.readString(aside) == tok) { Fs.delete(aside); claim() }
-          else {
-            // we renamed a lock that was re-acquired between our recheck
-            // and the rename — put it back; if someone claimed the now-
-            // empty slot meanwhile, drop the aside copy (its owner's
-            // heartbeat detects the loss and aborts loudly)
-            if (!Fs.tryRename(aside, p)) Fs.delete(aside)
-            None
-          }
-        } else None
-      } else None
-    }
-  }
-
-  /** Test seam: invoked (with a label) immediately before each commit
-    * point's ownership re-verification — lets a test steal the lock at the
-    * worst possible instant and assert the op aborts BEFORE its commit
-    * artifact exists.
+  /** Maintenance prologue, under the lock: sweep what earlier ops deferred
+    * (a full cycle of grace), reconcile crash leftovers, and return the ONE
+    * fresh Catalog.State the op derives everything from (a TTL-cached state
+    * could predate a peer process's commit).
     */
-  private[graft] var beforeCommitHook: String => Unit = _ => ()
-
-  /** Commit-point guard: ownership re-verified at the INSTANT of commit
-    * (VERDICT r4 wrong-item 2 — the heartbeat verifies at ~staleMs/3
-    * cadence, so a steal could otherwise be detected only after the commit
-    * landed). One cheap read immediately before every irreversible marker:
-    * the CURRENT flip, mergeSegments' `_DONE`, tombstone's `_DONE`.
-    */
-  private[graft] def verifyOwnedThen(dir: String, token: String, label: String)(
-      commit: => Unit): Unit = {
-    beforeCommitHook(label)
-    refreshMaintLock(dir, token)
-    commit
-  }
-
-  /** Verified heartbeat/release: act only while the lock still carries OUR
-    * token; a lost lock throws (the op must abort — continuing after a
-    * steal is exactly the double-commit the lock exists to prevent).
-    */
-  private def refreshMaintLock(dir: String, token: String): Unit = {
-    val p = s"$dir/_MAINT"
-    if (!Fs.readString(p).contains(token))
-      throw new IllegalStateException(
-        s"maintenance lock $p lost (broken as stale or clobbered) — aborting")
-    Fs.writeString(p, token) // re-stamp mtime, keep ownership
-  }
-
-  private def releaseMaintLock(dir: String, token: String): Unit = {
-    val p = s"$dir/_MAINT"
-    if (Fs.readString(p).contains(token)) Fs.delete(p)
-  }
-
-  /** Acquire the maintenance lock (bounded wait) and run `body` under it,
-    * with a BACKGROUND heartbeat re-stamping the lock at staleMs/3 cadence
-    * for the whole duration — a fold phase of any length stays visibly
-    * alive, so the staleness breaker only ever fires on dead holders. The
-    * two blocking maintenance entry points (compact, tombstone) share
-    * this; mergeSegments stays non-blocking (opportunistic skip).
-    */
-  private[graft] def withMaintLock[T](dir: String, what: String)(body: String => T): T = {
-    val deadline = System.currentTimeMillis() + maintLockWaitMs
-    var token = tryMaintLock(dir)
-    while (token.isEmpty && System.currentTimeMillis() < deadline) {
-      Thread.sleep(100)
-      token = tryMaintLock(dir)
-    }
-    require(token.nonEmpty, s"another maintenance op holds $dir/_MAINT ($what " +
-      "would interleave with it — concurrent maintenance on one index dir " +
-      "can double-count docs)")
-    val tok = token.get
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val fail = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val beat = new Thread(() => {
-      val period = math.max(maintLockStaleMs / 3, 1000L)
-      while (!stop.get()) {
-        try refreshMaintLock(dir, tok)
-        catch { case t: Throwable => fail.set(t); stop.set(true) }
-        var slept = 0L
-        while (!stop.get() && slept < period) { Thread.sleep(100); slept += 100 }
-      }
-    }, s"graft-maint-heartbeat")
-    beat.setDaemon(true)
-    beat.start()
-    try {
-      val r = body(tok)
-      // a heartbeat that detected a steal means our commits are suspect —
-      // surface it even if the body happened to finish
-      if (fail.get() != null) throw fail.get()
-      r
-    } finally {
-      stop.set(true)
-      beat.join(2000)
-      releaseMaintLock(dir, tok)
-    }
+  private def tidy(dir: String): Catalog.State = {
+    Epochs.gcSweep(dir)
+    Catalog.invalidate(dir)
+    Epochs.reconcile(dir, layout)
+    Catalog.of(dir)
   }
 
   /** MINOR compaction (the Lucene tiered-merge analog): concatenate all
@@ -295,16 +87,14 @@ object Compactor {
     val h = IndexBuilder.openHandle(dir)
     // opportunistic op riding the 1 s ingest cadence: if another maintenance
     // op holds the lock, skip — the next batch's merge check retries
-    val token = tryMaintLock(dir) match {
+    val token = Epochs.tryMaintLock(dir) match {
       case None => return h
       case Some(t) => t
     }
     try {
-      gcSweep(dir) // previously deferred dirs have had a full cycle of grace
-      gcReconcile(dir)
       // ONE Catalog.State for the whole op: segment set and hidden names
-      // must come from the same snapshot (ADVICE r3 item 1)
-      val st = Catalog.of(dir)
+      // must come from the same snapshot
+      val st = tidy(dir)
       val segs = st.segments
       if (segs.size < minSegments) return h
       // the new name must never collide with a LIVE dir name OR a name some
@@ -312,12 +102,7 @@ object Compactor {
       // but their names persist in folded_segments forever — recycling one
       // would make the new segment, and everything its replaces list names,
       // permanently invisible)
-      val taken = Fs.listDirs(s"$dir/ingest_segments").map(Fs.name) ++ st.hidden
-      val k = taken.flatMap(n =>
-        if (n.startsWith("merged=")) n.stripPrefix("merged=").toLongOption else None)
-        .foldLeft(0L)(math.max) + 1
-      val out = s"$dir/ingest_segments/merged=$k"
-      Fs.delete(out) // stale crashed attempt
+      val out = Epochs.mintDelta(s"$dir/ingest_segments", "merged=", st.hidden, pad = false)
       // small unions of small files — coalesce keeps the merged segment at a
       // few files per table (the whole point: fewer paths per query); the
       // five tables are independent, so the copies run concurrently (this op
@@ -347,23 +132,16 @@ object Compactor {
       // both. Carried TRANSITIVELY: if a source is itself a merged segment
       // whose lazy deletion of ITS sources failed, those names must stay
       // hidden after the source (and its replaces file) is deleted.
-      val transitive = segs.flatMap(d => Fs.readString(s"$d/replaces").toSeq
-        .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty)))
-      Fs.writeString(s"$out/replaces",
-        (segs.map(Fs.name) ++ transitive).distinct.sorted.mkString("\n"))
-      verifyOwnedThen(dir, token, "merge") { Fs.touch(s"$out/_DONE") }
+      Epochs.writeList(s"$out/${Epochs.Replaces}",
+        segs.map(Fs.name) ++ segs.flatMap(d => Epochs.readList(s"$d/${Epochs.Replaces}")))
+      Epochs.verifyOwnedThen(dir, token) { Fs.touch(s"$out/_DONE") }
       Catalog.invalidate(dir)
-      // deferred cleanup; already invisible via `replaces` (see gcDefer)
-      gcDefer(dir, segs.map(segRel))
+      // deferred cleanup; already invisible via `replaces` (see Epochs.gcDefer)
+      Epochs.gcDefer(dir, segs.map(segRel))
       IndexBuilder.openHandle(dir)
-    } finally releaseMaintLock(dir, token)
+    } finally Epochs.releaseMaintLock(dir, token)
   }
 
-  /** Fold all live streamed segments into a new epoch. No-op (returns the
-    * handle unchanged) when there is nothing to fold. `cfg` supplies the
-    * salt scheme — pass the same values the batch build used so the folded
-    * epoch is bit-identical to a fresh build over the union.
-    */
   /** Record docId TOMBSTONES — the index-level delete path (the enforcement
     * half of dedup: Dedup.dedupClusters names each doc's keeper;
     * tombstoning the non-keepers makes the index act on the verdict without
@@ -389,9 +167,10 @@ object Compactor {
                 docIds: org.apache.spark.sql.DataFrame,
                 expectRoot: Option[String] = None): Handle = {
     import org.apache.spark.sql.functions.col
-    withMaintLock(dir, "tombstone") { tok =>
+    Epochs.withMaintLock(dir, "tombstone") { tok =>
+      Catalog.invalidate(dir) // the epoch check below needs the on-disk state
       val st = Catalog.of(dir)
-      val root = st.epoch.map(e => s"$dir/$e").getOrElse(dir)
+      val root = Epochs.rootOf(dir, st.epoch)
       // docIds are EPOCH-SCOPED: a caller that resolved them from docmeta
       // must pass the root it resolved against — if a peer's compaction
       // re-ranked the ids while we waited for the lock, committing them
@@ -400,11 +179,7 @@ object Compactor {
         s"index epoch changed while waiting for the lock ($r -> $root): " +
           "docIds were resolved against a re-ranked epoch — re-resolve " +
           "from the current docmeta and retry"))
-      val k = Fs.listDirs(s"$root/tombstones").map(Fs.name)
-        .flatMap(_.stripPrefix("del-").toLongOption)
-        .foldLeft(0L)(math.max) + 1
-      val out = f"$root/tombstones/del-$k%06d"
-      Fs.delete(out) // stale crashed attempt
+      val out = Epochs.mintDelta(s"$root/tombstones", "del-")
       // id column BY NAME, never by position (ADVICE r4: a user parquet
       // whose first column happens not to be the index docId — e.g. a
       // corpus frame with doc_id first — would silently delete arbitrary
@@ -422,42 +197,43 @@ object Compactor {
         .distinct().coalesce(1)
         .write.mode("overwrite").parquet(s"$out/ids")
       // marker LAST — a half-written delta is invisible
-      verifyOwnedThen(dir, tok, "tombstone") { Fs.touch(s"$out/_DONE") }
+      Epochs.verifyOwnedThen(dir, tok) { Fs.touch(s"$out/_DONE") }
       Catalog.invalidate(dir)
       IndexBuilder.openHandle(dir)
     }
   }
 
-  /** How long `compact` waits for the maintenance lock before failing. An
-    * ingest auto-merge holds it sub-second, so contention resolves fast; a
-    * long-running peer compaction holding it past the wait is a real
-    * conflict the caller must see.
+  /** Fold all live streamed segments into a new epoch. No-op (returns the
+    * handle unchanged) when there is nothing to fold. `cfg` supplies the
+    * salt scheme — pass the same values the batch build used so the folded
+    * epoch is bit-identical to a fresh build over the union.
     */
-  def maintLockWaitMs: Long =
-    sys.props.getOrElse("graft.maint.lock.wait.ms", "30000").toLong
-
   def compact(spark: SparkSession, dir: String, cfg: Config = Config()): Handle =
-    withMaintLock(dir, "compact") { tok =>
-      compactLocked(spark, dir, cfg, tok)
+    Epochs.withMaintLock(dir, "compact") { token =>
+      // ONE Catalog.State for the whole fold: the folded segment set, the
+      // old root, the tombstone set and the new epoch number all derive from
+      // this snapshot
+      val state = tidy(dir)
+      val segs = state.segments
+      // something to fold? segments to merge in, or deletes to purge. The
+      // folded list also takes the names a merged source segment was hiding
+      // (its `replaces` file dies with it; a failed lazy delete must not
+      // resurrect its sources).
+      if (segs.nonEmpty || state.tombstones.nonEmpty)
+        Epochs.commitEpoch(dir, token, layout, state.epoch,
+          consumed = segs.flatMap(d => Fs.name(d) +: Epochs.readList(s"$d/${Epochs.Replaces}")),
+          dead = segs.map(segRel))(fold(spark, dir, cfg, state, _))
+      IndexBuilder.openHandle(dir)
     }
 
-  private def compactLocked(spark: SparkSession, dir: String, cfg: Config,
-                            token: String): Handle = {
+  /** Write the folded tables of `state` (its root ∪ live segments, minus
+    * its tombstones) under `newRoot`.
+    */
+  private def fold(spark: SparkSession, dir: String, cfg: Config,
+                   state: Catalog.State, newRoot: String): Unit = {
     import spark.implicits._
-    gcSweep(dir) // previously deferred dirs have had a full cycle of grace
-    gcReconcile(dir)
-    val h = IndexBuilder.openHandle(dir)
-    // ONE Catalog.State for the whole fold: the folded segment set, the old
-    // root, the tombstone set and the new epoch number all derive from this
-    // snapshot
-    val state = Catalog.of(dir)
     val segs = state.segments
-    // something to fold? segments to merge in, or deletes to purge
-    if (segs.isEmpty && state.tombstones.isEmpty) return h
-    val oldRoot = state.epoch.map(e => s"$dir/$e").getOrElse(dir)
-    val newEpoch = epochName(state.epoch.map(parseEpoch).getOrElse(0) + 1)
-    val newRoot = s"$dir/$newEpoch"
-    Fs.delete(newRoot) // stale crashed attempt, if any
+    val oldRoot = Epochs.rootOf(dir, state.epoch)
     val parts = if (cfg.partitions > 0) cfg.partitions
       else spark.sessionState.conf.numShufflePartitions
 
@@ -493,10 +269,10 @@ object Compactor {
       // included. Derived from the id-assigned frame directly so the three
       // table folds below have no ordering dependency and run CONCURRENTLY
       // (same overlap pattern as the build and the ingest writes).
-      // lazy: forced first from the postings-fold THREAD, so the sample
-      // job overlaps the docmeta fold instead of serializing before the
-      // concurrent group (same overlap the build's lazy buildAvgdl does);
-      // writeStats reads the already-computed value afterwards
+      // lazy: forced from the fold THREADS (postings usually first), so
+      // the sample job overlaps the docmeta fold instead of serializing
+      // before the concurrent group (same overlap the build's lazy
+      // buildAvgdl does)
       lazy val est = IndexBuilder.timedStage("fold-avgdl")(
         IndexBuilder.estimateBuildAvgdl(
           assigned.df.select($"docId", $"dl")))
@@ -590,8 +366,8 @@ object Compactor {
         val tot = dmAcc.value.asScala.groupBy(_.partitionId)
           .map(_._2.head.termCount).sum
         val avgdl = tot.toDouble / n.toDouble
-        // lazy `est` is forced by the postings thread first; a concurrent
-        // force here just blocks on the same lazy-val monitor until ready
+        // whichever thread forces lazy `est` first computes it; the other
+        // blocks on the same lazy-val monitor until it is ready
         val estV = est
         Seq(IndexStats(n, avgdl, tot, estV)).toDS()
           .write.mode("overwrite").parquet(s"$newRoot/stats")
@@ -627,32 +403,6 @@ object Compactor {
           () => { foldDocmeta(); writeStats() },
           () => { foldPostings(); writeTermstats() },
           foldPositions)))
-
-      // ---- commit: folded list + ONE atomic pointer flip ------------------
-      val priorFolded = Fs.readString(s"$oldRoot/folded_segments")
-        .map(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty[String])
-      // also fold the names a merged source segment was hiding (its
-      // `replaces` file dies with it; a failed lazy delete must not
-      // resurrect its sources)
-      val replacedBySegs = segs.flatMap(d => Fs.readString(s"$d/replaces").toSeq
-        .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty)))
-      val folded = (priorFolded ++ segs.map(Fs.name) ++ replacedBySegs).toSeq.sorted
-      Fs.writeString(s"$newRoot/folded_segments", folded.mkString("\n"))
-      verifyOwnedThen(dir, token, "compact") {
-        Fs.atomicWrite(s"$dir/CURRENT", newEpoch)
-      }
-      Catalog.invalidate(dir)
-
-      // ---- deferred cleanup (readers already ignore these; deleted by the
-      // next maintenance op — see gcDefer) ---------------------------------
-      gcDefer(dir, segs.map(segRel) ++
-        (if (oldRoot != dir) Seq(Fs.name(oldRoot))
-         // genesis layout: the epoch flip orphans the genesis-root delete
-         // set (the new epoch starts clean) — defer it with the segments
-         else if (state.tombstones.nonEmpty) Seq("tombstones")
-         else Seq.empty))
     } finally assigned.release()
-    IndexBuilder.openHandle(dir)
   }
 }

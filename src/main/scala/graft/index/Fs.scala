@@ -19,6 +19,14 @@ object Fs {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  /** Test seam: called with (operation, path) before every mutation this
+    * object makes — `touch`, `writeString`, `atomicWrite` (before its
+    * rename), `delete`, `tryCreateNew`, `tryRename` — so a test can count a
+    * protocol's filesystem steps, throw at any one of them, or interleave a
+    * peer's writes at an exact instant.
+    */
+  @volatile private[graft] var beforeMutation: (String, String) => Unit = (_, _) => ()
+
   private def fsOf(path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(conf), p)
@@ -34,6 +42,7 @@ object Fs {
     * "not there yet".
     */
   def touch(path: String): Unit = {
+    beforeMutation("touch", path)
     val (fs, p) = fsOf(path)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
@@ -41,6 +50,7 @@ object Fs {
   }
 
   def writeString(path: String, s: String): Unit = {
+    beforeMutation("writeString", path)
     val (fs, p) = fsOf(path)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
@@ -108,6 +118,7 @@ object Fs {
   }
 
   def delete(path: String): Unit = {
+    beforeMutation("delete", path)
     val (fs, p) = fsOf(path)
     fs.delete(p, true)
     ()
@@ -122,6 +133,7 @@ object Fs {
   def atomicWrite(path: String, content: String): Unit = {
     val tmp = s"$path.tmp"
     writeString(tmp, content)
+    beforeMutation("atomicWrite", path)
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(new Path(path).toUri, conf)
     fc.rename(new Path(tmp), new Path(path), Options.Rename.OVERWRITE)
   }
@@ -132,6 +144,7 @@ object Fs {
     * staleness timeout still bounds the damage).
     */
   def tryCreateNew(path: String): Boolean = {
+    beforeMutation("tryCreateNew", path)
     val (fs, p) = fsOf(path)
     fs.mkdirs(p.getParent)
     try fs.createNewFile(p)
@@ -139,7 +152,7 @@ object Fs {
   }
 
   /** Atomic no-overwrite rename: true iff `src` was moved to `dst`. The
-    * lock-BREAK primitive (Compactor.tryMaintLock): renaming a stale lock
+    * lock-BREAK primitive (Epochs.tryMaintLock): renaming a stale lock
     * aside is atomic, so of two concurrent breakers exactly one wins — the
     * loser's rename fails because the source is gone (a delete-based break
     * is check-then-act: the slower breaker can delete the winner's freshly
@@ -150,6 +163,7 @@ object Fs {
     * lock put-back path must never do to a freshly claimed lock.
     */
   def tryRename(src: String, dst: String): Boolean = {
+    beforeMutation("tryRename", src)
     try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         new Path(src).toUri, conf)

@@ -92,9 +92,9 @@ object IndexBuilder {
 
     /** Active table root: `dir` itself (genesis layout) until a compaction
       * has committed, then the epoch directory named by `dir/CURRENT`
-      * (Compactor.scala).
+      * (Epochs.scala).
       */
-    def root: String = state.epoch.map(e => s"$dir/$e").getOrElse(dir)
+    def root: String = Epochs.rootOf(dir, state.epoch)
 
     /** Completed, un-folded streamed segments (marker-gated: a half-written
       * replayed batch is invisible until its _DONE lands; segments folded by

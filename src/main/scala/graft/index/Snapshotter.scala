@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *    index (restore-in-place is free; `restore` adds integrity
   *    verification and a fresh target).
   *  - consistency: the whole copy runs under the index's maintenance lock
-  *    (Compactor.withMaintLock), so no concurrent compact/merge/tombstone
+  *    (Epochs.withMaintLock), so no concurrent compact/merge/tombstone
   *    can commit — and more importantly cannot GC — files mid-copy. Ingest
   *    may land NEW segments while the snapshot runs; they postdate the
   *    pinned state and are simply not part of it (the ES point-in-time
@@ -77,7 +77,7 @@ object Snapshotter {
     * dead weight a snapshot must not carry.
     */
   private[graft] def liveFiles(dir: String, st: Catalog.State): Seq[String] = {
-    val root = st.epoch.map(e => s"$dir/$e").getOrElse(dir)
+    val root = Epochs.rootOf(dir, st.epoch)
     val rootRel = st.epoch.map(e => s"$e/").getOrElse("")
     def under(p: String): Seq[String] = Fs.listFilesRecursive(p)
     val rootFiles = under(root).map(f => rootRel + relOf(root, f)).filterNot { r =>
@@ -87,9 +87,7 @@ object Snapshotter {
       // state and segment dirs must be excluded here
       rel.startsWith("tombstones/") ||
         (rootRel.isEmpty && (rel.startsWith("ingest_segments/") ||
-          rel.startsWith("epoch-") || rel == "CURRENT" || rel == "CURRENT.tmp" ||
-          rel.startsWith("_MAINT") || rel == "_gc" ||
-          rel.startsWith(ManifestName) || rel == DoneMarker))
+          Epochs.isProtocolFile(rel) || rel.startsWith(ManifestName) || rel == DoneMarker))
     }
     val segFiles = st.segments.flatMap(s => under(s).map(f =>
       s"ingest_segments/${Fs.name(s)}/" + relOf(s, f)))
@@ -195,7 +193,7 @@ object Snapshotter {
   def snapshot(spark: SparkSession, dir: String, destDir: String): Int = {
     require(Fs.isAbsentOrEmptyDir(destDir),
       s"snapshot destination $destDir exists and is not empty")
-    Compactor.withMaintLock(dir, "snapshot") { _ =>
+    Epochs.withMaintLock(dir, "snapshot") { _ =>
       Catalog.invalidate(dir) // pin a fresh read under the lock
       val st = Catalog.of(dir)
       val rels = liveFiles(dir, st)
@@ -203,7 +201,7 @@ object Snapshotter {
       val entries = copyAll(spark, dir, destDir, rels, Map.empty)
       // commit: epoch pointer (restored index opens the same root), then
       // manifest, then the done marker LAST
-      st.epoch.foreach(e => Fs.atomicWrite(s"$destDir/CURRENT", e))
+      st.epoch.foreach(Epochs.pointAt(destDir, _))
       writeManifest(destDir, st.epoch, st.fingerprint, entries)
       Fs.touch(s"$destDir/$DoneMarker")
       entries.size
@@ -237,7 +235,7 @@ object Snapshotter {
     val tmp = s"$destParent/.$destName.restoring-${java.util.UUID.randomUUID()}"
     copyAll(spark, snapDir, tmp, entries.map(_.rel),
       entries.map(e => e.rel -> e).toMap)
-    epoch.foreach(e => Fs.atomicWrite(s"$tmp/CURRENT", e))
+    epoch.foreach(Epochs.pointAt(tmp, _))
     if (Fs.exists(destDir)) Fs.delete(destDir) // verified-empty dir above
     require(Fs.tryRename(tmp, destDir),
       s"restore commit failed: could not rename $tmp -> $destDir")

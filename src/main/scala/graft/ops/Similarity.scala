@@ -361,10 +361,10 @@ object Similarity {
     s"${sys.props("java.io.tmpdir")}/graft-ivf/v2-l$lists-$key-${srcStamp(sfDir)}"
   }
 
-  // ---- IVF epoch plumbing (mirrors Compactor's CURRENT protocol) ---------
+  // ---- IVF epochs (the Epochs protocol) ----------------------------------
   // Genesis layout: emb/centroids/_DONE at `dir` itself. After an
-  // `ivfCompact` fold, `dir/CURRENT` names the live `epoch-K` subdir; every
-  // read path resolves the root through it, so a fold (retrained centroids
+  // `ivfCompact` fold the live root is an epoch subdir; every read path
+  // resolves the root once (Epochs.root), so a fold (retrained centroids
   // + rewritten partitioned layout + consumed appends) becomes visible in
   // ONE atomic pointer flip. Appends are ROOT-scoped (`root/append-K`):
   // their list_id assignment is only meaningful against their root's
@@ -372,11 +372,15 @@ object Similarity {
   // consumes them all under the maintenance lock (no append can land
   // mid-fold and silently carry a stale quantizer's partitioning).
 
-  private def ivfEpochName(k: Int): String = f"epoch-$k%06d"
-
-  private[graft] def ivfRoot(dir: String): String =
-    graft.index.Fs.readString(s"$dir/CURRENT")
-      .map(e => s"$dir/${e.trim}").getOrElse(dir)
+  /** The IVF store's part of the epoch protocol: `append-K` and `del-K`
+    * deltas under the root; at the first flip the genesis tables, deltas
+    * and their claims are dead.
+    */
+  private[graft] val ivfLayout = graft.index.Epochs.Layout(
+    consumedList = graft.index.Epochs.FoldedAppends,
+    deltas = (_, root) => Seq(root -> "append-", root -> "del-"),
+    deadAtGenesis = n => n == "emb" || n == "centroids" || n.startsWith("append-") ||
+      n.startsWith("del-") || graft.index.Epochs.isClaim(n))
 
   /** True iff a root-based cache key belongs to THIS index dir: the key is
     * `root|…` where root is `dir` itself (genesis) or `dir/epoch-K`.
@@ -522,18 +526,11 @@ object Similarity {
     * another epoch's partitioned layout mid-probe.
     */
   private def ivfAppendDirsAt(root: String): Seq[String] =
-    graft.index.Fs.listDirs(root)
-      .filter(d => graft.index.Fs.name(d).startsWith("append-") &&
-        graft.index.Fs.exists(s"$d/_DONE"))
-
-  private def ivfAppendDirs(dir: String): Seq[String] =
-    ivfAppendDirsAt(ivfRoot(dir))
+    graft.index.Epochs.committedDeltas(root, "append-")
 
   /** Completed delete deltas under an explicit root (ivfTombstone). */
   private def ivfDelDirsAt(root: String): Seq[String] =
-    graft.index.Fs.listDirs(root)
-      .filter(d => graft.index.Fs.name(d).startsWith("del-") &&
-        graft.index.Fs.exists(s"$d/_DONE"))
+    graft.index.Epochs.committedDeltas(root, "del-")
 
   /** Cache key carrying the live fingerprint: the pinned root (an
     * ivfCompact flips CURRENT), its _DONE mtime (changes on every rebuild),
@@ -570,8 +567,8 @@ object Similarity {
     // under the new one (partition pruning would probe the WRONG lists).
     // Appends are occasional batch commits (not the 1 s posting cadence),
     // so lock acquisition cost is irrelevant.
-    graft.index.Compactor.withMaintLock(dir, "ivf-append") { tok =>
-      val root = ivfRoot(dir)
+    graft.index.Epochs.withMaintLock(dir, "ivf-append") { tok =>
+      val root = graft.index.Epochs.root(dir)
       require(graft.index.Fs.exists(s"$root/_DONE"),
         s"no IVF index at $dir — buildIvf first")
       // `batchTag` = streaming-ingest mode (startIvfAppend): the delta is
@@ -595,18 +592,11 @@ object Similarity {
         val centroids: Array[Array[Double]] =
           quantizerAt(spark, dir, root).map(_._2)
         val bc = spark.sparkContext.broadcast(centroids)
-        // untagged mode: reserve the delta name ATOMICALLY (claim file);
-        // the _DONE guard makes claim GC safe — a K whose delta committed
-        // is never re-claimed even after ivfCompact swept its claim file
-        val out = tagged.map(n => s"$root/$n").getOrElse {
-          var k = graft.index.Fs.listDirs(root).map(graft.index.Fs.name)
-            .flatMap(_.stripPrefix("append-").toLongOption)
-            .foldLeft(0L)(math.max) + 1
-          while (graft.index.Fs.exists(f"$root/append-$k%06d/_DONE") ||
-              !graft.index.Fs.tryCreateNew(f"$root/append-$k%06d.claim")) k += 1
-          f"$root/append-$k%06d"
-        }
-        graft.index.Fs.delete(out) // stale crashed attempt under a re-used claim
+        // untagged mode: a claimed fresh name (Epochs.mintDelta); tagged
+        // mode: the tag's name, cleared of a crashed attempt under it
+        val out = tagged.map(n => s"$root/$n")
+          .getOrElse(graft.index.Epochs.mintDelta(root, "append-"))
+        if (tagged.nonEmpty) graft.index.Fs.delete(out)
         val assign = new TaskLazy(() => assignerFor(bc.value)) // centroid norms once per task
         newEmb.select(col("vec_id"), col("embedding"), col("label"))
           .as[(Long, Array[Float], Int)]
@@ -615,10 +605,9 @@ object Similarity {
           .repartition(col("list_id"))
           .write.mode("overwrite").partitionBy("list_id").parquet(s"$out/emb")
         // marker LAST: half-writes invisible; ownership re-verified at the
-        // commit instant (same discipline as Compactor's commit points —
-        // the heartbeat alone could detect a steal only AFTER the marker
-        // landed)
-        graft.index.Compactor.verifyOwnedThen(dir, tok, "ivf-append") {
+        // commit instant (the heartbeat alone could detect a steal only
+        // AFTER the marker landed)
+        graft.index.Epochs.verifyOwnedThen(dir, tok) {
           graft.index.Fs.touch(s"$out/_DONE")
         }
         // the commit changed the cache fingerprint: drop layout/delete
@@ -631,8 +620,7 @@ object Similarity {
 
   /** Append names consumed by prior folds at this root (replay guard). */
   private def foldedAppendsAt(root: String): Set[String] =
-    graft.index.Fs.readString(s"$root/folded_appends").toSeq
-      .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty)).toSet
+    graft.index.Epochs.readList(s"$root/${graft.index.Epochs.FoldedAppends}").toSet
 
   /** IVF-level DELETE — the ANN twin of `Compactor.tombstone`, completing
     * the build → append → DELETE → fold lifecycle symmetry with the
@@ -654,8 +642,8 @@ object Similarity {
     * any snapshot stays correct. Runs under the shared maintenance lock.
     */
   def ivfTombstone(spark: SparkSession, dir: String, vecIds: DataFrame): Unit = {
-    graft.index.Compactor.withMaintLock(dir, "ivf-tombstone") { tok =>
-      val root = ivfRoot(dir)
+    graft.index.Epochs.withMaintLock(dir, "ivf-tombstone") { tok =>
+      val root = graft.index.Epochs.root(dir)
       require(graft.index.Fs.exists(s"$root/_DONE"),
         s"no IVF index at $dir — buildIvf first")
       // id column BY NAME, never by position (the Compactor.tombstone
@@ -668,17 +656,7 @@ object Similarity {
               s"column; got (${vecIds.columns.mkString(", ")})")
           vecIds.columns.head
         }
-      // same claim + _DONE-recheck name discipline as ivfAppend: a holder
-      // resumed after its lock was broken as stale must never Fs.delete a
-      // peer's COMMITTED delta minted under the same K — the claim makes
-      // the reservation atomic, the _DONE check skips consumed names
-      var k = graft.index.Fs.listDirs(root).map(graft.index.Fs.name)
-        .flatMap(_.stripPrefix("del-").toLongOption)
-        .foldLeft(0L)(math.max) + 1
-      while (graft.index.Fs.exists(f"$root/del-$k%06d/_DONE") ||
-          !graft.index.Fs.tryCreateNew(f"$root/del-$k%06d.claim")) k += 1
-      val out = f"$root/del-$k%06d"
-      graft.index.Fs.delete(out) // stale crashed attempt under a re-used claim
+      val out = graft.index.Epochs.mintDelta(root, "del-")
       vecIds.select(col(idCol).cast("long").as("vec_id"))
         .distinct().coalesce(1)
         .write.mode("overwrite").parquet(s"$out/ids")
@@ -690,7 +668,7 @@ object Similarity {
       if (spark.read.parquet(s"$out/ids").limit(1).count() == 0L) {
         graft.index.Fs.delete(out)
       } else {
-        graft.index.Compactor.verifyOwnedThen(dir, tok, "ivf-tombstone") {
+        graft.index.Epochs.verifyOwnedThen(dir, tok) {
           graft.index.Fs.touch(s"$out/_DONE") // marker LAST
         }
         evictIvfDataCaches(dir, tombs = true)
@@ -766,25 +744,25 @@ object Similarity {
     * pure functions of the row set, not its layout — OpsSpec asserts
     * centroid/assignment identity).
     *
-    * Commit protocol mirrors Compactor: the new epoch is built complete
-    * under `dir/epoch-K` (its own `_DONE` inside), then ONE atomic
-    * `CURRENT` flip makes it live; the old root's tables, its consumed
-    * `append-*` deltas AND their accumulated `.claim` files (ADVICE r4:
-    * previously leaked forever) are deferred to the GC ledger and
-    * physically deleted — after a grace period — at the START of the next
-    * fold, never while a reader might still scan them. Crash before the
-    * flip leaves inert garbage the next fold's sweep removes; crash after
-    * is consistent. Runs under the same maintenance lock as ivfAppend.
+    * Commit protocol: Epochs.commitEpoch — the new epoch is built complete
+    * (its own `_DONE` inside), then ONE atomic pointer flip makes it live;
+    * the old root's tables, its consumed `append-*` deltas AND their
+    * accumulated `.claim` files go to the GC ledger and are physically
+    * deleted — after a grace period — at the START of a later fold, never
+    * while a reader might still scan them. A crash before the flip leaves
+    * an inert epoch that Epochs.reconcile deletes; a crash after is
+    * consistent. Runs under the same maintenance lock as ivfAppend.
     */
   def ivfCompact(spark: SparkSession, dir: String, lists: Int = 0,
                  iters: Int = 2): Unit = {
-    import spark.implicits._
-    graft.index.Compactor.withMaintLock(dir, "ivf-compact") { tok =>
-      graft.index.Compactor.gcSweep(dir) // previous fold's deferred deletes
-      val root = ivfRoot(dir)
+    val Epochs = graft.index.Epochs
+    Epochs.withMaintLock(dir, "ivf-compact") { tok =>
+      Epochs.gcSweep(dir) // previous fold's deferred deletes
+      val epoch = Epochs.current(dir)
+      val root = Epochs.rootOf(dir, epoch)
       require(graft.index.Fs.exists(s"$root/_DONE"),
         s"no IVF index at $dir — buildIvf first")
-      ivfGcReconcile(dir, root)
+      Epochs.reconcile(dir, ivfLayout)
       val appends = ivfAppendDirsAt(root)
       val dels = ivfDelDirsAt(root)
       // something to fold? appends to absorb, or deletes to purge
@@ -792,115 +770,35 @@ object Similarity {
         val nLists =
           if (lists > 0) lists
           else spark.read.parquet(s"$root/centroids").count().toInt
-        val curEpoch = graft.index.Fs.readString(s"$dir/CURRENT")
-          .map(_.trim.stripPrefix("epoch-").toInt).getOrElse(0)
-        val newEpoch = ivfEpochName(curEpoch + 1)
-        val newRoot = s"$dir/$newEpoch"
-        graft.index.Fs.delete(newRoot) // crashed prior attempt
-        // tombstoned vectors are dropped BEFORE the retrain: they train no
-        // centroid and land in no list — the new epoch equals a fresh
-        // build over the SURVIVING vectors and starts with an empty delete
-        // set (exactly Compactor's purge-at-fold semantics)
-        val union0 = ivfEmbAt(spark, root)
-          .select(col("vec_id"), col("embedding"), col("label"))
-        val union =
-          if (dels.isEmpty) union0
-          else union0.join(
-            spark.read.parquet(dels.map(_ + "/ids"): _*)
-              .select(col("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-        // a delete set covering EVERY vector would train zero centroids and
-        // fold a quietly-empty index — refuse loudly (Compactor's n>0 twin)
-        if (dels.nonEmpty)
-          require(union.limit(1).count() > 0, "fold would produce an EMPTY " +
-            "ANN index (every vector tombstoned) — refusing; drop the index " +
-            "instead")
-        buildIvfFrom(spark, union, newRoot, nLists, iters)
-        // record the consumed append names (carried forward) BEFORE the
-        // flip: a streaming batch tag replayed after its fold is SKIPPED
-        // by ivfAppend (its vectors are provably in this epoch) — without
-        // this ledger the replay would re-append and duplicate them
-        graft.index.Fs.writeString(s"$newRoot/folded_appends",
-          (foldedAppendsAt(root) ++ appends.map(graft.index.Fs.name))
-            .toSeq.sorted.mkString("\n"))
-        // ownership re-verified at the commit instant (Compactor discipline)
-        graft.index.Compactor.verifyOwnedThen(dir, tok, "ivf-compact") {
-          graft.index.Fs.atomicWrite(s"$dir/CURRENT", newEpoch)
+        // the consumed append names are carried forward BEFORE the flip: a
+        // streaming batch tag replayed after its fold is SKIPPED by
+        // ivfAppend (its vectors are provably in this epoch) — without this
+        // list the replay would re-append and duplicate them
+        Epochs.commitEpoch(dir, tok, ivfLayout, epoch,
+          consumed = appends.map(graft.index.Fs.name), dead = Nil) { newRoot =>
+          // tombstoned vectors are dropped BEFORE the retrain: they train no
+          // centroid and land in no list — the new epoch equals a fresh
+          // build over the SURVIVING vectors and starts with an empty
+          // delete set (exactly Compactor's purge-at-fold semantics)
+          val union0 = ivfEmbAt(spark, root)
+            .select(col("vec_id"), col("embedding"), col("label"))
+          val union =
+            if (dels.isEmpty) union0
+            else union0.join(
+              spark.read.parquet(dels.map(_ + "/ids"): _*)
+                .select(col("vec_id")).distinct(),
+              Seq("vec_id"), "left_anti")
+          // a delete set covering EVERY vector would train zero centroids
+          // and fold a quietly-empty index — refuse loudly (Compactor's n>0
+          // twin)
+          if (dels.nonEmpty)
+            require(union.limit(1).count() > 0, "fold would produce an EMPTY " +
+              "ANN index (every vector tombstoned) — refusing; drop the index " +
+              "instead")
+          buildIvfFrom(spark, union, newRoot, nLists, iters)
         }
-        // defer the now-dead artifacts: the whole old epoch dir, or — for
-        // the genesis root — its tables + consumed deltas + claim files
-        // (all direct children of `dir`, so the ledger's dir-relative
-        // entries are just their names)
-        val claims = graft.index.Fs.listFiles(root)
-          .filter(_.endsWith(".claim"))
-        val dead =
-          if (root != dir) Seq(graft.index.Fs.name(root))
-          else Seq("emb", "centroids") ++
-            (appends ++ dels ++ claims).map(graft.index.Fs.name)
-        graft.index.Compactor.gcDefer(dir, dead)
         evictIvfCaches(dir)
       }
-    }
-  }
-
-  /** The IVF crash-window reconciler (mirrors Compactor.gcReconcile; runs
-    * under the maintenance lock, so nothing here can be in flight):
-    *  - artifacts a CURRENT flip made invisible but whose gcDefer never ran
-    *    (crash between the flip and the defer) are re-recorded in the
-    *    ledger — genesis tables + their deltas/claims, and epoch dirs below
-    *    the current one;
-    *  - crashed `_DONE`-less append attempts older than the grace period
-    *    are deleted outright (never visible; later appends mint fresh K);
-    *  - orphaned `.claim` files whose delta dir no longer exists (crashed
-    *    before any write, or delta swept above) age out the same way.
-    */
-  private def ivfGcReconcile(dir: String, root: String): Unit = {
-    val Fs = graft.index.Fs
-    val inGc: Set[String] = Fs.readString(s"$dir/_gc").toSeq
-      .flatMap(_.split('\n').map(_.trim).filter(_.nonEmpty))
-      .map(_.split('|').head).toSet
-    val defers = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (root != dir) {
-      if (Fs.exists(s"$dir/emb") && !inGc("emb")) {
-        defers ++= Seq("emb", "centroids")
-        defers ++= Fs.listDirs(dir).map(Fs.name)
-          .filter(n => (n.startsWith("append-") || n.startsWith("del-")) && !inGc(n))
-        defers ++= Fs.listFiles(dir).map(Fs.name)
-          .filter(n => n.endsWith(".claim") && !inGc(n))
-      }
-      val cur = Fs.name(root).stripPrefix("epoch-").toInt
-      defers ++= Fs.listDirs(dir).map(Fs.name)
-        .filter(n => n.startsWith("epoch-") &&
-          n.stripPrefix("epoch-").forall(_.isDigit) &&
-          n.stripPrefix("epoch-").toInt < cur && !inGc(n))
-    }
-    if (defers.nonEmpty) graft.index.Compactor.gcDefer(dir, defers.distinct.toSeq)
-    val now = System.currentTimeMillis()
-    // a fold that crashed AFTER building its epoch but BEFORE the CURRENT
-    // flip leaves a complete epoch dir ABOVE the current one — never
-    // visible, never re-used (the next fold re-mints and Fs.deletes
-    // cur+1), but without this sweep it leaks a full corpus copy if no
-    // further fold ever runs with work to do; under the lock none can be
-    // in flight, so age-gated outright deletion is safe
-    val curNum = if (root == dir) 0 else Fs.name(root).stripPrefix("epoch-").toInt
-    Fs.listDirs(dir).map(Fs.name)
-      .filter(n => n.startsWith("epoch-") &&
-        n.stripPrefix("epoch-").forall(_.isDigit) &&
-        n.stripPrefix("epoch-").toInt > curNum)
-      .filter(n => now - Fs.mtime(s"$dir/$n") > graft.index.Compactor.gcGraceMs)
-      .foreach(n => Fs.delete(s"$dir/$n"))
-    // crashed _DONE-less append AND delete deltas — never visible; later
-    // commits mint fresh names, so age-gated deletion is safe
-    Fs.listDirs(root)
-      .filter(d => (Fs.name(d).startsWith("append-") ||
-          Fs.name(d).startsWith("del-")) &&
-        !Fs.exists(s"$d/_DONE") &&
-        now - Fs.mtime(d) > graft.index.Compactor.gcGraceMs)
-      .foreach(Fs.delete)
-    Fs.listFiles(root).filter(_.endsWith(".claim")).foreach { c =>
-      if (!Fs.exists(c.stripSuffix(".claim")) &&
-          now - Fs.mtime(c) > graft.index.Compactor.gcGraceMs)
-        Fs.delete(c)
     }
   }
 
@@ -1019,7 +917,7 @@ object Similarity {
     // ONE root resolution for the whole probe (key, centroids, emb): a
     // concurrent fold's CURRENT flip mid-probe must not pair one epoch's
     // centroids with another epoch's list_id layout
-    val root = ivfRoot(dir)
+    val root = graft.index.Epochs.root(dir)
     val key = ivfKeyAt(root)
     val centroids = quantizerAt(spark, dir, root)
     val probeLists: Seq[Int] = centroids.map { case (l, c) =>
@@ -1069,7 +967,7 @@ object Similarity {
     val dir = s"${ivfDir(sfDir, lists)}-appendfx"
     buildIvfFrom(spark, emb(spark, sfDir).filter(col("vec_id") % 4 =!= 0),
       dir, lists)
-    if (ivfAppendDirs(dir).isEmpty)
+    if (ivfAppendDirsAt(graft.index.Epochs.root(dir)).isEmpty)
       ivfAppend(spark, dir, emb(spark, sfDir).filter(col("vec_id") % 4 === 0))
     val q: Array[Float] = emb(spark, sfDir).filter(col("vec_id") === qId)
       .select(col("embedding")).as[Array[Float]].head()
@@ -1088,7 +986,7 @@ object Similarity {
     import spark.implicits._
     val dir = s"${ivfDir(sfDir, lists)}-tombfx"
     buildIvfFrom(spark, emb(spark, sfDir), dir, lists)
-    if (ivfDelDirsAt(ivfRoot(dir)).isEmpty)
+    if (ivfDelDirsAt(graft.index.Epochs.root(dir)).isEmpty)
       ivfTombstone(spark, dir,
         emb(spark, sfDir).filter(col("vec_id") % 5 === 1).select(col("vec_id")))
     val q: Array[Float] = emb(spark, sfDir).filter(col("vec_id") === qId)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{Compactor, IndexBuilder}
+import graft.index.{Catalog, Compactor, Epochs, Fs, IndexBuilder}
 import graft.query.Searcher
 import graft.streaming.StreamingIngest
 
@@ -344,7 +344,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     StreamingIngest.appendSegment(spark, all.slice(20, 30).toDS(), 0L, idx, avgdl, 2, 1L << 40)
     StreamingIngest.appendSegment(spark, all.slice(30, 40).toDS(), 1L, idx, avgdl, 2, 1L << 40)
     // a peer holds the lock: opportunistic merge must SKIP (segments stay)
-    assert(Compactor.tryMaintLock(idx).nonEmpty)
+    assert(Epochs.tryMaintLock(idx).nonEmpty)
     assert(Compactor.mergeSegments(spark, idx).segmentDirs.size == 2)
     // ...and compact must fail loudly after its bounded wait
     sys.props("graft.maint.lock.wait.ms") = "300"
@@ -355,7 +355,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     // a CRASHED holder's lock (stale mtime) is broken and the op proceeds
     val lock = new java.io.File(idx, "_MAINT")
     assert(lock.setLastModified(
-      System.currentTimeMillis() - Compactor.maintLockStaleMs - 2000))
+      System.currentTimeMillis() - Epochs.maintLockStaleMs - 2000))
     val hm = Compactor.mergeSegments(spark, idx)
     assert(hm.segmentDirs.size == 1, "stale lock must be broken, merge must run")
     assert(!lock.exists, "lock must be released when the op completes")
@@ -368,31 +368,32 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     val h = IndexBuilder.build(spark, all.take(30).toDS(), idx, IndexBuilder.Config(salts = 2))
     val avgdl = h.stats(spark).avgdl
     StreamingIngest.appendSegment(spark, all.drop(30).toDS(), 0L, idx, avgdl, 2, 1L << 40)
-    def steal(label: String)(op: => Unit): Unit = {
-      Compactor.beforeCommitHook = l =>
-        if (l == label) graft.index.Fs.writeString(s"$idx/_MAINT", "thief")
+    // the thief takes the lock at the op's last filesystem step before its
+    // commit point's ownership re-verification
+    def steal(lastStep: (String, String) => Boolean)(op: => Unit): Unit = {
+      Fs.beforeMutation = (o, p) => if (lastStep(o, p)) Fs.writeString(s"$idx/_MAINT", "thief")
       try {
         val ex = intercept[IllegalStateException](op)
         assert(ex.getMessage.contains("lost"))
       } finally {
-        Compactor.beforeCommitHook = _ => ()
-        graft.index.Fs.delete(s"$idx/_MAINT") // evict the thief for the next phase
+        Fs.beforeMutation = (_, _) => ()
+        Fs.delete(s"$idx/_MAINT") // evict the thief for the next phase
       }
     }
     // compact: the CURRENT flip must not have happened — the epoch pointer
     // (the commit artifact) must not exist and queries still see genesis+segment
-    steal("compact") { Compactor.compact(spark, idx) }
+    steal((_, p) => p.endsWith("/folded_segments")) { Compactor.compact(spark, idx) }
     assert(!graft.index.Fs.exists(s"$idx/CURRENT"),
       "stolen-lock compact must abort BEFORE the CURRENT flip")
     assert(IndexBuilder.openHandle(idx).segmentDirs.size == 1)
     // tombstone: no committed (_DONE'd) delete delta may exist
-    steal("tombstone") {
+    steal((o, p) => o == "delete" && p.contains("/tombstones/del-")) {
       Compactor.tombstone(spark, idx, Seq(0L).toDF("docId"))
     }
     assert(IndexBuilder.openHandle(idx).snapshot.tombstoneDirs.isEmpty,
       "stolen-lock tombstone must abort BEFORE its _DONE marker")
     // merge: no committed merged=* segment may be visible
-    steal("merge") { Compactor.mergeSegments(spark, idx, minSegments = 1) }
+    steal((_, p) => p.endsWith("/replaces")) { Compactor.mergeSegments(spark, idx, minSegments = 1) }
     assert(!IndexBuilder.openHandle(idx).segmentDirs.exists(
       d => graft.index.Fs.name(d).startsWith("merged=")),
       "stolen-lock merge must abort BEFORE its _DONE marker")
@@ -434,6 +435,70 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       IndexBuilder.Config(salts = 2))
     for (q <- queries0)
       assert(byCommit(IndexBuilder.openHandle(idx), q) == byCommit(hAll, q))
+  }
+
+  /** A small genesis index with two live streamed segments. */
+  private def twoSegmentIndex(prefix: String, seed: Long): String = {
+    import spark.implicits._
+    val idx = tmpDir(prefix)
+    val all = (0 until 30).map(i => Corpus.synthDoc(i, seed))
+    val h = IndexBuilder.build(spark, all.take(20).toDS(), idx, IndexBuilder.Config(salts = 2))
+    val avgdl = h.stats(spark).avgdl
+    StreamingIngest.appendSegment(spark, all.slice(20, 25).toDS(), 0L, idx, avgdl, 2, 1L << 40)
+    StreamingIngest.appendSegment(spark, all.slice(25, 30).toDS(), 1L, idx, avgdl, 2, 1L << 40)
+    idx
+  }
+
+  test("an epoch stranded by a compact that crashed before its CURRENT flip is removed by the next no-op maintenance op") {
+    val idx = twoSegmentIndex("graft-strand-idx", 67L)
+    var crashed = false
+    Fs.beforeMutation = (_, p) => {
+      // the process dies at its first step towards the pointer flip
+      if (p.contains("/CURRENT")) crashed = true
+      if (crashed) throw new IllegalStateException("crash")
+    }
+    try intercept[IllegalStateException](Compactor.compact(spark, idx))
+    finally Fs.beforeMutation = (_, _) => ()
+    assert(Fs.exists(s"$idx/epoch-000001") && !Fs.exists(s"$idx/CURRENT"))
+    assert(new java.io.File(idx, "_MAINT").setLastModified(1000L)) // the dead holder's lock is stale
+    sys.props("graft.gc.grace.ms") = "0"
+    try Compactor.mergeSegments(spark, idx, minSegments = 99) // nothing to merge
+    finally sys.props.remove("graft.gc.grace.ms")
+    assert(!Fs.exists(s"$idx/epoch-000001"), "the never-visible epoch must be deleted")
+    assert(IndexBuilder.openHandle(idx).segmentDirs.size == 2)
+  }
+
+  test("a holder resumed after a stale-lock break never deletes a peer's committed tombstone delta") {
+    import spark.implicits._
+    val idx = twoSegmentIndex("graft-peer-idx", 71L)
+    val peerDelta = s"$idx/tombstones/del-000001"
+    var peerCommitted = false
+    val beaten = new java.util.concurrent.atomic.AtomicBoolean(false)
+    Fs.beforeMutation = (_, p) =>
+      if (Thread.currentThread.getName == "graft-maint-heartbeat") beaten.set(true)
+      else if (!peerCommitted && p.contains(peerDelta)) {
+        // the holder is about to reserve (or clear) del-000001; meanwhile
+        // its lock was broken as stale and a peer committed that very name.
+        // The holder's first heartbeat re-stamp must land before the steal:
+        // one racing it would clobber the peer's lock (the file lock is
+        // best-effort, its re-stamp a read-then-write)
+        val until = System.currentTimeMillis() + 5000
+        while (!beaten.get && System.currentTimeMillis() < until) Thread.sleep(10)
+        Thread.sleep(200)
+        peerCommitted = true
+        Fs.writeString(s"$idx/_MAINT", "peer")
+        Fs.tryCreateNew(s"$peerDelta.claim")
+        Seq(3L).toDF("docId").write.parquet(s"$peerDelta/ids")
+        Fs.touch(s"$peerDelta/_DONE")
+      }
+    try {
+      val ex = intercept[IllegalStateException](
+        Compactor.tombstone(spark, idx, Seq(7L).toDF("docId")))
+      assert(ex.getMessage.contains("lost"), "the holder must abort")
+    } finally Fs.beforeMutation = (_, _) => ()
+    assert(peerCommitted && Fs.exists(s"$peerDelta/_DONE"), "the peer's delta must survive")
+    Catalog.invalidate(idx)
+    assert(IndexBuilder.openHandle(idx).snapshot.tombstoneIds(spark).toSeq == Seq(3L))
   }
 
   test("phrase query on an index without the positional tier fails loudly") {
