@@ -38,8 +38,7 @@ object Tuning {
       // respect an explicit non-default user/session setting; note that
       // RuntimeConfig.get returns the registered default ("1") when unset,
       // so "still at the default" is the only observable "unset" signal
-      val cur = try spark.conf.get(k) catch { case _: Throwable => "1" }
-      if (cur == "1") spark.conf.set(k, "512")
+      if (spark.conf.get(k) == "1") spark.conf.set(k, "512")
       java.lang.Boolean.TRUE
     })
 

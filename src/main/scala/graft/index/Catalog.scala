@@ -24,7 +24,7 @@ object Catalog {
     * (it would be invisible forever). `tombstones` = committed tombstone
     * delta dirs under the active root (docIds deleted from query results
     * until a compaction drops them physically — Compactor.tombstone).
-    * `fingerprint` keys every downstream cache (postings/stats/df/deletes)
+    * `fingerprint` keys every downstream cache (relations/postings/stats/df/deletes)
     * — any segment arrival, compaction, tombstone commit, or same-dir
     * rebuild changes it.
     */
@@ -70,12 +70,14 @@ object Catalog {
     // committed tombstone deltas (marker-gated like segments); epoch-scoped
     // — docIds are re-ranked at each fold, so a new epoch starts clean
     val tombs = Epochs.committedDeltas(s"$root/tombstones")
-    // stamp the fingerprint with the postings-stage marker mtime: a
+    // stamp the fingerprint with the table-stage marker mtimes: a
     // delete+rebuild of the SAME dir (create-index --force + export in one
-    // session) would otherwise fingerprint identically and serve the old
-    // corpus's cached blocks/df/stats — the same stale-cache class the IVF
-    // mtime key fixes (Similarity.ivfKey)
-    val stamp = Fs.mtime(s"$root/_STAGE_postings")
+    // session), or a resume that recomputes one stage, would otherwise
+    // fingerprint identically and serve the old files' cached relations,
+    // blocks, df or stats — the same stale-cache class the IVF mtime key
+    // fixes (Similarity.ivfKey)
+    val stamp = Seq("docmeta", "postings", "termstats", "stats")
+      .map(t => Fs.mtime(s"$root/_STAGE_$t")).mkString(".")
     State(epoch, segs, folded ++ replaced, tombs,
       s"${epoch.getOrElse("genesis")}:$stamp:${segs.size}:${segs.hashCode.toHexString}" +
         s":${tombs.size}:${tombs.hashCode.toHexString}")

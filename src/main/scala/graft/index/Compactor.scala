@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.index.IndexBuilder.{Config, Handle}
+import graft.index.IndexBuilder.{Config, Handle, Tables, readTable}
 
 /** Streamed-segment compaction: folds every completed `ingest_segments`
   * entry back into the batch index, producing a new EPOCH whose tables are
@@ -107,10 +107,11 @@ object Compactor {
       // few files per table (the whole point: fewer paths per query); the
       // five tables are independent, so the copies run concurrently (this op
       // rides the 1 s ingest cadence — wall time matters)
-      val copies: Seq[() => Unit] = Seq("docmeta", "blocks", "positions").map(t =>
-        () => spark.read.parquet(segs.map(_ + s"/$t"): _*)
-          .coalesce(4).write.mode("overwrite").parquet(s"$out/$t")) ++ Seq(
-        () => spark.read.parquet(segs.map(_ + "/termstats"): _*)
+      val copies: Seq[() => Unit] = Seq("docmeta" -> Tables.Docmeta,
+          "blocks" -> Tables.Postings, "positions" -> Tables.Positions).map { case (t, schema) =>
+        () => readTable(spark, schema, segs.map(_ + s"/$t"))
+          .coalesce(4).write.mode("overwrite").parquet(s"$out/$t") } ++ Seq(
+        () => readTable(spark, Tables.Termstats, segs.map(_ + "/termstats"))
           .groupBy($"term")
           .agg(sum($"df").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
           .coalesce(1).sortWithinPartitions($"term")
@@ -244,13 +245,13 @@ object Compactor {
     // row, so the postings/positions folds below drop their rows for free
     // (inner join on oldDocId) — the new epoch equals a fresh build over
     // the SURVIVING corpus and starts with an empty delete set.
-    val union0 = spark.read
-      .parquet((s"$oldRoot/docmeta" +: segs.map(_ + "/docmeta")): _*)
+    val union0 = readTable(spark, Tables.Docmeta,
+        s"$oldRoot/docmeta" +: segs.map(_ + "/docmeta"))
       .withColumnRenamed("docId", "oldDocId")
     val union =
       if (state.tombstones.isEmpty) union0
       else union0.join(
-        spark.read.parquet(state.tombstones.map(_ + "/ids"): _*)
+        readTable(spark, Tables.TombstoneIds, state.tombstones.map(_ + "/ids"))
           .select(col("docId").as("oldDocId")).distinct(),
         Seq("oldDocId"), "left_anti")
     val assigned = IndexBuilder.timedStage("fold-ids")(
@@ -306,8 +307,8 @@ object Compactor {
         // mapPartitions closure below would capture the LazyRef and
         // evaluate the sample JOB inside an executor task (SPARK-28702)
         val estV = est
-        val decoded = spark.read
-          .parquet((s"$oldRoot/postings" +: segs.map(_ + "/blocks")): _*)
+        val decoded = readTable(spark, Tables.Postings,
+            s"$oldRoot/postings" +: segs.map(_ + "/blocks"))
           .as[PostingBlock]
           .flatMap { b =>
             val ds = Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)
@@ -340,8 +341,8 @@ object Compactor {
       // stage anyway, so phrase-search capability is unchanged either way).
       val foldPositions = () => IndexBuilder.timedStage("fold-positions")(
         if (Fs.exists(s"$oldRoot/positions")) {
-          spark.read
-            .parquet((s"$oldRoot/positions" +: segs.map(_ + "/positions")): _*)
+          readTable(spark, Tables.Positions,
+              s"$oldRoot/positions" +: segs.map(_ + "/positions"))
             .withColumnRenamed("docId", "oldDocId")
             .join(remap, "oldDocId")
             .select($"term", $"docId", $"n", $"posDeltas")
@@ -380,7 +381,7 @@ object Compactor {
         // cached vocab instead of re-running the postings scan + groupBy
         // (same reasoning and identical-output argument as the build's
         // termstats stage)
-        val vocab = spark.read.parquet(s"$newRoot/postings")
+        val vocab = readTable(spark, Tables.Postings, Seq(s"$newRoot/postings"))
           .groupBy($"term")
           .agg(sum($"n").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

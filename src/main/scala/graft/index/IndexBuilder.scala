@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.analyze.Analyzer
 import graft.query.Bm25
 
@@ -83,10 +84,55 @@ object IndexBuilder {
       snapshot.dfFor(spark, terms)
   }
 
+  /** Declared schemas of the index tables, taken from the model's
+    * encoders. Every index read passes one (`readTable`): a parquet read
+    * without a schema launches a one-task schema-inference job (it opens a
+    * footer) before any real work. Columns resolve by NAME, so the files
+    * of every format version read identically; a column a file lacks
+    * reads as null (see readStatsCompat — `Stats.buildAvgdl` is nullable
+    * for pre-v3 files).
+    */
+  object Tables {
+    val Docmeta: StructType = Encoders.product[DocMeta].schema
+    val Postings: StructType = Encoders.product[PostingBlock].schema
+    val Termstats: StructType = Encoders.product[TermStat].schema
+    val Positions: StructType = Encoders.product[PositionsRow].schema
+    val Lineage: StructType = Encoders.product[LineageRow].schema
+    val Stats: StructType =
+      StructType(Encoders.product[IndexStats].schema.map(_.copy(nullable = true)))
+    val TombstoneIds: StructType = new StructType().add("docId", LongType)
+
+    /** The table a build stage writes (`dir/<stage>`). */
+    def ofStage(stage: String): StructType = stage match {
+      case "docmeta" => Docmeta
+      case "postings" => Postings
+      case "termstats" => Termstats
+      case "stats" => Stats
+    }
+  }
+
+  /** One multi-path parquet read of an index table with its declared schema. */
+  def readTable(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
+
+  // per-(session, dir, fingerprint, table) union relation of a Snapshot —
+  // resolving one (path globbing + file listing) is driver work that a
+  // query on an unchanged index state need not repeat; a new state evicts
+  // the dir's older entries (graft.SessionCache.evictStale, the discipline
+  // of Searcher's caches)
+  private[graft] val relations = new graft.SessionCache[DataFrame]
+
   /** An immutable view of one Catalog.State: every accessor derives from the
     * SAME (epoch, segments, fingerprint) triple, so a query assembled from
     * several of these reads one consistent index state no matter what
     * commits concurrently (segment arrival, minor merge, epoch fold).
+    *
+    * The batch ∪ segments relations (postingsAll, docmetaAll,
+    * termstatsAll) are resolved ONCE per (session, dir, fingerprint) and
+    * reused by every query on that state: their file lists cannot change
+    * without the fingerprint changing (every commit and every stage
+    * rewrite stamps it — Catalog.scala), so a cold query pays only its
+    * pruned scan.
     */
   final case class Snapshot(dir: String, mode: Analyzer.Mode, state: Catalog.State) {
 
@@ -108,29 +154,42 @@ object IndexBuilder {
       */
     def fingerprint: String = state.fingerprint
 
+    /** The union relation `table` over the root and every live segment
+      * (`segTable` under each segment dir), memoized for this index state.
+      */
+    private def union(spark: SparkSession, table: String, segTable: String,
+                      schema: StructType): DataFrame = {
+      val m = relations(spark)
+      val prefix = s"$dir|$fingerprint|"
+      m.getOrElseUpdate(prefix + table, {
+        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
+        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable"))
+      })
+    }
+
     def docmeta(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
-      spark.read.parquet(s"$root/docmeta").as[DocMeta]
+      readTable(spark, Tables.Docmeta, Seq(s"$root/docmeta")).as[DocMeta]
     }
     def postings(spark: SparkSession): Dataset[PostingBlock] = {
       import spark.implicits._
-      spark.read.parquet(s"$root/postings").as[PostingBlock]
+      readTable(spark, Tables.Postings, Seq(s"$root/postings")).as[PostingBlock]
     }
     def termstats(spark: SparkSession): Dataset[TermStat] = {
       import spark.implicits._
-      spark.read.parquet(s"$root/termstats").as[TermStat]
+      readTable(spark, Tables.Termstats, Seq(s"$root/termstats")).as[TermStat]
     }
     def stats(spark: SparkSession): IndexStats =
       readStatsCompat(spark, Seq(s"$root/stats")).head
     def lineage(spark: SparkSession): Dataset[LineageRow] = {
       import spark.implicits._
-      spark.read.parquet(s"$root/lineage/*").as[LineageRow]
+      readTable(spark, Tables.Lineage, Seq(s"$root/lineage/*")).as[LineageRow]
     }
 
     /** Positional postings (present only after buildPositions). */
     def positions(spark: SparkSession): Dataset[PositionsRow] = {
       import spark.implicits._
-      spark.read.parquet(s"$root/positions").as[PositionsRow]
+      readTable(spark, Tables.Positions, Seq(s"$root/positions")).as[PositionsRow]
     }
 
     /** Positional postings over batch ∪ streamed segments (segments always
@@ -146,7 +205,7 @@ object IndexBuilder {
       val segs = segmentDirs.map(_ + "/positions")
       segs.foreach(p => require(Fs.exists(p),
         s"streamed segment lacks positions: $p"))
-      spark.read.parquet((s"$root/positions" +: segs): _*).as[PositionsRow]
+      readTable(spark, Tables.Positions, s"$root/positions" +: segs).as[PositionsRow]
     }
 
     /** Batch postings ∪ all completed streamed segments' postings — ONE
@@ -155,15 +214,13 @@ object IndexBuilder {
       */
     def postingsAll(spark: SparkSession): Dataset[PostingBlock] = {
       import spark.implicits._
-      val paths = s"$root/postings" +: segmentDirs.map(_ + "/blocks")
-      spark.read.parquet(paths: _*).as[PostingBlock]
+      union(spark, "postings", "blocks", Tables.Postings).as[PostingBlock]
     }
 
     /** Batch docmeta ∪ streamed segments' docmeta. */
     def docmetaAll(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
-      val paths = s"$root/docmeta" +: segmentDirs.map(_ + "/docmeta")
-      spark.read.parquet(paths: _*).as[DocMeta]
+      union(spark, "docmeta", "docmeta", Tables.Docmeta).as[DocMeta]
     }
 
     /** Live corpus stats over batch + streamed segments, plus the WAND
@@ -174,18 +231,19 @@ object IndexBuilder {
       * ratio ≤ max(1, a'/a) (the dl term scales by a/a'), so multiplying
       * every stored bound by max(1, liveAvgdl / min(buildAvgdl)) keeps
       * block-max WAND admissible (rank-exact, marginally less pruning);
-      * exact scoring always uses the live avgdl.
+      * exact scoring always uses the live avgdl. Every source's stats row
+      * comes from ONE read (one job, whatever the segment count).
       */
     def liveStats(spark: SparkSession): (IndexStats, Double) = {
-      val base = stats(spark)
-      val segs = segmentDirs
-      if (segs.isEmpty) (base, math.max(1.0, base.avgdl / base.buildAvgdl))
-      else {
-        val segStats = readStatsCompat(spark, segs.map(_ + "/stats"))
-        val n = base.n + segStats.map(_.n).sum
-        val tok = base.totalTokens + segStats.map(_.totalTokens).sum
+      val all = readStatsCompat(spark, s"$root/stats" +: segmentDirs.map(_ + "/stats"))
+      if (segmentDirs.isEmpty) {
+        val base = all.head
+        (base, math.max(1.0, base.avgdl / base.buildAvgdl))
+      } else {
+        val n = all.map(_.n).sum
+        val tok = all.map(_.totalTokens).sum
         val avgdl = tok.toDouble / n.toDouble
-        val minBuild = (base.buildAvgdl +: segStats.map(_.buildAvgdl)).min
+        val minBuild = all.map(_.buildAvgdl).min
         (IndexStats(n, avgdl, tok, minBuild), math.max(1.0, avgdl / minBuild))
       }
     }
@@ -198,8 +256,7 @@ object IndexBuilder {
       */
     def termstatsAll(spark: SparkSession): Dataset[TermStat] = {
       import spark.implicits._
-      val paths = s"$root/termstats" +: segmentDirs.map(_ + "/termstats")
-      spark.read.parquet(paths: _*).as[TermStat]
+      union(spark, "termstats", "termstats", Tables.Termstats).as[TermStat]
     }
 
     /** Per-term df over batch + segments (query terms only; tiny). */
@@ -230,8 +287,8 @@ object IndexBuilder {
       else {
         import spark.implicits._
         val cap = sys.props.getOrElse("graft.tombstones.maxResident", "10000000").toInt
-        val ids = spark.read.parquet(dirs.map(_ + "/ids"): _*)
-          .select(org.apache.spark.sql.functions.col("docId")).distinct()
+        val ids = readTable(spark, Tables.TombstoneIds, dirs.map(_ + "/ids"))
+          .distinct()
           .limit(cap + 1).as[Long].collect()
         require(ids.length <= cap,
           s"tombstone set exceeds $cap resident docIds — run Compactor.compact " +
@@ -242,26 +299,23 @@ object IndexBuilder {
     }
   }
 
-  /** Stats reader tolerant of pre-v3 files (no `buildAvgdl` column): those
-    * builds computed block maxima at the exact avgdl, so buildAvgdl = avgdl
-    * reconstructs the identical semantics instead of failing the read.
-    * Paths are read ONE BY ONE: a multi-path read of mixed v2/v3 files
-    * would resolve a single schema — either crashing on the null decode or
-    * silently overwriting a v3 file's real (smaller) buildAvgdl, which
-    * would under-scale the WAND bound. Stats files are single tiny rows
-    * and liveStats memoizes per fingerprint, so per-path reads cost
-    * nothing that matters.
+  /** Stats rows of every path in ONE multi-path read (one job, whatever
+    * the number of sources), tolerant of pre-v3 files that have no
+    * `buildAvgdl` column: those builds computed block maxima at the exact
+    * avgdl, so buildAvgdl = avgdl reconstructs the identical semantics.
+    * The declared schema makes the column nullable and the parquet reader
+    * resolves it per FILE — null where a file lacks it, the file's own
+    * value where it has it — so `coalesce(buildAvgdl, avgdl)` is exact for
+    * every row of a mixed v2/v3 read: a v3 source's real (smaller)
+    * buildAvgdl is never overwritten, which would under-scale the WAND
+    * bound.
     */
   private[index] def readStatsCompat(spark: SparkSession, paths: Seq[String]): Array[IndexStats] = {
     import spark.implicits._
-    paths.toArray.flatMap { p =>
-      val df = spark.read.parquet(p)
-      val withB =
-        if (df.columns.contains("buildAvgdl")) df
-        else df.withColumn("buildAvgdl", col("avgdl"))
-      withB.select(col("n"), col("avgdl"), col("totalTokens"), col("buildAvgdl"))
-        .as[IndexStats].collect()
-    }
+    readTable(spark, Tables.Stats, paths)
+      .select(col("n"), col("avgdl"), col("totalTokens"),
+        coalesce(col("buildAvgdl"), col("avgdl")).as("buildAvgdl"))
+      .as[IndexStats].collect()
   }
 
   /** Open an existing index, reading back the analyzer mode persisted by
@@ -442,7 +496,8 @@ object IndexBuilder {
     // the id-assigned corpus — one cheap job either way, identical value.
     lazy val buildAvgdl: Double = timedStage("estAvgdl") {
       val src =
-        if (docmetaDone) spark.read.parquet(s"$dir/docmeta").select($"docId", $"dl")
+        if (docmetaDone)
+          readTable(spark, Tables.Docmeta, Seq(s"$dir/docmeta")).select($"docId", $"dl")
         else withIds().select($"docId", tokenStats.getField("dl").as("dl"))
       estimateBuildAvgdl(src)
     }
@@ -536,7 +591,8 @@ object IndexBuilder {
         // rows are already on the driver — no read-back job at all
         val lin =
           if (freshDocmetaLineage != null) freshDocmetaLineage
-          else spark.read.parquet(s"$dir/lineage/docmeta").as[LineageRow].collect().toSeq
+          else readTable(spark, Tables.Lineage, Seq(s"$dir/lineage/docmeta"))
+            .as[LineageRow].collect().toSeq
         val n = lin.map(_.rows).sum
         val tot = lin.map(_.termCount).sum
         // avgdl defined as sum/count in double — transliterated identically in
@@ -550,7 +606,7 @@ object IndexBuilder {
       if (stageComplete(spark, dir, "termstats")) None else Some(() => timedStage("termstats") {
         // reads back only 3 pruned columns of the just-written postings
         val acc = newLineageAcc(spark, "termstats")
-        val po = spark.read.parquet(s"$dir/postings")
+        val po = readTable(spark, Tables.Postings, Seq(s"$dir/postings"))
         // vocab-sized aggregate PERSISTED before the range sort: the range
         // exchange's boundary sampler executes its child subtree, so an
         // uncached plan pays the postings scan + groupBy TWICE (once to
@@ -580,6 +636,9 @@ object IndexBuilder {
     if (tailJobs.size == 2) runConcurrently(tailJobs) else tailJobs.foreach(_())
 
     if (sharedIds != null) sharedIds.release()
+    // a rebuild in place rewrites tables the catalog may still describe
+    // with a TTL-cached state (and fingerprint)
+    Catalog.invalidate(dir)
     Handle(dir, mode)
   }
 
@@ -779,19 +838,19 @@ object IndexBuilder {
 
   /** A stage is complete iff its marker exists AND its lineage rows exist
     * AND the written table's row count matches the lineage row count — the
-    * stats-command reconciliation analog (commands/stats.go:44-64).
+    * stats-command reconciliation analog (commands/stats.go:44-64). Only a
+    * MISSING table or lineage dir, an empty lineage or a row-count mismatch
+    * (a partial table) makes a stage incomplete; any other read failure (a
+    * corrupt file, an unreachable store) propagates instead of silently
+    * scheduling a recompute over a broken index.
     */
   def stageComplete(spark: SparkSession, dir: String, stage: String): Boolean = {
-    if (!Fs.exists(s"$dir/_STAGE_$stage")) return false
-    try {
-      import spark.implicits._
-      val lin = spark.read.parquet(s"$dir/lineage/$stage").as[LineageRow]
-      val expected = lin.map(_.rows).reduce(_ + _)
-      val table = stage match {
-        case "stats" => spark.read.parquet(s"$dir/stats")
-        case s => spark.read.parquet(s"$dir/$s")
-      }
-      table.count() == expected
-    } catch { case _: Throwable => false }
+    val lineage = s"$dir/lineage/$stage"
+    val table = s"$dir/$stage"
+    if (!Seq(s"$dir/_STAGE_$stage", lineage, table).forall(Fs.exists)) return false
+    val expected = readTable(spark, Tables.Lineage, Seq(lineage))
+      .agg(sum(col("rows"))).head()
+    !expected.isNullAt(0) &&
+      readTable(spark, Tables.ofStage(stage), Seq(table)).count() == expected.getLong(0)
   }
 }

@@ -457,9 +457,14 @@ object Similarity {
       // Array[Float]) tuple for every corpus row just to hash the id (A/B:
       // 0.214 → 0.178 s med on the 1.5M fixture, init rows asserted
       // identical, keys included).
+      // A null vec_id fails the job: the UDF would map it to a null key,
+      // which sorts FIRST and silently seeds a centroid from an unidentified
+      // row (the later passes would drop or reject it inconsistently).
       val initKey = udf((id: Long) => graft.index.IndexBuilder.mix3(id, 0x1f17, 7L))
       var centroids: Array[Array[Double]] = graft.index.IndexBuilder.timedStage("ivf-init")(e
-        .select(initKey(col("vec_id")).as("k"), col("embedding"))
+        .select(coalesce(initKey(col("vec_id")),
+            raise_error(lit("IVF build input has a null vec_id"))).as("k"),
+          col("embedding"))
         .orderBy(col("k")).limit(lists)
         .as[(Long, Array[Float])]
         .collect().map(_._2.map(_.toDouble)))

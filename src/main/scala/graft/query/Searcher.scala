@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.analyze.Analyzer
 import graft.index.{Hit, IndexBuilder, PostingBlock}
 import graft.index.IndexBuilder.Snapshot
+import graft.SessionCache.evictStale
 
 /** Distributed BM25 top-k over the segmented index (SURVEY.md §3.3 Spark
   * restatement): broadcast term stats → per-salt-range DAAT/WAND inside
@@ -59,11 +60,6 @@ object Searcher {
     */
   val MaxCachedPostings: Long = 4000000L
 
-  private def evictStale[T](m: scala.collection.concurrent.TrieMap[String, T],
-                            dir: String, keepPrefix: String)(clean: T => Unit): Unit =
-    m.keys.filter(k => k.startsWith(s"$dir|") && !k.startsWith(keepPrefix))
-      .foreach { stale => m.remove(stale).foreach(clean) }
-
   private def liveStats(spark: SparkSession, v: Snapshot): (graft.index.IndexStats, Double) = {
     val m = statsCache(spark)
     val key = s"${v.dir}|${v.fingerprint}"
@@ -104,7 +100,10 @@ object Searcher {
     * too large for the coordinator, caller takes the distributed path.
     * Fusing the df lookup away is the point: df per term ≡ Σ block n (an
     * index invariant EngineSpec asserts), so a cold coordinator query costs
-    * ONE scan job, not a termstats job + a postings job. Residency is
+    * ONE scan job, not a termstats job + a postings job — and no planning
+    * job either: `postingsAll` is resolved once per index state with a
+    * declared schema (Snapshot), so the probe's collect is the only job
+    * (EngineSpec counts it). Residency is
     * bounded by query df — a hot repeated term costs its own postings once,
     * and the whole cache never exceeds MaxCachedPostings.
     */
@@ -290,8 +289,12 @@ object Searcher {
     *
     * Execution is adaptive: an optimistic coordinator probe collects the
     * query terms' blocks in ONE limited pruned-scan job (df derives from
-    * the blocks themselves — no separate termstats job; zero jobs when the
-    * terms are warm in the per-term cache); if the probe hits its block
+    * the blocks themselves — no separate termstats job; the scanned
+    * relation is memoized per index state with a declared schema, so no
+    * schema-inference job precedes it; zero jobs when the terms are warm
+    * in the per-term cache). The first query on a new index state also
+    * reads every source's stats in one job (liveStats, memoized per
+    * state). If the probe hits its block
     * bound, the query re-plans as distributed per-salt WAND over the
     * pushed-down pruned scan + a global TakeOrderedAndProject merge.
     * Results are identical — salts are disjoint sub-indexes either way

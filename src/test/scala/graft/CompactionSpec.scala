@@ -254,6 +254,64 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     assert(after == Searcher.topK(spark, fresh, "the import", Int.MaxValue).collect().toSeq)
   }
 
+  test("memoized union relations follow every index-state change (rebuild, append, merge, compact, tombstone)") {
+    import spark.implicits._
+    val idx = tmpDir("graft-rel-idx")
+    val cfg = IndexBuilder.Config(salts = 2)
+    val all = (0 until 60).map(i => Corpus.synthDoc(i, 71L))
+    // every doc carries the probe term; paths identify docs
+    def docs(from: Int, until: Int) =
+      all.slice(from, until).map(d => d.copy(content = d.content + " zqprobe")).toDS()
+    def paths(from: Int, until: Int) = all.slice(from, until).map(_.path).toSet
+    val h = IndexBuilder.Handle(idx, graft.analyze.Analyzer.Simple)
+    // the query must see exactly `want`, and each memoized union must list
+    // exactly the live files of the snapshot's root and segments
+    def check(step: String, want: Set[String]): Unit = {
+      val v = h.snapshot
+      val got = Searcher.topKSnap(spark, v, "zqprobe", Int.MaxValue).toDF()
+        .join(v.docmetaAll(spark).toDF(), "docId").select("path").as[String]
+        .collect().toSet
+      assert(got == want, s"[$step] query served a stale index state")
+      def pathOf(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      for ((files, rootT, segT) <- Seq(
+             (v.postingsAll(spark).inputFiles, "postings", "blocks"),
+             (v.docmetaAll(spark).inputFiles, "docmeta", "docmeta"),
+             (v.termstatsAll(spark).inputFiles, "termstats", "termstats"))) {
+        val dirs = s"${pathOf(v.root)}/$rootT/" +: v.segmentDirs.map(d => s"${pathOf(d)}/$segT/")
+        assert(files.forall(f => dirs.exists(pathOf(f).startsWith) && Fs.exists(f)),
+          s"[$step] $rootT relation lists files outside the live state: ${files.toSeq}")
+        assert(dirs.forall(d => files.exists(f => pathOf(f).startsWith(d))),
+          s"[$step] $rootT relation misses a live source")
+      }
+    }
+    IndexBuilder.build(spark, docs(0, 20), idx, cfg)
+    check("build", paths(0, 20))
+    // same-dir rebuild over other docs: a new _STAGE_postings stamp
+    Fs.delete(idx)
+    Thread.sleep(5) // marker mtime resolution
+    val avgdl = IndexBuilder.build(spark, docs(20, 40), idx, cfg).stats(spark).avgdl
+    check("rebuild", paths(20, 40))
+    StreamingIngest.appendSegment(spark, docs(40, 50), 0L, idx, avgdl, 2, 1L << 40)
+    check("appendSegment", paths(20, 50))
+    StreamingIngest.appendSegment(spark, docs(50, 60), 1L, idx, avgdl, 2, 1L << 40)
+    check("appendSegment", paths(20, 60))
+    assert(Compactor.mergeSegments(spark, idx).segmentDirs.size == 1)
+    check("mergeSegments", paths(20, 60))
+    assert(Compactor.compact(spark, idx, cfg).root != idx)
+    check("compact", paths(20, 60))
+    val dead = h.docmetaAll(spark).filter(col("path").isin(paths(20, 25).toSeq: _*))
+      .select("docId")
+    Compactor.tombstone(spark, idx, dead)
+    check("tombstone", paths(25, 60))
+    // seven index states later: one live entry per (dir, table), all of
+    // the current state — older states were evicted, not leaked
+    val keys = IndexBuilder.relations(spark).keys.filter(_.startsWith(s"$idx|")).toSeq
+    val perTable = keys.groupBy(_.split('|').last)
+    assert(perTable.keySet == Set("postings", "docmeta", "termstats") &&
+      perTable.values.forall(_.size == 1), s"stale relations kept: $keys")
+    assert(keys.forall(_.startsWith(s"$idx|${h.snapshot.fingerprint}|")))
+  }
+
   test("tombstones: live deletes vanish from every query path, scores unchanged (Lucene semantics)") {
     import spark.implicits._
     val all = (0 until 60).map(i => Corpus.synthDoc(i, 61L))

@@ -276,12 +276,23 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
       "a query materialized a persistent RDD — full-index residency is conf-gated opt-in only")
     // warm identical query: blocks + df are memoized driver-side, so no scan
     // jobs run (the only possible job is the LocalRelation materialization)
-    spark.sparkContext.setJobGroup("graft-warm-q", "warm query", interruptOnCancel = false)
-    Searcher.topK(spark, h2, "sparkSession read", 10).collect()
-    spark.sparkContext.clearJobGroup()
-    Thread.sleep(300) // status tracker is fed asynchronously
-    val warmJobs = spark.sparkContext.statusTracker.getJobIdsForGroup("graft-warm-q").length
+    val warmJobs =
+      jobsOf("graft-warm-q")(Searcher.topK(spark, h2, "sparkSession read", 10).collect())
     assert(warmJobs <= 1, s"warm query ran $warmJobs jobs — term cache not effective")
+  }
+
+  test("a cold coordinator-path query runs exactly one Spark job: the probe") {
+    // fresh index state: its first query resolves the stats (one job) and
+    // the postings relation (no job — declared schema); every later query
+    // on terms nobody fetched yet pays its pruned probe scan and nothing
+    // else (no schema-inference job, no re-listing)
+    val h3 = IndexBuilder.build(spark, corpus, tmpDir("graft-jobs-idx"),
+      IndexBuilder.Config(salts = 4, mode = Analyzer.Code))
+    Searcher.topK(spark, h3, "sparkSession", 10).collect()
+    for ((q, i) <- Seq("read parquet", "shuffle write buffer", "catalystRule").zipWithIndex) {
+      val jobs = jobsOf(s"graft-cold-q$i")(Searcher.topK(spark, h3, q, 10).collect())
+      assert(jobs == 1, s"cold coordinator query '$q' ran $jobs jobs, want 1 (the probe)")
+    }
   }
 
   test("searchAgg's exhaustive composed plan carries NO global sort (no range exchange)") {

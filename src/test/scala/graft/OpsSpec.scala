@@ -462,6 +462,16 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         .select(col("vec_id")).as[Long].collect().toSet))
   }
 
+  test("IVF build over a null vec_id fails loudly instead of seeding a centroid from it") {
+    import spark.implicits._
+    val e = Seq((Option.empty[Long], Array(0.5f, 0.25f), 0)).toDF("vec_id", "embedding", "label")
+    val ivf = tmpDir("graft-ivf-null")
+    val ex = intercept[Exception](Similarity.buildIvfFrom(spark, e, ivf, 1))
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("null vec_id")), s"unexpected failure: $ex")
+    assert(!graft.index.Fs.exists(s"$ivf/_DONE"), "a failed build must not commit")
+  }
+
   test("multimodal extract consistent with column-only metadata + deterministic") {
     val meta = Multimodal.metaColumns(spark, sfDir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -21,4 +21,12 @@ trait SparkSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Number of Spark jobs `f` launches on this thread (tagged by job group). */
+  def jobsOf(group: String)(f: => Unit): Int = {
+    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
+    try f finally spark.sparkContext.clearJobGroup()
+    Thread.sleep(300) // status tracker is fed asynchronously
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
 }

@@ -244,6 +244,74 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       "expected a phrase hit from the live-ingested segment")
   }
 
+  test("the first query after a commit runs as many jobs with 3 live segments as with 1") {
+    import spark.implicits._
+    val all = (0 until 80).map(i => Corpus.synthDoc(i, 19L))
+    val idx = tmpDir("graft-jobs-seg-idx")
+    val h = IndexBuilder.build(spark, all.take(50).toDS(), idx, IndexBuilder.Config(salts = 4))
+    val avgdl = h.stats(spark).avgdl
+    def append(batch: Long, docs: Seq[graft.index.CorpusDoc]): Unit =
+      StreamingIngest.appendSegment(spark, docs.toDS(), batch, idx, avgdl, 4, 1L << 40)
+    // jobs of the first (cold) query on the index state the last commit made
+    def firstQueryJobs(group: String): Int =
+      jobsOf(group)(Searcher.topK(spark, h, "import def", 10).collect())
+    append(0L, all.slice(50, 60))
+    val oneSeg = firstQueryJobs("graft-first-q-1seg")
+    append(1L, all.slice(60, 70))
+    append(2L, all.slice(70, 80))
+    assert(h.segmentDirs.size == 3)
+    val threeSegs = firstQueryJobs("graft-first-q-3seg")
+    // one stats read over every source + the probe, whatever the segment count
+    assert(oneSeg == 2 && threeSegs == oneSeg,
+      s"first query after a commit: $oneSeg jobs at 1 segment, $threeSegs at 3 (want 2 and 2)")
+  }
+
+  test("pre-v3 stats (no buildAvgdl) beside v3 segment stats: liveStats and the WAND bound factor") {
+    import spark.implicits._
+    val all = (0 until 70).map(i => Corpus.synthDoc(i, 23L))
+    val idx = tmpDir("graft-prev3-idx")
+    val h = IndexBuilder.build(spark, all.take(50).toDS(), idx, IndexBuilder.Config(salts = 4))
+    // rewrite the batch stats as a pre-v3 build left them: no buildAvgdl
+    // column (block maxima were computed at the exact avgdl)
+    val base = h.stats(spark)
+    Seq((base.n, base.avgdl, base.totalTokens)).toDF("n", "avgdl", "totalTokens")
+      .coalesce(1).write.mode("overwrite").parquet(s"$idx/stats")
+    assert(!spark.read.parquet(s"$idx/stats").columns.contains("buildAvgdl"))
+    // the per-path reference computation: each source read on its own,
+    // a missing buildAvgdl taken as that source's avgdl
+    def expected(): (graft.index.IndexStats, Double) = {
+      val rows = (s"$idx/stats" +: h.segmentDirs.map(_ + "/stats")).map { p =>
+        val r = spark.read.parquet(p).head()
+        val b = if (r.schema.fieldNames.contains("buildAvgdl"))
+          r.getAs[Double]("buildAvgdl") else r.getAs[Double]("avgdl")
+        (r.getAs[Long]("n"), r.getAs[Long]("totalTokens"), b)
+      }
+      val n = rows.map(_._1).sum
+      val tok = rows.map(_._2).sum
+      val avgdl = tok.toDouble / n.toDouble
+      val minB = rows.map(_._3).min
+      (graft.index.IndexStats(n, avgdl, tok, minB), math.max(1.0, avgdl / minB))
+    }
+    // segment built against a LARGE avgdl: the minimum is the pre-v3
+    // source's avgdl, which must stand in for its missing buildAvgdl
+    StreamingIngest.appendSegment(spark, all.slice(50, 60).toDS(), 0L, idx,
+      base.avgdl * 4, 4, 1L << 40)
+    val (st1, f1) = h.liveStats(spark)
+    assert((st1, f1) == expected())
+    assert(st1.buildAvgdl == base.avgdl)
+    // segment built against a SMALL avgdl: its real buildAvgdl is the
+    // minimum and must survive the mixed v2/v3 read (never overwritten
+    // by its avgdl, which would under-scale the bound)
+    StreamingIngest.appendSegment(spark, all.slice(60, 70).toDS(), 1L, idx,
+      base.avgdl / 4, 4, 1L << 40)
+    val (st2, f2) = h.liveStats(spark)
+    assert((st2, f2) == expected())
+    assert(st2.buildAvgdl == base.avgdl / 4 && f2 > 1.0)
+    // and the mixed index answers: ranked, non-empty
+    val hits = Searcher.topK(spark, h, "import def", 10).collect()
+    assert(hits.nonEmpty && hits.toSeq == hits.toSeq.sortBy(x => (-x.score, x.docId)))
+  }
+
   test("pathological huge-vocabulary batch fails LOUDLY instead of bloating the driver") {
     import spark.implicits._
     val idx = tmpDir("graft-vocab-idx")
