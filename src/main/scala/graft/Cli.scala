@@ -148,8 +148,10 @@ object Cli {
       // continuous minor compaction by default: live segment count stays
       // bounded (the ES background-merge cadence); --merge-at 0 disables
       val mergeAt = opt(rest, "--merge-at", "8").toInt
-      val avgdl = try IndexBuilder.openHandle(indexDir).stats(spark).avgdl
-        catch { case _: Throwable => 80.0 }
+      // a missing index starts from a nominal avgdl (segments carry their
+      // own stats); an index that exists but cannot be read fails loudly
+      val h = IndexBuilder.openHandle(indexDir)
+      val avgdl = if (graft.index.Fs.exists(s"${h.root}/stats")) h.stats(spark).avgdl else 80.0
       val q = StreamingIngest.startIndexAppend(spark, srcDir, indexDir, ckp, avgdl,
         mergeAtSegments = mergeAt)
       q.awaitTermination(secs * 1000L)
@@ -164,8 +166,10 @@ object Cli {
       val snap0 = IndexBuilder.openHandle(indexDir).snapshot
       val before = snap0.segmentDirs.size
       val tombs = snap0.tombstoneDirs.size
-      if (before == 0 && tombs == 0)
-        println("nothing to compact (no live segments, no tombstones)")
+      if (before == 0 && tombs == 0 &&
+          !graft.index.TermRanges.overlapping(snap0.rootRanges))
+        println("nothing to compact (no live segments, no tombstones, " +
+          "postings already term-range partitioned)")
       else {
         val h = graft.index.Compactor.compact(spark, indexDir)
         val st = h.stats(spark)
@@ -225,12 +229,15 @@ object Cli {
       println(f"${"stage"}%-10s ${"lineage"}%12s ${"written"}%12s  status")
       for (stage <- Seq("docmeta", "stats", "postings", "termstats")) {
         val expected = lin.get(stage).map(_.map(_.rows).sum).getOrElse(-1L)
+        // a missing table is reported as such; any other read failure
+        // (corrupt file, unreachable store) propagates
+        val table = s"${h.root}/$stage"
         val actual =
-          try spark.read.parquet(s"${h.root}/$stage").count()
-          catch { case _: Throwable => -2L }
-        val ok = expected == actual
+          if (graft.index.Fs.exists(table)) Some(spark.read.parquet(table).count()) else None
+        val ok = actual.contains(expected)
         if (!ok) bad += 1
-        println(f"$stage%-10s $expected%12d $actual%12d  ${if (ok) "OK" else "MISMATCH"}")
+        val status = if (ok) "OK" else if (actual.isEmpty) "MISSING" else "MISMATCH"
+        println(f"$stage%-10s $expected%12d ${actual.fold("missing")(_.toString)}%12s  $status")
       }
       for (seg <- h.segmentDirs) {
         val st = spark.read.parquet(s"$seg/stats").as[graft.index.IndexStats].head()
@@ -246,7 +253,8 @@ object Cli {
       // lineage report — the `stats` analog (commands/stats.go:20-67):
       // per-stage row counts, docId coverage, byte volume.
       import spark.implicits._
-      val lin = IndexBuilder.openHandle(indexDir).lineage(spark)
+      val h = IndexBuilder.openHandle(indexDir)
+      val lin = h.lineage(spark)
         .groupByKey(_.stage)
         .mapGroups { (stage, it) =>
           val rows = it.toSeq
@@ -258,6 +266,17 @@ object Cli {
       lin.foreach { case (s, r, mn, mx, b, p) =>
         println(f"$s%-10s $r%12d $mn%12d $mx%12d $b%12d $p%5d")
       }
+      // postings layout: a term probe reads only the files whose footer
+      // term range holds its terms — unless the ranges overlap (an index
+      // written in the older hash layout), which `compact` rewrites
+      val files = h.snapshot.rootRanges
+      val noStats = files.count(_.range.isEmpty)
+      val layout =
+        if (graft.index.TermRanges.overlapping(files))
+          "term ranges OVERLAP (every probe reads every file; run `compact` to re-partition by term range)"
+        else "term ranges disjoint (a probe reads only the files holding its terms)"
+      println(s"postings layout: ${files.size} file(s), $layout" +
+        (if (noStats > 0) s", $noStats file(s) without term statistics (always read)" else ""))
 
     // snapshot / restore / verify-snapshot — the ES `_snapshot` API analog
     // (index backup + migration): one pinned catalog state copied with

@@ -15,8 +15,10 @@ object Engine {
   /** Bump to invalidate on-disk index layouts when the format changes.
     * v3: IndexStats gained buildAvgdl (sampled; lets docmeta/postings
     * build concurrently).
+    * v4: postings range-partitioned on (term, salt) — one term range per
+    * file (TermRanges).
     */
-  val FormatVersion = "v3"
+  val FormatVersion = "v4"
 
   // Handles are cheap, but building is not — memoize per (session, key);
   // graft.SessionCache sweeps stopped sessions (Bench creates and stops a

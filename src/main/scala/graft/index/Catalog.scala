@@ -26,11 +26,14 @@ object Catalog {
     * until a compaction drops them physically — Compactor.tombstone).
     * `fingerprint` keys every downstream cache (relations/postings/stats/df/deletes)
     * — any segment arrival, compaction, tombstone commit, or same-dir
-    * rebuild changes it.
+    * rebuild changes it. `rootFingerprint` is its part that names the
+    * active root's immutable table files (epoch + table-stage markers): a
+    * segment or tombstone commit leaves it unchanged, so what is derived
+    * from the root's files alone (the postings footer ranges) survives.
     */
   final case class State(epoch: Option[String], segments: Seq[String],
                          hidden: Set[String], tombstones: Seq[String],
-                         fingerprint: String)
+                         fingerprint: String, rootFingerprint: String)
 
   private final case class Entry(atMs: Long, state: State)
   private val cache = scala.collection.concurrent.TrieMap.empty[String, Entry]
@@ -78,8 +81,9 @@ object Catalog {
     // fixes (Similarity.ivfKey)
     val stamp = Seq("docmeta", "postings", "termstats", "stats")
       .map(t => Fs.mtime(s"$root/_STAGE_$t")).mkString(".")
+    val rootFp = s"${epoch.getOrElse("genesis")}:$stamp"
     State(epoch, segs, folded ++ replaced, tombs,
-      s"${epoch.getOrElse("genesis")}:$stamp:${segs.size}:${segs.hashCode.toHexString}" +
-        s":${tombs.size}:${tombs.hashCode.toHexString}")
+      s"$rootFp:${segs.size}:${segs.hashCode.toHexString}" +
+        s":${tombs.size}:${tombs.hashCode.toHexString}", rootFp)
   }
 }

@@ -205,9 +205,12 @@ object Compactor {
   }
 
   /** Fold all live streamed segments into a new epoch. No-op (returns the
-    * handle unchanged) when there is nothing to fold. `cfg` supplies the
-    * salt scheme — pass the same values the batch build used so the folded
-    * epoch is bit-identical to a fresh build over the union.
+    * handle unchanged) when there is nothing to fold: no live segment, no
+    * tombstone, and root postings already in the term-range layout (an
+    * index written in the older hash layout is folded once to gain file
+    * elimination — TermRanges.overlapping). `cfg` supplies the salt scheme
+    * — pass the same values the batch build used so the folded epoch is
+    * bit-identical to a fresh build over the union.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config = Config()): Handle =
     Epochs.withMaintLock(dir, "compact") { token =>
@@ -220,7 +223,8 @@ object Compactor {
       // folded list also takes the names a merged source segment was hiding
       // (its `replaces` file dies with it; a failed lazy delete must not
       // resurrect its sources).
-      if (segs.nonEmpty || state.tombstones.nonEmpty)
+      if (segs.nonEmpty || state.tombstones.nonEmpty || TermRanges.overlapping(
+          TermRanges.fileRanges(s"${Epochs.rootOf(dir, state.epoch)}/postings")))
         Epochs.commitEpoch(dir, token, layout, state.epoch,
           consumed = segs.flatMap(d => Fs.name(d) +: Epochs.readList(s"$d/${Epochs.Replaces}")),
           dead = segs.map(segRel))(fold(spark, dir, cfg, state, _))
@@ -296,17 +300,23 @@ object Compactor {
         IndexBuilder.writeLineageRows(spark, newRoot, "docmeta", dmAcc.value)
       }
 
-      // postings fold: decode → remap docIds → re-salt → re-block. The
-      // remap (oldDocId → docId, two longs per doc) is the only join; AQE
-      // broadcasts it while it fits and falls back to a shuffle join on
-      // docId at scale. Shuffle volume = distinct (term, doc) pairs — the
-      // same as the build's postings stage, minus tokenization.
+      // postings fold: decode → remap docIds → re-salt → range-partition →
+      // re-block. The remap (oldDocId → docId, two longs per doc) is the
+      // only join; AQE broadcasts it while it fits and falls back to a
+      // shuffle join on docId at scale. Shuffle volume = distinct (term,
+      // doc) pairs — the same as the build's postings stage, minus
+      // tokenization. The term ranges come from the sources' termstats
+      // (TermRanges.foldBounds), so no pass samples the decoded postings.
       val foldPostings = () => IndexBuilder.timedStage("fold-postings") {
         // force the lazy estimate HERE, on the driver thread (overlapping
         // the docmeta fold) — referencing `est` directly inside the
         // mapPartitions closure below would capture the LazyRef and
         // evaluate the sample JOB inside an executor task (SPARK-28702)
         val estV = est
+        val sources = oldRoot +: segs
+        val bounds = TermRanges.foldBounds(spark, sources.map(_ + "/termstats"),
+          IndexBuilder.readStatsCompat(spark, sources.map(_ + "/stats")).map(_.totalTokens).sum.toDouble,
+          salts, parts)
         val decoded = readTable(spark, Tables.Postings,
             s"$oldRoot/postings" +: segs.map(_ + "/blocks"))
           .as[PostingBlock]
@@ -321,7 +331,7 @@ object Compactor {
             least(floor($"docId" * salts / math.max(n, 1L)), lit(salts - 1))
               .cast("int").as("salt"),
             $"docId", TermDoc.packMeta($"dl", $"tf").as("meta"))
-          .repartition(parts, $"term", $"salt")
+          .repartition(parts, TermRanges.route(spark, bounds, parts, $"term", $"salt"))
           .sortWithinPartitions($"term", $"salt", $"docId")
           .as[TermDoc]
           .mapPartitions(IndexBuilder.buildBlocks(_, estV))

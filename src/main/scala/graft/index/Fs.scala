@@ -172,6 +172,15 @@ object Fs {
     } catch { case _: java.io.IOException => false }
   }
 
+  /** Footer (schema, row groups and their column statistics) of one
+    * parquet file.
+    */
+  def parquetFooter(path: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+    try r.getFooter finally r.close()
+  }
+
   /** Last path component (works for both `file:/x/y` and `/x/y`). */
   def name(path: String): String = new Path(path).getName
 

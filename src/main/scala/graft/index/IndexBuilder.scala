@@ -30,10 +30,12 @@ import graft.query.Bm25
   *    zero re-encoding (blocks carry absolute firstDocId). Query-side, the
   *    same salt ranges are independent sub-indexes → per-salt WAND + tiny
   *    global top-k merge.
-  *  - postings write is sorted by (term, salt, blockIdx) → parquet min/max
-  *    column stats prune term lookups at scan time (the built-in analog of a
-  *    term dictionary; at real scale this is an Iceberg table sorted on
-  *    `term` with the same effect).
+  *  - postings are written range-partitioned on (term, salt) and sorted
+  *    by (term, salt, docId) inside each file (TermRanges): every file
+  *    covers one contiguous term range, so a term probe first eliminates
+  *    the files whose footer [min, max] cannot hold its terms
+  *    (Snapshot.postingsOf), then parquet row-group min/max prunes inside
+  *    the files it reads — the built-in analog of a term dictionary.
   */
 object IndexBuilder {
 
@@ -115,12 +117,24 @@ object IndexBuilder {
   def readTable(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
     spark.read.schema(schema).parquet(paths: _*)
 
-  // per-(session, dir, fingerprint, table) union relation of a Snapshot —
-  // resolving one (path globbing + file listing) is driver work that a
-  // query on an unchanged index state need not repeat; a new state evicts
-  // the dir's older entries (graft.SessionCache.evictStale, the discipline
-  // of Searcher's caches)
+  // per-(session, dir, fingerprint, table) union relation of a Snapshot,
+  // and its postingsOf file subsets — resolving one (path globbing + file
+  // listing) is driver work that a query on an unchanged index state need
+  // not repeat; a new state evicts the dir's older entries
+  // (graft.SessionCache.evictStale, the discipline of Searcher's caches)
   private[graft] val relations = new graft.SessionCache[DataFrame]
+
+  // per-(dir, root fingerprint) footer term ranges of the root's postings
+  // files: the files are immutable for that fingerprint, and a segment or
+  // tombstone commit leaves it unchanged, so each root's footers are read
+  // once (files hold no session state, so neither does this map)
+  private[graft] val rootRangesMemo =
+    scala.collection.concurrent.TrieMap.empty[String, Seq[TermRanges.FileRange]]
+
+  // memoized relations per index state (its unions and the pruned file
+  // subsets of postingsOf), at most this many; past it a new subset's
+  // relation is resolved per call
+  private val MaxRelations = 256
 
   /** An immutable view of one Catalog.State: every accessor derives from the
     * SAME (epoch, segments, fingerprint) triple, so a query assembled from
@@ -154,18 +168,27 @@ object IndexBuilder {
       */
     def fingerprint: String = state.fingerprint
 
+    /** The relation `name` of this index state, resolved by `read` once;
+      * past MaxRelations entries for the state, resolved per call.
+      */
+    private def memoized(spark: SparkSession, name: String)(read: => DataFrame): DataFrame = {
+      val m = relations(spark)
+      val prefix = s"$dir|$fingerprint|"
+      m.getOrElse(prefix + name, {
+        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
+        if (m.keysIterator.count(_.startsWith(prefix)) < MaxRelations)
+          m.getOrElseUpdate(prefix + name, read)
+        else read
+      })
+    }
+
     /** The union relation `table` over the root and every live segment
       * (`segTable` under each segment dir), memoized for this index state.
       */
     private def union(spark: SparkSession, table: String, segTable: String,
-                      schema: StructType): DataFrame = {
-      val m = relations(spark)
-      val prefix = s"$dir|$fingerprint|"
-      m.getOrElseUpdate(prefix + table, {
-        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
-        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable"))
-      })
-    }
+                      schema: StructType): DataFrame =
+      memoized(spark, table)(
+        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable")))
 
     def docmeta(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
@@ -215,6 +238,36 @@ object IndexBuilder {
     def postingsAll(spark: SparkSession): Dataset[PostingBlock] = {
       import spark.implicits._
       union(spark, "postings", "blocks", Tables.Postings).as[PostingBlock]
+    }
+
+    /** Footer term ranges of the root's postings files, read once per
+      * root fingerprint (TermRanges.fileRanges).
+      */
+    def rootRanges: Seq[TermRanges.FileRange] = {
+      val key = s"$dir|${state.rootFingerprint}"
+      rootRangesMemo.getOrElseUpdate(key, {
+        graft.SessionCache.evictStale(rootRangesMemo, dir, key)(_ => ())
+        TermRanges.fileRanges(s"$root/postings")
+      })
+    }
+
+    /** The postings of `terms` — every term-filtered postings read goes
+      * through here. The relation is the root files whose footer term range
+      * can hold one of `terms` (a file without term statistics always
+      * qualifies) plus every live segment's blocks, filtered on
+      * `term isin terms`; parquet row-group statistics then prune inside
+      * the files read. No qualifying file ⇒ an empty Dataset, which runs
+      * no job. Each file subset's relation is memoized for this state.
+      */
+    def postingsOf(spark: SparkSession, terms: Seq[String]): Dataset[PostingBlock] = {
+      import spark.implicits._
+      val keys = terms.map(TermRanges.utf8)
+      val picked = rootRanges.zipWithIndex.filter { case (r, _) => keys.exists(r.mayHold) }
+      val paths = picked.map(_._1.path) ++ segmentDirs.map(_ + "/blocks")
+      if (paths.isEmpty) spark.emptyDataset[PostingBlock]
+      else memoized(spark, "postings@" + picked.map(_._2).mkString(","))(
+          readTable(spark, Tables.Postings, paths))
+        .filter(col("term").isin(terms: _*)).as[PostingBlock]
     }
 
     /** Batch docmeta ∪ streamed segments' docmeta. */
@@ -543,15 +596,24 @@ object IndexBuilder {
       // evaluated once per row in the projection feeding the Generate);
       // objects materialize only at the block builder, on narrow TermDoc
       // rows — never on 1 KB content strings.
-      val tokens = withIds()
+      def tokensOf(ids: DataFrame): DataFrame = ids
         .select($"docId", tokenStats.as("ts"))
         .select($"docId", $"ts.dl".as("dl"), explode($"ts.tfs").as("tt"))
         .select($"tt.term".as("term"),
           least(floor($"docId" * salts / math.max(n, 1L)), lit(salts - 1))
             .cast("int").as("salt"),
           $"docId", TermDoc.packMeta($"dl", $"tt.tf").as("meta"))
-      val blocks = tokens
-        .repartition(parts, $"term", $"salt")
+      // range bounds from the (term, salt) keys of a small docId-hash
+      // sample of documents — only the sample is tokenized twice
+      val rate = math.max(1L, n / TermRanges.sampleDocs(parts))
+      val bounds = TermRanges.boundsOf(
+        tokensOf(withIds().filter(pmod(xxhash64($"docId"), lit(rate)) === 0))
+          .select($"term", $"salt").as[(String, Int)].collect().toSeq
+          .map { case (t, s) => (TermRanges.utf8(t), s, 1.0) }, parts)
+      val blocks = tokensOf(withIds())
+        // one term range per partition (TermRanges): a (term, salt) run
+        // stays whole, so blocks and lineage are those of any layout
+        .repartition(parts, TermRanges.route(spark, bounds, parts, $"term", $"salt"))
         .sortWithinPartitions($"term", $"salt", $"docId")
         .as[TermDoc]
         .mapPartitions(buildBlocks(_, est))

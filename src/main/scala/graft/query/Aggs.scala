@@ -27,20 +27,22 @@ object Aggs {
     * `date_trunc` (an 8-byte timestamp), string-formatted only AFTER the
     * aggregation: the per-row work drops from format-to-string (datetime
     * math + a string allocation per row, then string hashing in the agg) to
-    * the truncation alone, and the exchange carries 8-byte keys instead of
-    * 10-byte strings. Identical output: truncation and day-pattern
-    * formatting bucket identically in the session timezone, and the
-    * post-agg format renders the same string (A/B: 0.384 → 0.344 s med,
-    * outputs asserted equal row-for-row).
+    * the truncation alone, and the exchanges (the agg's and the final
+    * sort's, which orders on `day_ts` before formatting) carry 8-byte keys
+    * instead of 10-byte strings. Identical output: truncation and
+    * day-pattern formatting bucket identically in the session timezone,
+    * timestamp order is the formatted strings' order for 4-digit years, and
+    * the post-sort format renders the same string (A/B: 0.384 → 0.344 s
+    * med, outputs asserted equal row-for-row).
     */
   def dateHistogram(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "lineitem")
       .groupBy(date_trunc("day", col("l_shipdate")).as("day_ts"))
       .agg(count(lit(1)).as("n"),
         min(col("l_orderkey")).as("min_key"), max(col("l_orderkey")).as("max_key"))
+      .orderBy(col("day_ts"))
       .select(date_format(col("day_ts"), "yyyy-MM-dd").as("day"),
         col("n"), col("min_key"), col("max_key"))
-      .orderBy(col("day"))
 
   /** F3: date_histogram(day) + sum over orders — same truncate-then-format
     * bucket key as dateHistogram.
@@ -49,9 +51,9 @@ object Aggs {
     t(spark, sfDir, "orders")
       .groupBy(date_trunc("day", col("o_orderdate")).as("day_ts"))
       .agg(quantized(sum(col("o_totalprice"))).as("total_q"), count(lit(1)).as("n"))
+      .orderBy(col("day_ts"))
       .select(date_format(col("day_ts"), "yyyy-MM-dd").as("day"),
         col("total_q"), col("n"))
-      .orderBy(col("day"))
 
   /** F4: exists + term filter (bool.must analog) with JSON field access
     * (the reference's memo.value exists-check, postman :119-138).
@@ -122,9 +124,9 @@ object Aggs {
       .filter(col("user_id") < 10)
       .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(quantized(avg(col("value"))).as("avg_q"), count(lit(1)).as("n"))
+      .orderBy(col("user_id"), col("hour_ts"))
       .select(col("user_id"), date_format(col("hour_ts"), "yyyy-MM-dd HH").as("hour"),
         col("avg_q"), col("n"))
-      .orderBy(col("user_id"), col("hour"))
 
   /** F9: global top-10 by value desc — TakeOrderedAndProject path. */
   def top10Values(spark: SparkSession, sfDir: String): DataFrame =
@@ -458,8 +460,8 @@ object Aggs {
       // 0.701 → 0.609 s med, outputs asserted equal)
       .groupBy(date_trunc("day", col("o_orderdate")).as("day_ts"))
       .agg(quantized(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rev_q"))
+      .orderBy(col("day_ts"))
       .select(date_format(col("day_ts"), "yyyy-MM-dd").as("day"), col("rev_q"))
-      .orderBy(col("day"))
 
   /** A6: IN-list semi-join reduction. */
   def semiJoin(spark: SparkSession, sfDir: String): DataFrame = {

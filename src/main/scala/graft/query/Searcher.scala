@@ -14,11 +14,14 @@ import graft.SessionCache.evictStale
   * Why this scales: salts are disjoint docId ranges, so each group is a
   * self-contained sub-index — per-group top-k results are globally mergeable
   * without re-scoring, and the shuffle moving posting blocks to groups only
-  * moves the query terms' blocks (the `term isin` filter is pushed to the
-  * parquet scan, which prunes row groups via min/max stats on the sorted
-  * `term` column). At 1000 executors this is: k small broadcasts + one
-  * pruned scan + S-way parallel WAND + a k·S-row merge on the driver side
-  * of a TakeOrderedAndProject.
+  * moves the query terms' blocks. Every term-filtered postings read goes
+  * through `Snapshot.postingsOf`: postings files are range-partitioned on
+  * (term, salt), so it first eliminates the files whose footer term range
+  * cannot hold a query term, and the pushed `term isin` filter then prunes
+  * row groups inside the files read via min/max stats on the sorted `term`
+  * column. At 1000 executors this is: k small broadcasts + one pruned scan
+  * of the files holding the terms + S-way parallel WAND + a k·S-row merge
+  * on the driver side of a TakeOrderedAndProject.
   */
 object Searcher {
 
@@ -33,7 +36,7 @@ object Searcher {
   // per-(dir, fp, term) COLLECTED posting blocks for the coordinator path —
   // bounded by MaxCachedPostings, so first-query cost (and residency) scales
   // with query df, never with index size. The index itself is NOT cached:
-  // the base plan stays a pushed-down, row-group-pruned parquet scan.
+  // the base plan stays a file-eliminated, row-group-pruned parquet scan.
   private val blockCache = new graft.SessionCache[Array[PostingBlock]]
   // per-(dir, fp, term) df memo (0 = term absent) — a warm repeated query
   // runs ZERO Spark jobs before the final top-k materialization.
@@ -95,17 +98,18 @@ object Searcher {
 
   /** Optimistic coordinator fetch: collected blocks for `terms`, served
     * from the bounded per-term cache; misses fetched in ONE filtered,
-    * LIMITed collect (pushed-down pruned scan over exactly the missing
-    * terms). `None` = the fetch hit the block limit — the posting volume is
+    * LIMITed collect over `postingsOf(missing)` — only the files whose
+    * term range holds a missing term, row groups pruned inside them.
+    * `None` = the fetch hit the block limit — the posting volume is
     * too large for the coordinator, caller takes the distributed path.
     * Fusing the df lookup away is the point: df per term ≡ Σ block n (an
     * index invariant EngineSpec asserts), so a cold coordinator query costs
     * ONE scan job, not a termstats job + a postings job — and no planning
-    * job either: `postingsAll` is resolved once per index state with a
+    * job either: the pruned relation is memoized per index state with a
     * declared schema (Snapshot), so the probe's collect is the only job
-    * (EngineSpec counts it). Residency is
-    * bounded by query df — a hot repeated term costs its own postings once,
-    * and the whole cache never exceeds MaxCachedPostings.
+    * (EngineSpec counts it), and its tasks cover only the files read.
+    * Residency is bounded by query df — a hot repeated term costs its own
+    * postings once, and the whole cache never exceeds MaxCachedPostings.
     */
   private def blocksProbe(spark: SparkSession, v: Snapshot,
                           terms: Seq[String], maxBlocks: Int,
@@ -122,8 +126,7 @@ object Searcher {
     val missing = terms.filterNot(have.contains)
     val fetchedArr: Array[PostingBlock] =
       if (missing.isEmpty) Array.empty
-      else v.postingsAll(spark).filter(col("term").isin(missing: _*))
-        .limit(maxBlocks + 1).collect()
+      else v.postingsOf(spark, missing).limit(maxBlocks + 1).collect()
     if (fetchedArr.length > maxBlocks) return None // volume too large: distribute
     val fetched: Map[String, Array[PostingBlock]] = fetchedArr.groupBy(_.term)
     if (missing.nonEmpty) {
@@ -251,8 +254,9 @@ object Searcher {
     }.toArray.sortBy(_.term)
 
   /** Σdf below which the coordinator executes the query itself over
-    * collected blocks (one pruned-scan job, no shuffle) — the ES
-    * coordinating-node analog. Above it, per-salt distributed WAND.
+    * collected blocks (one job scanning the files that hold the terms, no
+    * shuffle) — the ES coordinating-node analog. Above it, per-salt
+    * distributed WAND.
     */
   val DriverPathMaxPostings = 500000L
 
@@ -288,15 +292,17 @@ object Searcher {
     * k = Int.MaxValue ⇒ exhaustive: every matching doc, ranked.
     *
     * Execution is adaptive: an optimistic coordinator probe collects the
-    * query terms' blocks in ONE limited pruned-scan job (df derives from
-    * the blocks themselves — no separate termstats job; the scanned
-    * relation is memoized per index state with a declared schema, so no
-    * schema-inference job precedes it; zero jobs when the terms are warm
-    * in the per-term cache). The first query on a new index state also
-    * reads every source's stats in one job (liveStats, memoized per
-    * state). If the probe hits its block
-    * bound, the query re-plans as distributed per-salt WAND over the
-    * pushed-down pruned scan + a global TakeOrderedAndProject merge.
+    * query terms' blocks in ONE limited job over `postingsOf(terms)` — the
+    * root files whose term range holds a query term plus the live
+    * segments, row groups pruned inside them (df derives from the blocks
+    * themselves — no separate termstats job; the relation is memoized per
+    * index state with a declared schema, so no schema-inference job
+    * precedes it; zero jobs when the terms are warm in the per-term
+    * cache). The first query on a new index state also reads every
+    * source's stats in one job (liveStats, memoized per state) and, once
+    * per root, the root postings footers on the driver. If the probe hits
+    * its block bound, the query re-plans as distributed per-salt WAND over
+    * the same pruned relation + a global TakeOrderedAndProject merge.
     * Results are identical — salts are disjoint sub-indexes either way
     * (EngineSpec asserts path identity).
     */
@@ -405,8 +411,9 @@ object Searcher {
       // the pushed-down pruned scan feeding the per-salt WAND, not residency
       val dfs = dfsOverride.getOrElse(dfForCached(spark, v, terms))
       val idfs = idfsOf(dfs)
-      val base = if (resident) residentPostings(spark, v) else v.postingsAll(spark)
-      val matching = base.filter($"term".isin(terms: _*))
+      val matching =
+        if (resident) residentPostings(spark, v).filter($"term".isin(terms: _*))
+        else v.postingsOf(spark, terms)
       val bIdfs = spark.sparkContext.broadcast(idfs)
       val bDead = tombstonesBc(spark, v, dead)
       // per-query broadcasts (not cached like bDead: allow/deny lists are
@@ -741,8 +748,8 @@ object Searcher {
     *    ZERO posting IO, zero jobs when warm (the index invariant
     *    df ≡ Σ block n makes the metadata answer exact);
     *  - coordinator path: the same bounded block probe as topK, counted on
-    *    the driver — one pruned-scan job;
-    *  - distributed: pruned postings scan → per-salt membership count inside
+    *    the driver — one job over the files holding the terms;
+    *  - distributed: `postingsOf` scan → per-salt membership count inside
     *    `mapGroups` (salts are disjoint docId ranges, so per-salt counts SUM
     *    — no distinct, no shuffle beyond the query terms' blocks) → one
     *    long per salt to a 1-row agg.
@@ -780,8 +787,7 @@ object Searcher {
       case None =>
         val bDead = tombstonesBc(spark, v, dead)
         val minMf = minM
-        v.postingsAll(spark)
-          .filter($"term".isin(terms: _*))
+        v.postingsOf(spark, terms)
           .groupByKey(_.salt)
           .mapGroups { (_, it) =>
             countAtLeast(it.toSeq, minMf, liveDocOf(bDead.value))
@@ -869,7 +875,7 @@ object Searcher {
       conjunctive, rescoreHits(v))
   }
 
-  /** docIds containing ANY of `terms` (one pruned postings scan, no
+  /** docIds containing ANY of `terms` (one `postingsOf` scan, no
     * ordering, no liveness filter) — the membership side of grouped
     * boolean queries: callers semi-join it against an already
     * tombstone-filtered scored hit stream, so deleted docs never survive
@@ -878,8 +884,7 @@ object Searcher {
   def docsWithAnySnap(spark: SparkSession, v: Snapshot,
                       terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    v.postingsAll(spark)
-      .filter($"term".isin(terms: _*))
+    v.postingsOf(spark, terms)
       .flatMap(b => graft.index.Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId).iterator)
       .toDF("docId").distinct()
   }
@@ -938,11 +943,12 @@ object Searcher {
     * contrib rows gives exactly the doc's score in the ranked surfaces
     * (same double expressions, same ascending-term order).
     *
-    * Scale shape: ONE pruned postings scan — `term IN` pushes to parquet
-    * row groups and the (firstDocId, lastDocId) bracket predicate (block
-    * metadata columns, also pushed) short-circuits every block that cannot
-    * contain the target doc, so cost is O(blocks bracketing one docId),
-    * never a term's full posting list. A tombstoned doc is refused loudly
+    * Scale shape: ONE `postingsOf` scan — only the files whose term range
+    * holds a query term are read, `term IN` pushes to their row groups and
+    * the (firstDocId, lastDocId) bracket predicate (block metadata
+    * columns, also pushed) short-circuits every block that cannot contain
+    * the target doc, so cost is O(blocks bracketing one docId), never a
+    * term's full posting list. A tombstoned doc is refused loudly
     * (ES `_explain` on a deleted doc 404s).
     */
   def explainScore(spark: SparkSession, h: IndexBuilder.Handle, query: String,
@@ -958,9 +964,8 @@ object Searcher {
     val tgt = docId
     // ≤ |terms| rows by construction (per term, one salt range and one
     // segment's docId range bracket tgt) — the collect is bounded
-    val found = v.postingsAll(spark)
-      .filter($"term".isin(terms: _*) &&
-        $"firstDocId" <= tgt && $"lastDocId" >= tgt)
+    val found = v.postingsOf(spark, terms)
+      .filter($"firstDocId" <= tgt && $"lastDocId" >= tgt)
       .flatMap { b =>
         val ids = graft.index.Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)
         val i = java.util.Arrays.binarySearch(ids, tgt)
@@ -986,8 +991,7 @@ object Searcher {
     import spark.implicits._
     val v = h.snapshot
     val bDead = tombstonesBc(spark, v, tombstones(spark, v))
-    v.postingsAll(spark)
-      .filter($"term" === term)
+    v.postingsOf(spark, Seq(term))
       .flatMap { b =>
         val liveDoc = liveDocOf(bDead.value)
         graft.index.Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)

@@ -64,6 +64,30 @@ class CliAndFunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(rows.head.schema.fieldNames.toSet == Set("doc_id", "score_q"))
   }
 
+  test("cli stats prints the postings layout; reconcile reports a missing table, a corrupt one fails with its read error") {
+    import spark.implicits._
+    import graft.index.{Fs, IndexBuilder}
+    val idx = tmpDir("graft-cli-layout-idx")
+    IndexBuilder.build(spark, (0 until 40).map(i => graft.corpus.Corpus.synthDoc(i, 59L)).toDS(),
+      idx, IndexBuilder.Config(salts = 2))
+    val out = new java.io.ByteArrayOutputStream()
+    def run(args: String*): Unit = Console.withOut(out)(Cli.run(spark, args))
+    run("stats", idx)
+    assert(out.toString.linesIterator.exists(l =>
+      l.startsWith("postings layout: ") && l.contains("term ranges disjoint")), out.toString)
+    // a table that cannot be read: its error propagates, not a count of -2
+    val part = Fs.listFiles(s"$idx/termstats").find(_.endsWith(".parquet")).get
+    Fs.writeString(part, "not a parquet file")
+    val corrupt = intercept[Exception](run("reconcile", idx))
+    assert(!corrupt.isInstanceOf[IllegalArgumentException], s"read error swallowed: $corrupt")
+    // a missing table is reported as missing and fails the reconciliation
+    Fs.delete(s"$idx/termstats")
+    out.reset()
+    intercept[IllegalArgumentException](run("reconcile", idx))
+    assert(out.toString.linesIterator.exists(l => l.startsWith("termstats") && l.endsWith("MISSING")),
+      out.toString)
+  }
+
   test("cli: create-index/export/stats/search round-trip") {
     val idx = tmpDir("graft-cli-idx")
     new java.io.File(idx).delete()

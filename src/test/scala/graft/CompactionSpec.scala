@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{Catalog, Compactor, Epochs, Fs, IndexBuilder}
+import graft.index.{Catalog, Compactor, Epochs, Fs, IndexBuilder, PostingBlock, TermRangeRouter, TermRanges}
 import graft.query.Searcher
 import graft.streaming.StreamingIngest
 
@@ -275,6 +275,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       def pathOf(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
       for ((files, rootT, segT) <- Seq(
              (v.postingsAll(spark).inputFiles, "postings", "blocks"),
+             (v.postingsOf(spark, Seq("zqprobe")).inputFiles, "postings", "blocks"),
              (v.docmetaAll(spark).inputFiles, "docmeta", "docmeta"),
              (v.termstatsAll(spark).inputFiles, "termstats", "termstats"))) {
         val dirs = s"${pathOf(v.root)}/$rootT/" +: v.segmentDirs.map(d => s"${pathOf(d)}/$segT/")
@@ -303,12 +304,14 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       .select("docId")
     Compactor.tombstone(spark, idx, dead)
     check("tombstone", paths(25, 60))
-    // seven index states later: one live entry per (dir, table), all of
-    // the current state — older states were evicted, not leaked
+    // seven index states later: the live entries per (dir, table) — the
+    // union, plus the probe's pruned file subset for postings — are all of
+    // the current state: older states were evicted, not leaked
     val keys = IndexBuilder.relations(spark).keys.filter(_.startsWith(s"$idx|")).toSeq
-    val perTable = keys.groupBy(_.split('|').last)
+    val perTable = keys.groupBy(_.split('|').last.takeWhile(_ != '@'))
     assert(perTable.keySet == Set("postings", "docmeta", "termstats") &&
-      perTable.values.forall(_.size == 1), s"stale relations kept: $keys")
+      perTable.map { case (t, ks) => ks.size == (if (t == "postings") 2 else 1) }.forall(identity),
+      s"stale relations kept: $keys")
     assert(keys.forall(_.startsWith(s"$idx|${h.snapshot.fingerprint}|")))
   }
 
@@ -557,6 +560,139 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     assert(peerCommitted && Fs.exists(s"$peerDelta/_DONE"), "the peer's delta must survive")
     Catalog.invalidate(idx)
     assert(IndexBuilder.openHandle(idx).snapshot.tombstoneIds(spark).toSeq == Seq(3L))
+  }
+
+  /** Rewrite the genesis postings of `dir` with the same `blocks` in another
+    * file layout: "hash" is the layout indexes had before term ranges
+    * (hash-partitioned on (term, salt): every file spans the dictionary);
+    * "range" is the term-range layout, with the range partitions named in
+    * `noStats` written without column statistics.
+    */
+  private def rewritePostings(dir: String, blocks: Seq[PostingBlock], layout: String,
+                              noStats: Set[Int] = Set.empty): Unit = {
+    import spark.implicits._
+    val parts = 4
+    val out = tmpDir("graft-relayout") + "/postings"
+    def write(bs: Seq[PostingBlock], key: Seq[org.apache.spark.sql.Column], stats: Boolean) =
+      bs.toDS().repartition(parts, key: _*).sortWithinPartitions($"term", $"salt", $"blockIdx")
+        .write.option("parquet.column.statistics.enabled", stats.toString)
+        .mode("append").parquet(out)
+    layout match {
+      case "hash" => write(blocks, Seq($"term", $"salt"), stats = true)
+      case "range" =>
+        val bounds = TermRanges.boundsOf(
+          blocks.map(b => (TermRanges.utf8(b.term), b.salt, b.n.toDouble)), parts)
+        val router = new TermRangeRouter(bounds._1, bounds._2, parts)
+        val (bare, kept) = blocks.partition(b => noStats(router.partitionOf(
+          org.apache.spark.unsafe.types.UTF8String.fromString(b.term), b.salt)))
+        for ((bs, stats) <- Seq(kept -> true, bare -> false) if bs.nonEmpty)
+          write(bs, Seq(TermRanges.route(spark, bounds, parts, $"term", $"salt")), stats)
+    }
+    Fs.delete(s"$dir/postings")
+    assert(Fs.tryRename(out, s"$dir/postings"))
+    Fs.touch(s"$dir/_STAGE_postings") // new root fingerprint
+    Catalog.invalidate(dir)
+  }
+
+  private def rootFiles(h: IndexBuilder.Handle): Seq[TermRanges.FileRange] = h.snapshot.rootRanges
+
+  // `file:/x` and `file:///x` name the same file
+  private def local(paths: Iterable[String]): Set[String] =
+    paths.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
+
+  test("term-range layout after build and compact; postingsOf = covering root files + segment files") {
+    import spark.implicits._
+    val all = (0 until 90).map(i => Corpus.synthDoc(i, 41L))
+    val idx = tmpDir("graft-ranges-idx")
+    val cfg = IndexBuilder.Config(salts = 4)
+    val h = IndexBuilder.build(spark, all.take(60).toDS(), idx, cfg)
+    val built = rootFiles(h)
+    assert(built.size > 1 && built.forall(_.range.isDefined) && !TermRanges.overlapping(built),
+      "a build writes one term range per file; ranges meet at most at a boundary term")
+    StreamingIngest.appendSegment(spark, all.slice(60, 90).toDS(), 0L, idx,
+      h.stats(spark).avgdl, 4, 1L << 40)
+    val v = h.snapshot
+    assert(v.segmentDirs.size == 1)
+    assert(v.rootRanges eq built, "a segment commit must not re-read the root's footers")
+    val segFiles = Fs.listFiles(v.segmentDirs.head + "/blocks").filter(_.endsWith(".parquet"))
+    for (t <- Seq("the", "import", "def", "zzz_nothing_like_it") ++ h.termstats(spark).collect().map(_.term).take(3)) {
+      val want = built.filter(_.mayHold(TermRanges.utf8(t))).map(_.path) ++ segFiles
+      assert(local(v.postingsOf(spark, Seq(t)).inputFiles) == local(want), s"files read for '$t'")
+    }
+    val before = queries.map(q => q -> byCommit(h, q)).toMap
+    val hc = Compactor.compact(spark, idx, cfg)
+    val folded = rootFiles(hc)
+    assert(folded.size > 1 && folded.forall(_.range.isDefined) && !TermRanges.overlapping(folded),
+      "the fold writes one term range per file")
+    for (q <- queries) assert(byCommit(hc, q) == before(q), s"results changed across the fold for '$q'")
+  }
+
+  test("postings in the older hash layout answer identically, select every file, and compact re-partitions them") {
+    import spark.implicits._
+    val idx = tmpDir("graft-hashlayout-idx")
+    val cfg = IndexBuilder.Config(salts = 4)
+    val h = IndexBuilder.build(spark, (0 until 80).map(i => Corpus.synthDoc(i, 43L)).toDS(), idx, cfg)
+    val qs = queries :+ "merge buffer"
+    def answers(h: IndexBuilder.Handle) = (qs.map(q => byCommit(h, q)),
+      qs.map(q => Searcher.countMatching(spark, h, q).collect().head.getLong(0)),
+      Searcher.termLookup(spark, h, "import").collect().map(_.getLong(0)).toSeq)
+    val before = answers(h)
+    rewritePostings(idx, h.postings(spark).collect().toSeq, "hash")
+    val files = rootFiles(h)
+    assert(files.size == 4 && TermRanges.overlapping(files), "hash files all span the dictionary")
+    for (t <- Seq("the", "import", "def"))
+      assert(h.snapshot.postingsOf(spark, Seq(t)).inputFiles.length == files.size, s"'$t' reads every file")
+    assert(answers(h) == before, "the hash layout must answer identically")
+    val hc = Compactor.compact(spark, idx, cfg)
+    assert(hc.root != idx, "compact folds a hash-layout root into a range-layout epoch")
+    assert(!TermRanges.overlapping(rootFiles(hc)))
+    assert(answers(hc) == before)
+    assert(Compactor.compact(spark, idx, cfg).root == hc.root, "nothing left to fold")
+  }
+
+  test("a postings file written without term statistics is always selected") {
+    import spark.implicits._
+    val idx = tmpDir("graft-nostats-idx")
+    val h = IndexBuilder.build(spark, (0 until 80).map(i => Corpus.synthDoc(i, 47L)).toDS(),
+      idx, IndexBuilder.Config(salts = 4))
+    val before = queries.map(q => q -> byCommit(h, q)).toMap
+    rewritePostings(idx, h.postings(spark).collect().toSeq, "range", noStats = Set(3))
+    val files = rootFiles(h)
+    val bare = files.filter(_.range.isEmpty).map(_.path)
+    assert(bare.size == 1 && files.size > 2, s"files: $files")
+    for (t <- h.termstats(spark).collect().map(_.term)) {
+      val read = local(h.snapshot.postingsOf(spark, Seq(t)).inputFiles)
+      assert(read.contains(local(bare).head) && read.size < files.size, s"files read for '$t': $read")
+    }
+    for (q <- queries) assert(byCommit(h, q) == before(q), s"results changed for '$q'")
+  }
+
+  test("terms with supplementary-plane and U+E000..U+FFFF characters are found") {
+    import spark.implicits._
+    val idx = tmpDir("graft-unicode-idx")
+    val h = IndexBuilder.build(spark, (0 until 80).map(i => Corpus.synthDoc(i, 53L)).toDS(),
+      idx, IndexBuilder.Config(salts = 4))
+    // In UTF-16 code-unit order (String.compareTo) U+1D49C sorts BELOW
+    // U+E000 and U+FFFD; in UTF-8 byte order, Parquet's, above them.
+    def exotic(t: String): String = t.head match {
+      case c if c < 'h' => "\uE000" + t
+      case c if c < 'p' => "\uFFFD" + t
+      case c if c <= 'z' => "\uD835\uDC9C" + t
+      case _ => t
+    }
+    val terms = h.termstats(spark).collect().map(_.term).sorted.grouped(6).map(_.head).toSeq
+    val want = terms.map(t => Searcher.termLookup(spark, h, t).collect().map(_.getLong(0)).toSeq)
+    val ranked = Seq("the import", "def merge").map(q =>
+      Searcher.topK(spark, h, q, 10).collect().toSeq)
+    rewritePostings(idx, h.postings(spark).collect().toSeq.map(b => b.copy(term = exotic(b.term))), "range")
+    val files = rootFiles(h)
+    assert(files.size > 1 && !TermRanges.overlapping(files), s"files: $files")
+    for ((t, ids) <- terms.zip(want))
+      assert(Searcher.termLookup(spark, h, exotic(t)).collect().map(_.getLong(0)).toSeq == ids,
+        s"postings of '${exotic(t)}'")
+    for ((q, hits) <- Seq("the import", "def merge").zip(ranked))
+      assert(Searcher.topKTermsSnap(spark, h.snapshot,
+        graft.analyze.Analyzer.tokens(q, h.mode).toSeq.map(exotic), 10).collect().toSeq == hits)
   }
 
   test("phrase query on an index without the positional tier fails loudly") {

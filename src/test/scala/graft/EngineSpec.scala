@@ -295,6 +295,31 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("term-range postings: a cold probe reads only the files whose range holds its terms") {
+    import graft.index.TermRanges
+    val h = IndexBuilder.build(spark, corpus, tmpDir("graft-ranges-idx"),
+      IndexBuilder.Config(salts = 4, mode = Analyzer.Code))
+    val v = h.snapshot
+    val files = v.rootRanges
+    assert(files.size > 1 && files.forall(_.range.isDefined), s"files: ${files.map(_.path)}")
+    assert(!TermRanges.overlapping(files), "build wrote overlapping term ranges")
+    Searcher.topK(spark, h, "sparkSession", 10).collect() // stats resolved
+    // terms spread over the dictionary that no query fetched yet
+    val vocab = h.termstats(spark).collect().map(_.term).filterNot(Set("spark", "session")).sorted
+    val picks = (1 to 6).map(i => vocab(i * vocab.length / 7))
+    def local(ps: Seq[String]) = ps.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
+    for ((t, i) <- picks.zipWithIndex) {
+      val holding = files.filter(_.mayHold(TermRanges.utf8(t))).map(_.path)
+      assert(holding.size < files.size, s"'$t' must eliminate files")
+      assert(local(v.postingsOf(spark, Seq(t)).inputFiles.toSeq) == local(holding), s"files read for '$t'")
+      val tasks = tasksOf(s"graft-range-probe-$i")(
+        Searcher.topKTermsSnap(spark, v, Seq(t), 10).collect())
+      assert(tasks >= 1 && tasks <= holding.size, s"probe of '$t' ran $tasks tasks over ${holding.size} file(s)")
+    }
+    // a term outside every file's range: empty, and no job at all
+    assert(jobsOf("graft-range-none")(assert(v.postingsOf(spark, Seq("~")).collect().isEmpty)) == 0)
+  }
+
   test("searchAgg's exhaustive composed plan carries NO global sort (no range exchange)") {
     import org.apache.spark.sql.functions._
     // force the distributed WAND path (the coordinator path has no exchange

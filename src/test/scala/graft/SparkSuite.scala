@@ -29,4 +29,12 @@ trait SparkSuite {
     Thread.sleep(300) // status tracker is fed asynchronously
     spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
   }
+
+  /** Number of Spark tasks (over all stages of all jobs) `f` launches. */
+  def tasksOf(group: String)(f: => Unit): Int = {
+    jobsOf(group)(f)
+    val st = spark.sparkContext.statusTracker
+    st.getJobIdsForGroup(group).toSeq.flatMap(st.getJobInfo).flatMap(_.stageIds)
+      .flatMap(st.getStageInfo).map(_.numTasks).sum
+  }
 }
