@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side filesystem helpers routed through Hadoop's FileSystem API, so
@@ -77,6 +77,20 @@ object Fs {
     val (fs, p) = fsOf(path)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).filter(_.isFile).map(_.getPath.toString).sorted.toSeq
+  }
+
+  /** Files directly under `path` with their block locations, sorted by
+    * path — statuses a Spark file index can take without listing again.
+    */
+  def listLocatedFiles(path: String): Seq[LocatedFileStatus] = {
+    val (fs, p) = fsOf(path)
+    if (!fs.exists(p)) Seq.empty
+    else {
+      val buf = Seq.newBuilder[LocatedFileStatus]
+      val it = fs.listLocatedStatus(p)
+      while (it.hasNext) { val s = it.next(); if (s.isFile) buf += s }
+      buf.result().sortBy(_.getPath.toString)
+    }
   }
 
   /** ALL descendant files of `path` (recursive), sorted — fully-qualified

@@ -1,7 +1,10 @@
 package graft.index
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.analyze.Analyzer
 import graft.query.Bm25
@@ -117,11 +120,33 @@ object IndexBuilder {
   def readTable(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
     spark.read.schema(schema).parquet(paths: _*)
 
-  // per-(session, dir, fingerprint, table) union relation of a Snapshot,
-  // and its postingsOf file subsets — resolving one (path globbing + file
-  // listing) is driver work that a query on an unchanged index state need
-  // not repeat; a new state evicts the dir's older entries
-  // (graft.SessionCache.evictStale, the discipline of Searcher's caches)
+  /** The relation `readTable` resolves for the `listed` files plus
+    * `paths`, built from a file index of exactly those: the listed files
+    * keep their statuses, so only `paths` are listed, and DataSource's
+    * per-call path globbing and existence checks (each on a new thread
+    * pool) are skipped. A query reading a subset of listed files thus
+    * makes no filesystem call and starts no thread. For paths known to
+    * exist (listed or committed ones).
+    */
+  def readFiles(spark: SparkSession, schema: StructType, listed: Seq[FileStatus],
+                paths: Seq[String]): DataFrame = {
+    val known = listed.map(s => s.getPath -> Array(s)).toMap
+    val statuses = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = known.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_.getPath) ++ paths.map(new Path(_)),
+      Map.empty, Some(schema), statuses)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  // per-(session, dir, fingerprint, table) union relation of a Snapshot —
+  // resolving one (path globbing + file listing) is driver work that a
+  // query on an unchanged index state need not repeat; a new state evicts
+  // the dir's older entries (graft.SessionCache.evictStale, the discipline
+  // of Searcher's caches)
   private[graft] val relations = new graft.SessionCache[DataFrame]
 
   // per-(dir, root fingerprint) footer term ranges of the root's postings
@@ -130,11 +155,6 @@ object IndexBuilder {
   // once (files hold no session state, so neither does this map)
   private[graft] val rootRangesMemo =
     scala.collection.concurrent.TrieMap.empty[String, Seq[TermRanges.FileRange]]
-
-  // memoized relations per index state (its unions and the pruned file
-  // subsets of postingsOf), at most this many; past it a new subset's
-  // relation is resolved per call
-  private val MaxRelations = 256
 
   /** An immutable view of one Catalog.State: every accessor derives from the
     * SAME (epoch, segments, fingerprint) triple, so a query assembled from
@@ -168,27 +188,18 @@ object IndexBuilder {
       */
     def fingerprint: String = state.fingerprint
 
-    /** The relation `name` of this index state, resolved by `read` once;
-      * past MaxRelations entries for the state, resolved per call.
-      */
-    private def memoized(spark: SparkSession, name: String)(read: => DataFrame): DataFrame = {
-      val m = relations(spark)
-      val prefix = s"$dir|$fingerprint|"
-      m.getOrElse(prefix + name, {
-        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
-        if (m.keysIterator.count(_.startsWith(prefix)) < MaxRelations)
-          m.getOrElseUpdate(prefix + name, read)
-        else read
-      })
-    }
-
     /** The union relation `table` over the root and every live segment
       * (`segTable` under each segment dir), memoized for this index state.
       */
     private def union(spark: SparkSession, table: String, segTable: String,
-                      schema: StructType): DataFrame =
-      memoized(spark, table)(
-        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable")))
+                      schema: StructType): DataFrame = {
+      val m = relations(spark)
+      val prefix = s"$dir|$fingerprint|"
+      m.getOrElseUpdate(prefix + table, {
+        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
+        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable"))
+      })
+    }
 
     def docmeta(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
@@ -257,16 +268,18 @@ object IndexBuilder {
       * qualifies) plus every live segment's blocks, filtered on
       * `term isin terms`; parquet row-group statistics then prune inside
       * the files read. No qualifying file ⇒ an empty Dataset, which runs
-      * no job. Each file subset's relation is memoized for this state.
+      * no job. The relation is built per call from the root files'
+      * statuses, listed with their ranges (`readFiles`): no filesystem call
+      * for root files, and a cost that does not depend on which file
+      * subsets earlier queries read.
       */
     def postingsOf(spark: SparkSession, terms: Seq[String]): Dataset[PostingBlock] = {
       import spark.implicits._
       val keys = terms.map(TermRanges.utf8)
-      val picked = rootRanges.zipWithIndex.filter { case (r, _) => keys.exists(r.mayHold) }
-      val paths = picked.map(_._1.path) ++ segmentDirs.map(_ + "/blocks")
-      if (paths.isEmpty) spark.emptyDataset[PostingBlock]
-      else memoized(spark, "postings@" + picked.map(_._2).mkString(","))(
-          readTable(spark, Tables.Postings, paths))
+      val picked = rootRanges.filter(r => keys.exists(r.mayHold)).map(_.status)
+      val segments = segmentDirs.map(_ + "/blocks")
+      if (picked.isEmpty && segments.isEmpty) spark.emptyDataset[PostingBlock]
+      else readFiles(spark, Tables.Postings, picked, segments)
         .filter(col("term").isin(terms: _*)).as[PostingBlock]
     }
 

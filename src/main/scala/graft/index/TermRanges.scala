@@ -1,6 +1,7 @@
 package graft.index
 
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
@@ -147,11 +148,12 @@ object TermRanges {
     boundsOf(sample, parts)
   }
 
-  /** A postings file and the [min, max] of its `term` column over all its
-    * row groups — None when any row group lacks term statistics (such a
-    * file can hold any term).
+  /** A postings file (its listed status) and the [min, max] of its `term`
+    * column over all its row groups — None when any row group lacks term
+    * statistics (such a file can hold any term).
     */
-  final case class FileRange(path: String, range: Option[(Array[Byte], Array[Byte])]) {
+  final case class FileRange(status: FileStatus, range: Option[(Array[Byte], Array[Byte])]) {
+    def path: String = status.getPath.toString
     def mayHold(term: Array[Byte]): Boolean = range.forall { case (lo, hi) =>
       compareBytes(lo, term) <= 0 && compareBytes(term, hi) <= 0
     }
@@ -164,11 +166,11 @@ object TermRanges {
     * they hold no term.
     */
   def fileRanges(tableDir: String): Seq[FileRange] =
-    Fs.listFiles(tableDir)
-      .filterNot(f => Fs.name(f).startsWith("_") || Fs.name(f).startsWith("."))
+    Fs.listLocatedFiles(tableDir)
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
       .flatMap { f =>
         import scala.jdk.CollectionConverters._
-        val groups = Fs.parquetFooter(f).getBlocks.asScala.toSeq
+        val groups = Fs.parquetFooter(f.getPath.toString).getBlocks.asScala.toSeq
         val perGroup = groups.map { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == "term")
             .map(_.getStatistics)

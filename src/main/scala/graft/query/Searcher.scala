@@ -105,8 +105,8 @@ object Searcher {
     * Fusing the df lookup away is the point: df per term ≡ Σ block n (an
     * index invariant EngineSpec asserts), so a cold coordinator query costs
     * ONE scan job, not a termstats job + a postings job — and no planning
-    * job either: the pruned relation is memoized per index state with a
-    * declared schema (Snapshot), so the probe's collect is the only job
+    * job either: the pruned relation is built from the listed files with
+    * a declared schema (Snapshot), so the probe's collect is the only job
     * (EngineSpec counts it), and its tasks cover only the files read.
     * Residency is bounded by query df — a hot repeated term costs its own
     * postings once, and the whole cache never exceeds MaxCachedPostings.
@@ -295,14 +295,14 @@ object Searcher {
     * query terms' blocks in ONE limited job over `postingsOf(terms)` — the
     * root files whose term range holds a query term plus the live
     * segments, row groups pruned inside them (df derives from the blocks
-    * themselves — no separate termstats job; the relation is memoized per
-    * index state with a declared schema, so no schema-inference job
-    * precedes it; zero jobs when the terms are warm in the per-term
-    * cache). The first query on a new index state also reads every
-    * source's stats in one job (liveStats, memoized per state) and, once
-    * per root, the root postings footers on the driver. If the probe hits
-    * its block bound, the query re-plans as distributed per-salt WAND over
-    * the same pruned relation + a global TakeOrderedAndProject merge.
+    * themselves — no separate termstats job; the relation has a declared
+    * schema, so no schema-inference job precedes it; zero jobs when the
+    * terms are warm in the per-term cache). The first query on a new
+    * index state also reads every source's stats in one job (liveStats,
+    * memoized per state) and, once per root, the root postings footers on
+    * the driver. If the probe hits its block bound, the query re-plans as
+    * distributed per-salt WAND over the same pruned relation + a global
+    * TakeOrderedAndProject merge.
     * Results are identical — salts are disjoint sub-indexes either way
     * (EngineSpec asserts path identity).
     */

@@ -304,14 +304,12 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       .select("docId")
     Compactor.tombstone(spark, idx, dead)
     check("tombstone", paths(25, 60))
-    // seven index states later: the live entries per (dir, table) — the
-    // union, plus the probe's pruned file subset for postings — are all of
-    // the current state: older states were evicted, not leaked
+    // seven index states later: one live entry per (dir, table), all of
+    // the current state — older states were evicted, not leaked
     val keys = IndexBuilder.relations(spark).keys.filter(_.startsWith(s"$idx|")).toSeq
-    val perTable = keys.groupBy(_.split('|').last.takeWhile(_ != '@'))
+    val perTable = keys.groupBy(_.split('|').last)
     assert(perTable.keySet == Set("postings", "docmeta", "termstats") &&
-      perTable.map { case (t, ks) => ks.size == (if (t == "postings") 2 else 1) }.forall(identity),
-      s"stale relations kept: $keys")
+      perTable.values.forall(_.size == 1), s"stale relations kept: $keys")
     assert(keys.forall(_.startsWith(s"$idx|${h.snapshot.fingerprint}|")))
   }
 
