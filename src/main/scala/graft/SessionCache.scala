@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-SparkSession memo maps shared by Engine / Searcher / Similarity.
+/** Per-SparkSession memo maps shared by Engine / LiveMemo / Similarity.
   *
   * Weak keying alone is NOT enough here: several cached values are
   * Datasets/DataFrames, which strongly reference their owning session —
@@ -33,17 +33,6 @@ final class SessionCache[T] {
 }
 
 object SessionCache {
-  /** Drop (and `clean`) every entry of index `dir` not under `keepPrefix`
-    * — the one eviction rule of the per-(dir, fingerprint) index caches
-    * (keys `dir|fingerprint[|…]`): when a query sees a new index state,
-    * the dir's entries for older states go, so a map holds at most one
-    * state per dir instead of leaking one per commit.
-    */
-  def evictStale[T](m: scala.collection.concurrent.TrieMap[String, T],
-                    dir: String, keepPrefix: String)(clean: T => Unit): Unit =
-    m.keys.filter(k => k.startsWith(s"$dir|") && !k.startsWith(keepPrefix))
-      .foreach { stale => m.remove(stale).foreach(clean) }
-
   /** Memoized `.cache()`d plan keyed by (op, sfDir, source content stamp):
     * a same-session delete+rewrite of the source parquet under the SAME
     * path advances the stamp, so the stale entry is evicted (and its cached

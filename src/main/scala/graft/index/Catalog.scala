@@ -24,12 +24,14 @@ object Catalog {
     * (it would be invisible forever). `tombstones` = committed tombstone
     * delta dirs under the active root (docIds deleted from query results
     * until a compaction drops them physically — Compactor.tombstone).
-    * `fingerprint` keys every downstream cache (relations/postings/stats/df/deletes)
-    * — any segment arrival, compaction, tombstone commit, or same-dir
+    * `fingerprint` keys the state's `Live` (Live.scala), which holds all
+    * that queries derive from it (relations, stats, df, blocks, deletes) —
+    * any segment arrival, compaction, tombstone commit, or same-dir
     * rebuild changes it. `rootFingerprint` is its part that names the
     * active root's immutable table files (epoch + table-stage markers): a
     * segment or tombstone commit leaves it unchanged, so what is derived
-    * from the root's files alone (the postings footer ranges) survives.
+    * from the root's files alone (the postings footer ranges) moves to the
+    * next Live.
     */
   final case class State(epoch: Option[String], segments: Seq[String],
                          hidden: Set[String], tombstones: Seq[String],

@@ -286,10 +286,15 @@ object Epochs {
     commit
   }
 
+  // A holder reads and re-stamps its lock from two threads (commit-point
+  // checks, heartbeat). A re-stamp rewrites the file and its checksum
+  // sidecar in two steps, so a read overlapping it can fail its checksum.
+  private val lockFileIO = new Object
+
   /** Re-stamp the lock while it still carries OUR token; a lost lock throws
     * (continuing after a steal is the double-commit the lock prevents).
     */
-  private def refreshMaintLock(dir: String, token: String): Unit = {
+  private def refreshMaintLock(dir: String, token: String): Unit = lockFileIO.synchronized {
     val p = s"$dir/$MaintLock"
     if (!Fs.readString(p).contains(token))
       throw new IllegalStateException(
@@ -297,7 +302,7 @@ object Epochs {
     Fs.writeString(p, token) // re-stamp mtime, keep ownership
   }
 
-  private[graft] def releaseMaintLock(dir: String, token: String): Unit = {
+  private[graft] def releaseMaintLock(dir: String, token: String): Unit = lockFileIO.synchronized {
     val p = s"$dir/$MaintLock"
     if (Fs.readString(p).contains(token)) Fs.delete(p)
   }
@@ -324,10 +329,14 @@ object Epochs {
     val beat = new Thread(() => {
       val period = math.max(maintLockStaleMs / 3, 1000L)
       while (!stop.get()) {
-        try refreshMaintLock(dir, tok)
-        catch { case t: Throwable => fail.set(t); stop.set(true) }
+        // the claim just stamped the lock: the first re-stamp is due a
+        // period later
         var slept = 0L
         while (!stop.get() && slept < period) { Thread.sleep(100); slept += 100 }
+        if (!stop.get()) {
+          try refreshMaintLock(dir, tok)
+          catch { case t: Throwable => fail.set(t); stop.set(true) }
+        }
       }
     }, "graft-maint-heartbeat")
     beat.setDaemon(true)

@@ -155,14 +155,16 @@ object Fs {
   /** Atomic create-if-absent (parents created): true iff this call created
     * the file — the lock-acquisition primitive (Hadoop's createNewFile is
     * atomic on HDFS/local; object stores degrade to best-effort, where the
-    * staleness timeout still bounds the damage).
+    * staleness timeout still bounds the damage). Only "already exists"
+    * means false: any other I/O error (a name too long, a permission)
+    * propagates, or a claim loop would step past it forever.
     */
   def tryCreateNew(path: String): Boolean = {
     beforeMutation("tryCreateNew", path)
     val (fs, p) = fsOf(path)
     fs.mkdirs(p.getParent)
     try fs.createNewFile(p)
-    catch { case _: java.io.IOException => false }
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
   /** Atomic no-overwrite rename: true iff `src` was moved to `dst`. The
@@ -174,7 +176,9 @@ object Fs {
     * FileContext WITHOUT the OVERWRITE option so an existing destination
     * fails: FileSystem.rename on the local filesystem maps to POSIX
     * rename(2), which silently REPLACES the destination — exactly what the
-    * lock put-back path must never do to a freshly claimed lock.
+    * lock put-back path must never do to a freshly claimed lock. Only the
+    * two lost races mean false — the destination exists, or the source is
+    * gone; any other I/O error propagates.
     */
   def tryRename(src: String, dst: String): Boolean = {
     beforeMutation("tryRename", src)
@@ -183,7 +187,9 @@ object Fs {
         new Path(src).toUri, conf)
       fc.rename(new Path(src), new Path(dst))
       true
-    } catch { case _: java.io.IOException => false }
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.io.FileNotFoundException => false
+    }
   }
 
   /** Footer (schema, row groups and their column statistics) of one

@@ -142,33 +142,31 @@ object IndexBuilder {
       None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  // per-(session, dir, fingerprint, table) union relation of a Snapshot —
-  // resolving one (path globbing + file listing) is driver work that a
-  // query on an unchanged index state need not repeat; a new state evicts
-  // the dir's older entries (graft.SessionCache.evictStale, the discipline
-  // of Searcher's caches)
-  private[graft] val relations = new graft.SessionCache[DataFrame]
-
-  // per-(dir, root fingerprint) footer term ranges of the root's postings
-  // files: the files are immutable for that fingerprint, and a segment or
-  // tombstone commit leaves it unchanged, so each root's footers are read
-  // once (files hold no session state, so neither does this map)
-  private[graft] val rootRangesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[TermRanges.FileRange]]
-
   /** An immutable view of one Catalog.State: every accessor derives from the
     * SAME (epoch, segments, fingerprint) triple, so a query assembled from
     * several of these reads one consistent index state no matter what
     * commits concurrently (segment arrival, minor merge, epoch fold).
     *
-    * The batch ∪ segments relations (postingsAll, docmetaAll,
-    * termstatsAll) are resolved ONCE per (session, dir, fingerprint) and
-    * reused by every query on that state: their file lists cannot change
-    * without the fingerprint changing (every commit and every stage
-    * rewrite stamps it — Catalog.scala), so a cold query pays only its
-    * pruned scan.
+    * What is derived from the state — the batch ∪ segments relations,
+    * footer ranges, live stats, delete set, df and block memos — lives in
+    * its `Live` (Live.scala), resolved once per (session, dir,
+    * fingerprint): nothing derived can change without the fingerprint
+    * changing (every commit and every stage rewrite stamps it —
+    * Catalog.scala), so a cold query pays only its pruned scan.
     */
   final case class Snapshot(dir: String, mode: Analyzer.Mode, state: Catalog.State) {
+
+    @transient @volatile private var pinned: Live = null
+    private[index] def pin(live: Live): Unit = pinned = live
+
+    /** This state's Live in `spark`'s session, resolved through the memo
+      * on first use and then kept: a query reading through one Snapshot
+      * reads one Live, whatever commits meanwhile.
+      */
+    private[graft] def live(spark: SparkSession): Live = {
+      val l = pinned
+      if (l != null && (l.spark eq spark)) l else LiveMemo.Default.of(spark, this)
+    }
 
     /** Active table root: `dir` itself (genesis layout) until a compaction
       * has committed, then the epoch directory named by `dir/CURRENT`
@@ -187,19 +185,6 @@ object IndexBuilder {
       * postings/stats.
       */
     def fingerprint: String = state.fingerprint
-
-    /** The union relation `table` over the root and every live segment
-      * (`segTable` under each segment dir), memoized for this index state.
-      */
-    private def union(spark: SparkSession, table: String, segTable: String,
-                      schema: StructType): DataFrame = {
-      val m = relations(spark)
-      val prefix = s"$dir|$fingerprint|"
-      m.getOrElseUpdate(prefix + table, {
-        graft.SessionCache.evictStale(m, dir, prefix)(_ => ())
-        readTable(spark, schema, s"$root/$table" +: segmentDirs.map(_ + s"/$segTable"))
-      })
-    }
 
     def docmeta(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
@@ -248,19 +233,14 @@ object IndexBuilder {
       */
     def postingsAll(spark: SparkSession): Dataset[PostingBlock] = {
       import spark.implicits._
-      union(spark, "postings", "blocks", Tables.Postings).as[PostingBlock]
+      live(spark).postings.as[PostingBlock]
     }
 
     /** Footer term ranges of the root's postings files, read once per
-      * root fingerprint (TermRanges.fileRanges).
+      * root fingerprint (Live.rootRanges; they hold no session state, so
+      * the active session's Live keeps them).
       */
-    def rootRanges: Seq[TermRanges.FileRange] = {
-      val key = s"$dir|${state.rootFingerprint}"
-      rootRangesMemo.getOrElseUpdate(key, {
-        graft.SessionCache.evictStale(rootRangesMemo, dir, key)(_ => ())
-        TermRanges.fileRanges(s"$root/postings")
-      })
-    }
+    def rootRanges: Seq[TermRanges.FileRange] = live(SparkSession.active).rootRanges
 
     /** The postings of `terms` — every term-filtered postings read goes
       * through here. The relation is the root files whose footer term range
@@ -276,7 +256,7 @@ object IndexBuilder {
     def postingsOf(spark: SparkSession, terms: Seq[String]): Dataset[PostingBlock] = {
       import spark.implicits._
       val keys = terms.map(TermRanges.utf8)
-      val picked = rootRanges.filter(r => keys.exists(r.mayHold)).map(_.status)
+      val picked = live(spark).rootRanges.filter(r => keys.exists(r.mayHold)).map(_.status)
       val segments = segmentDirs.map(_ + "/blocks")
       if (picked.isEmpty && segments.isEmpty) spark.emptyDataset[PostingBlock]
       else readFiles(spark, Tables.Postings, picked, segments)
@@ -286,33 +266,11 @@ object IndexBuilder {
     /** Batch docmeta ∪ streamed segments' docmeta. */
     def docmetaAll(spark: SparkSession): Dataset[DocMeta] = {
       import spark.implicits._
-      union(spark, "docmeta", "docmeta", Tables.Docmeta).as[DocMeta]
+      live(spark).docmeta.as[DocMeta]
     }
 
-    /** Live corpus stats over batch + streamed segments, plus the WAND
-      * bound factor. Each source's blocks store maxImpact computed with the
-      * avgdl at ITS build time (`buildAvgdl` — for the batch stage a
-      * deterministic sampled estimate, for segments the append-time value);
-      * the live query avgdl differs. impact(tf,dl,a) is monotone in a with
-      * ratio ≤ max(1, a'/a) (the dl term scales by a/a'), so multiplying
-      * every stored bound by max(1, liveAvgdl / min(buildAvgdl)) keeps
-      * block-max WAND admissible (rank-exact, marginally less pruning);
-      * exact scoring always uses the live avgdl. Every source's stats row
-      * comes from ONE read (one job, whatever the segment count).
-      */
-    def liveStats(spark: SparkSession): (IndexStats, Double) = {
-      val all = readStatsCompat(spark, s"$root/stats" +: segmentDirs.map(_ + "/stats"))
-      if (segmentDirs.isEmpty) {
-        val base = all.head
-        (base, math.max(1.0, base.avgdl / base.buildAvgdl))
-      } else {
-        val n = all.map(_.n).sum
-        val tok = all.map(_.totalTokens).sum
-        val avgdl = tok.toDouble / n.toDouble
-        val minBuild = all.map(_.buildAvgdl).min
-        (IndexStats(n, avgdl, tok, minBuild), math.max(1.0, avgdl / minBuild))
-      }
-    }
+    /** Live corpus stats and the WAND bound factor (Live.stats). */
+    def liveStats(spark: SparkSession): (IndexStats, Double) = live(spark).stats
 
     /** Term dictionary over batch ∪ streamed segments — one multi-path read;
       * a term present in several sources appears once per source (callers
@@ -322,7 +280,7 @@ object IndexBuilder {
       */
     def termstatsAll(spark: SparkSession): Dataset[TermStat] = {
       import spark.implicits._
-      union(spark, "termstats", "termstats", Tables.Termstats).as[TermStat]
+      live(spark).termstats.as[TermStat]
     }
 
     /** Per-term df over batch + segments (query terms only; tiny). */
@@ -442,7 +400,7 @@ object IndexBuilder {
       .sortWithinPartitions(keys.map(col): _*)
       // DISK_ONLY measured better than MEMORY_AND_DISK for this transient
       // shared sort (A/B: eff_2_8 0.865 vs 0.841, +2% wide throughput, no
-      // narrow cost — Probe `withids`): the build's own tokenize/encode
+      // narrow cost): the build's own tokenize/encode
       // passes are allocation-heavy, so keeping the cached batches out of
       // the on-heap store trades cheap page-cache-backed disk reads for
       // execution memory + GC headroom. On a cluster the same logic holds

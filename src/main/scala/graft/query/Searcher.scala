@@ -3,9 +3,8 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analyze.Analyzer
-import graft.index.{Hit, IndexBuilder, PostingBlock}
+import graft.index.{Hit, IndexBuilder, Live, PostingBlock}
 import graft.index.IndexBuilder.Snapshot
-import graft.SessionCache.evictStale
 
 /** Distributed BM25 top-k over the segmented index (SURVEY.md §3.3 Spark
   * restatement): broadcast term stats → per-salt-range DAAT/WAND inside
@@ -27,80 +26,18 @@ object Searcher {
 
   final case class QueryTermStat(term: String, idf: Double)
 
-  // Caches are keyed per SparkSession (graft.SessionCache — sweeps stopped
-  // sessions, since Dataset values pin their session and defeat plain weak
-  // keying) and per (dir, catalog fingerprint): a newly ingested segment or
-  // a compaction changes the fingerprint and invalidates; stale same-dir
-  // entries are evicted, not leaked.
-  private val statsCache = new graft.SessionCache[(graft.index.IndexStats, Double)]
-  // per-(dir, fp, term) COLLECTED posting blocks for the coordinator path —
-  // bounded by MaxCachedPostings, so first-query cost (and residency) scales
-  // with query df, never with index size. The index itself is NOT cached:
-  // the base plan stays a file-eliminated, row-group-pruned parquet scan.
-  private val blockCache = new graft.SessionCache[Array[PostingBlock]]
-  // per-(dir, fp, term) df memo (0 = term absent) — a warm repeated query
-  // runs ZERO Spark jobs before the final top-k materialization.
-  private val dfCache = new graft.SessionCache[java.lang.Long]
-  // opt-in full residency (spark.graft.index.residentPostings=true) for
-  // small fully-resident deployments; default OFF — at 100 TB a first query
-  // must not materialize the whole index into executor storage.
-  private val residentCache = new graft.SessionCache[Dataset[PostingBlock]]
-  // per-(dir, fp) SORTED tombstoned-docId array (Snapshot.tombstoneIds) —
-  // resolved once per index state, consulted by every WAND/lookup path; a
-  // tombstone commit advances the fingerprint and invalidates
-  private val tombCache = new graft.SessionCache[Array[Long]]
-  // per-(dir, fp) BROADCAST of that array, shared by every distributed
-  // query against the same index state (ADVICE r4: re-broadcasting up to
-  // ~80 MB per topK/termLookup call cost repeated driver→executor
-  // transfers and accumulated driver-held broadcast state); stale entries
-  // are destroyed, not just dropped
-  private val tombBcCache =
-    new graft.SessionCache[org.apache.spark.broadcast.Broadcast[Array[Long]]]
-
-  /** Upper bound on postings held in the driver-side block cache (~tens of
-    * MB decoded). Exceeding inserts clear the dir's entries first; a single
-    * query whose blocks alone exceed the bound is served but not cached.
+  /** Upper bound on postings held in the driver-side block memo of a
+    * session (~tens of MB decoded; LiveMemo.keep enforces it). Exceeding
+    * inserts evict other dirs' blocks first; a single query whose blocks
+    * alone exceed the bound is served but not memoized.
     */
   val MaxCachedPostings: Long = 4000000L
 
-  private def liveStats(spark: SparkSession, v: Snapshot): (graft.index.IndexStats, Double) = {
-    val m = statsCache(spark)
-    val key = s"${v.dir}|${v.fingerprint}"
-    m.getOrElseUpdate(key, {
-      evictStale(m, v.dir, key)(_ => ())
-      v.liveStats(spark)
-    })
-  }
-
-  /** Per-term df with memoization; misses resolved in ONE pruned
-    * termstats scan for just the missing terms (Handle.dfFor).
-    */
-  private def dfForCached(spark: SparkSession, v: Snapshot,
-                          terms: Seq[String]): Map[String, Long] = {
-    val m = dfCache(spark)
-    val prefix = s"${v.dir}|${v.fingerprint}|"
-    evictStale(m, v.dir, prefix)(_ => ())
-    // SNAPSHOT the hits first: a concurrent query's evictStale (fingerprint
-    // advanced mid-flight) may remove entries between our check and read —
-    // the result must come from local values only, never a second map read
-    val have: Map[String, Long] =
-      terms.flatMap(t => m.get(prefix + t).map(v => t -> v.longValue())).toMap
-    val missing = terms.filterNot(have.contains)
-    val fetched: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else {
-        val f = v.dfFor(spark, missing)
-        missing.map(t => t -> f.getOrElse(t, 0L)).toMap
-      }
-    fetched.foreach { case (t, v) => m.put(prefix + t, Long.box(v)) }
-    have ++ fetched
-  }
-
   /** Optimistic coordinator fetch: collected blocks for `terms`, served
-    * from the bounded per-term cache; misses fetched in ONE filtered,
-    * LIMITed collect over `postingsOf(missing)` — only the files whose
-    * term range holds a missing term, row groups pruned inside them.
-    * `None` = the fetch hit the block limit — the posting volume is
+    * from the state's bounded per-term memo (Live.blocks); misses fetched
+    * in ONE filtered, LIMITed collect over `postingsOf(missing)` — only the
+    * files whose term range holds a missing term, row groups pruned inside
+    * them. `None` = the fetch hit the block limit — the posting volume is
     * too large for the coordinator, caller takes the distributed path.
     * Fusing the df lookup away is the point: df per term ≡ Σ block n (an
     * index invariant EngineSpec asserts), so a cold coordinator query costs
@@ -109,108 +46,28 @@ object Searcher {
     * a declared schema (Snapshot), so the probe's collect is the only job
     * (EngineSpec counts it), and its tasks cover only the files read.
     * Residency is bounded by query df — a hot repeated term costs its own
-    * postings once, and the whole cache never exceeds MaxCachedPostings.
+    * postings once, and the whole memo never exceeds MaxCachedPostings.
     */
-  private def blocksProbe(spark: SparkSession, v: Snapshot,
-                          terms: Seq[String], maxBlocks: Int,
+  private def blocksProbe(live: Live, terms: Seq[String], maxBlocks: Int,
                           postingsBudget: Long): Option[Seq[PostingBlock]] = {
-    val m = blockCache(spark)
-    val prefix = s"${v.dir}|${v.fingerprint}|"
-    evictStale(m, v.dir, prefix)(_ => ())
-    // SNAPSHOT cache hits before any fetch/eviction: the query's result is
-    // assembled from these local arrays only, so a concurrent (or our own
-    // overflow) eviction can cost a future refetch but never drop a term's
-    // postings from THIS query
-    val have: Map[String, Array[PostingBlock]] =
-      terms.flatMap(t => m.get(prefix + t).map(t -> _)).toMap
+    val have = terms.flatMap(t => live.blocks.get(t).map(t -> _)).toMap
     val missing = terms.filterNot(have.contains)
     val fetchedArr: Array[PostingBlock] =
       if (missing.isEmpty) Array.empty
-      else v.postingsOf(spark, missing).limit(maxBlocks + 1).collect()
+      else live.snapshot.postingsOf(live.spark, missing).limit(maxBlocks + 1).collect()
     if (fetchedArr.length > maxBlocks) return None // volume too large: distribute
     val fetched: Map[String, Array[PostingBlock]] = fetchedArr.groupBy(_.term)
-    if (missing.nonEmpty) {
-      var cached = m.values.iterator.map(_.iterator.map(_.n.toLong).sum).sum
-      missing.foreach { t =>
-        val arr = fetched.getOrElse(t, Array.empty[PostingBlock])
-        val incoming = arr.iterator.map(_.n.toLong).sum
-        if (cached + incoming > MaxCachedPostings) {
-          // enforce the bound globally, but evict OTHER index dirs' entries
-          // first (this dir's warm terms are the likeliest to be re-queried;
-          // clearing everything made a hot index evict a cold neighbor —
-          // VERDICT r3 wrong-item 5)
-          m.keys.filterNot(_.startsWith(s"${v.dir}|")).foreach(m.remove)
-          cached = m.values.iterator.map(_.iterator.map(_.n.toLong).sum).sum
-          if (cached + incoming > MaxCachedPostings) {
-            m.keys.foreach(m.remove)
-            cached = 0L
-          }
-        }
-        if (incoming <= MaxCachedPostings) {
-          m.put(prefix + t, arr)
-          cached += incoming
-        }
-      }
-    }
+    if (missing.nonEmpty)
+      live.keep(missing.map(t => t -> fetched.getOrElse(t, Array.empty[PostingBlock])))
     // the postings budget counts WARM blocks too: a query mixing several
     // cached high-df terms must not run driver-side WAND over up to
     // MaxCachedPostings — the driver-path bound is total postings served,
     // not just freshly fetched ones (ADVICE r3 item 4)
-    val haveN = terms.iterator.flatMap(have.get).map(_.iterator.map(_.n.toLong).sum).sum
+    val haveN = have.valuesIterator.flatten.map(_.n.toLong).sum
     val fetchedN = fetchedArr.iterator.map(_.n.toLong).sum
     if (haveN + fetchedN > postingsBudget) return None
-    Some(terms.flatMap { t =>
-      val arr: Array[PostingBlock] =
-        have.get(t).orElse(fetched.get(t)).getOrElse(Array.empty)
-      arr
-    })
-  }
-
-  private def residentPostings(spark: SparkSession, v: Snapshot): Dataset[PostingBlock] = {
-    val m = residentCache(spark)
-    val key = s"${v.dir}|${v.fingerprint}"
-    m.getOrElseUpdate(key, {
-      evictStale(m, v.dir, key)(_.unpersist(blocking = false))
-      v.postingsAll(spark).cache()
-    })
-  }
-
-  /** Collected delete set for this snapshot (empty ⇒ zero jobs). */
-  private def tombstones(spark: SparkSession, v: Snapshot): Array[Long] = {
-    if (v.tombstoneDirs.isEmpty) return Array.emptyLongArray
-    val m = tombCache(spark)
-    val key = s"${v.dir}|${v.fingerprint}"
-    m.getOrElseUpdate(key, {
-      evictStale(m, v.dir, key)(_ => ())
-      v.tombstoneIds(spark)
-    })
-  }
-
-  /** Broadcast of the delete set, cached per index state and destroyed on
-    * eviction (one broadcast per (dir, fingerprint), not one per query).
-    */
-  private def tombstonesBc(spark: SparkSession, v: Snapshot,
-                           dead: Array[Long]): org.apache.spark.broadcast.Broadcast[Array[Long]] = {
-    val m = tombBcCache(spark)
-    val key = s"${v.dir}|${v.fingerprint}"
-    m.get(key).getOrElse {
-      // build-then-putIfAbsent (NOT getOrElseUpdate): TrieMap may evaluate
-      // a racing default twice, and the losing broadcast (up to ~80 MB)
-      // would be silently dropped with no unpersist — the loser here
-      // unpersists itself and adopts the winner (the ivfTombBcAt pattern)
-      val fresh = spark.sparkContext.broadcast(dead)
-      m.putIfAbsent(key, fresh) match {
-        case None =>
-          // unpersist (not destroy): an in-flight query may still hold the
-          // old fingerprint's broadcast — unpersist frees executor copies
-          // now, the ContextCleaner destroys it once the last reference GCs
-          evictStale(m, v.dir, key)(_.unpersist(blocking = false))
-          fresh
-        case Some(winner) =>
-          fresh.unpersist(blocking = false)
-          winner
-      }
-    }
+    val served = have ++ fetched
+    Some(terms.flatMap(t => served.getOrElse(t, Array.empty[PostingBlock]).toSeq))
   }
 
   /** Liveness predicate over a sorted delete array (Lucene liveDocs). */
@@ -348,7 +205,8 @@ object Searcher {
     import spark.implicits._
     graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val terms = terms0.distinct.sorted
-    val (st0, boundFactor0) = liveStats(spark, v)
+    val live = v.live(spark)
+    val (st0, boundFactor0) = live.stats
     // a FEDERATED caller (topKFederated) scores this index's postings
     // against the UNION's n/avgdl/df (the ES DFS-query-then-fetch global
     // stats). The stored block maxima stay admissible scaled by the avgdl
@@ -367,12 +225,10 @@ object Searcher {
     // optional clauses can never be satisfied
     if (minMatch > nTerms) return spark.emptyDataset[Hit]
     val minM = minMatch
-    val resident = spark.conf.getOption("spark.graft.index.residentPostings")
-      .contains("true")
     // delete set for THIS snapshot (Lucene semantics: tombstoned docs vanish
     // from results immediately; n/avgdl/df stay at their stored values until
     // a compaction purges the deletes for real — see Compactor.tombstone)
-    val dead = tombstones(spark, v)
+    val dead = live.tombstones
 
     // collector admission: tombstone liveness ∧ the search_after score
     // bound (quantized — the cursor lives in score_q space) ∧ the ES
@@ -409,13 +265,11 @@ object Searcher {
       // large-df path: NO caching by design — this is the regime where the
       // posting volume is a meaningful corpus fraction, so the right plan is
       // the pushed-down pruned scan feeding the per-salt WAND, not residency
-      val dfs = dfsOverride.getOrElse(dfForCached(spark, v, terms))
+      val dfs = dfsOverride.getOrElse(live.df(terms))
       val idfs = idfsOf(dfs)
-      val matching =
-        if (resident) residentPostings(spark, v).filter($"term".isin(terms: _*))
-        else v.postingsOf(spark, terms)
+      val matching = v.postingsOf(spark, terms)
       val bIdfs = spark.sparkContext.broadcast(idfs)
-      val bDead = tombstonesBc(spark, v, dead)
+      val bDead = live.tombstonesBc
       // per-query broadcasts (not cached like bDead: allow/deny lists are
       // the query's filters, not index state)
       val bAllow = allowDocs.map(spark.sparkContext.broadcast(_))
@@ -450,20 +304,14 @@ object Searcher {
       else perSalt.orderBy($"score".desc, $"docId".asc).limit(k)
     }
 
-    if (resident) {
-      // conf-gated full residency: one InMemoryRelation serves both paths
-      val blocks = residentPostings(spark, v)
-        .filter($"term".isin(terms: _*)).collect().toSeq
-      if (blocks.iterator.map(_.n.toLong).sum <= driverPathMaxPostings) driverWand(blocks)
-      else distributed()
-    } else if (driverPathMaxPostings <= 0L) distributed()
+    if (driverPathMaxPostings <= 0L) distributed()
     else {
       // optimistic coordinator probe: one limited pruned-scan collect; the
       // block bound keeps coordinator postings ≤ driverPathMaxPostings even
       // when every block is full
       val maxBlocks = math.max(64L,
         driverPathMaxPostings / graft.index.Codec.BlockSize).toInt
-      blocksProbe(spark, v, terms, maxBlocks, driverPathMaxPostings) match {
+      blocksProbe(live, terms, maxBlocks, driverPathMaxPostings) match {
         case Some(blocks) => driverWand(blocks)
         case None => distributed()
       }
@@ -770,22 +618,23 @@ object Searcher {
     val minM = if (conjunctive) terms.length else minMatch
     def result(n: Long): DataFrame = Seq(n).toDF("n")
     if (terms.isEmpty || minM > terms.length) return result(0L)
-    val dead = tombstones(spark, v)
+    val live = v.live(spark)
+    val dead = live.tombstones
     // metadata fast path: one term's live count IS its df (one posting row
     // per doc per term — EngineSpec's df ≡ Σ block n invariant); valid only
     // with no delete set, since df counts tombstoned docs until a compact
     if (terms.length == 1 && minM == 1 && dead.isEmpty)
-      return result(dfForCached(spark, v, terms).getOrElse(terms.head, 0L))
+      return result(live.df(terms).getOrElse(terms.head, 0L))
     val maxBlocks = math.max(64L,
       driverPathMaxPostings / graft.index.Codec.BlockSize).toInt
     val probed =
       if (driverPathMaxPostings <= 0L) None
-      else blocksProbe(spark, v, terms, maxBlocks, driverPathMaxPostings)
+      else blocksProbe(live, terms, maxBlocks, driverPathMaxPostings)
     probed match {
       case Some(blocks) =>
         result(countAtLeast(blocks, minM, liveDocOf(dead)))
       case None =>
-        val bDead = tombstonesBc(spark, v, dead)
+        val bDead = live.tombstonesBc
         val minMf = minM
         v.postingsOf(spark, terms)
           .groupByKey(_.salt)
@@ -915,7 +764,7 @@ object Searcher {
     require(modes.size == 1,
       s"federated indexes disagree on analyzer mode: $modes")
     val snaps = parts.map { case (tag, h) => tag -> h.snapshot }
-    val stats = snaps.map { case (_, v) => liveStats(spark, v)._1 }
+    val stats = snaps.map { case (_, v) => v.liveStats(spark)._1 }
     val n = stats.map(_.n).sum
     val totalTokens = stats.map(_.totalTokens).sum
     // the same float op as a single index's exact avgdl (Σdl / N), so a
@@ -923,7 +772,7 @@ object Searcher {
     val avgdl = totalTokens.toDouble / n
     val union = graft.index.IndexStats(n, avgdl, totalTokens, avgdl)
     val terms = Analyzer.tokens(query, modes.head).toSeq.distinct.sorted
-    val perSnapDfs = snaps.map { case (_, v) => dfForCached(spark, v, terms) }
+    val perSnapDfs = snaps.map { case (_, v) => v.live(spark).df(terms) }
     val dfs: Map[String, Long] =
       terms.map(t => t -> perSnapDfs.map(_.getOrElse(t, 0L)).sum).toMap
     val hits = snaps.map { case (tag, v) =>
@@ -955,12 +804,13 @@ object Searcher {
                    docId: Long): DataFrame = {
     import spark.implicits._
     val v = h.snapshot
-    require(liveDocOf(tombstones(spark, v))(docId),
+    val live = v.live(spark)
+    require(liveDocOf(live.tombstones)(docId),
       s"doc $docId is tombstoned — it no longer matches any query")
-    val (st, _) = liveStats(spark, v)
+    val (st, _) = live.stats
     val terms = Analyzer.tokens(query, v.mode).toSeq.distinct.sorted
     require(terms.nonEmpty, "query analyzed to zero terms")
-    val dfs = dfForCached(spark, v, terms)
+    val dfs = live.df(terms)
     val tgt = docId
     // ≤ |terms| rows by construction (per term, one salt range and one
     // segment's docId range bracket tgt) — the collect is bounded
@@ -990,7 +840,7 @@ object Searcher {
   def termLookup(spark: SparkSession, h: IndexBuilder.Handle, term: String): DataFrame = {
     import spark.implicits._
     val v = h.snapshot
-    val bDead = tombstonesBc(spark, v, tombstones(spark, v))
+    val bDead = v.live(spark).tombstonesBc
     v.postingsOf(spark, Seq(term))
       .flatMap { b =>
         val liveDoc = liveDocOf(bDead.value)

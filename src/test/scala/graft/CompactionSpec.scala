@@ -266,8 +266,10 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     val h = IndexBuilder.Handle(idx, graft.analyze.Analyzer.Simple)
     // the query must see exactly `want`, and each memoized union must list
     // exactly the live files of the snapshot's root and segments
+    val lives = scala.collection.mutable.ArrayBuffer.empty[graft.index.Live]
     def check(step: String, want: Set[String]): Unit = {
       val v = h.snapshot
+      lives += v.live(spark)
       val got = Searcher.topKSnap(spark, v, "zqprobe", Int.MaxValue).toDF()
         .join(v.docmetaAll(spark).toDF(), "docId").select("path").as[String]
         .collect().toSet
@@ -304,13 +306,12 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       .select("docId")
     Compactor.tombstone(spark, idx, dead)
     check("tombstone", paths(25, 60))
-    // seven index states later: one live entry per (dir, table), all of
-    // the current state — older states were evicted, not leaked
-    val keys = IndexBuilder.relations(spark).keys.filter(_.startsWith(s"$idx|")).toSeq
-    val perTable = keys.groupBy(_.split('|').last)
-    assert(perTable.keySet == Set("postings", "docmeta", "termstats") &&
-      perTable.values.forall(_.size == 1), s"stale relations kept: $keys")
-    assert(keys.forall(_.startsWith(s"$idx|${h.snapshot.fingerprint}|")))
+    // seven index states later: the memo holds one state for the dir, the
+    // current one — every older state was retired, not leaked
+    assert(lives.init.forall(_.retired) && !lives.last.retired,
+      s"stale states kept: ${lives.filterNot(_.retired).map(_.fingerprint)}")
+    assert(h.snapshot.live(spark) eq lives.last)
+    assert(lives.last.fingerprint == h.snapshot.fingerprint)
   }
 
   test("tombstones: live deletes vanish from every query path, scores unchanged (Lucene semantics)") {
@@ -702,5 +703,36 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       graft.query.Phrase.search(spark, h, "the import").collect()
     }
     assert(ex.getMessage.contains("positional"))
+  }
+
+  test("a snapshot keeps its state's memo across a commit; the replaced state is retired") {
+    import spark.implicits._
+    val all = (0 until 50).map(i => Corpus.synthDoc(i, 53L))
+    val idx = tmpDir("graft-handover-idx")
+    val h = IndexBuilder.build(spark, all.take(40).toDS(), idx, IndexBuilder.Config(salts = 2))
+    val dead = h.docmeta(spark).collect().map(_.docId).filter(_ % 4 == 0).toSeq
+    Compactor.tombstone(spark, idx, dead.toDF("docId"))
+    def hits(v: IndexBuilder.Snapshot, driverPath: Long) =
+      Searcher.topKSnap(spark, v, "the import", Int.MaxValue,
+        driverPathMaxPostings = driverPath).collect().toSeq
+    val v = h.snapshot
+    // the distributed path ships the delete set as the state's broadcast
+    val pre = hits(v, 0L)
+    assert(pre.nonEmpty && pre.forall(x => !dead.contains(x.docId)))
+    val old = v.live(spark)
+    StreamingIngest.appendSegment(spark, all.slice(40, 50).toDS(), 0L, idx,
+      h.stats(spark).avgdl, 2, 1L << 40)
+    val next = h.snapshot
+    assert(next.fingerprint != v.fingerprint)
+    val post = hits(next, 0L)
+    assert(post.size > pre.size, "a query on the new snapshot must see the appended docs")
+    assert(post == hits(next, Searcher.DriverPathMaxPostings))
+    assert(next.live(spark) ne old)
+    // the replaced state left the memo: retired, its delete-set broadcast
+    // unpersisted — yet a query still holding the old snapshot answers from
+    // the old state on both paths (unpersist, not destroy)
+    assert(old.retired && !next.live(spark).retired)
+    assert(v.live(spark) eq old)
+    assert(hits(v, 0L) == pre && hits(v, Searcher.DriverPathMaxPostings) == pre)
   }
 }

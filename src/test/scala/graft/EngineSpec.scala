@@ -603,4 +603,42 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
     val ids = handle.docmeta(spark).map(_.docId).collect().sorted
     assert(ids.toSeq == (0L until ids.length.toLong))
   }
+
+  test("block memo bound: other dirs' blocks go first; an oversized query is served, not memoized") {
+    import graft.index.LiveMemo
+    import spark.implicits._
+    // each index: 40 rare terms of df 5 and one hot term in every doc
+    def index(seed: Long) = IndexBuilder.build(spark, (0 until 200).map { i =>
+      val d = Corpus.synthDoc(i, seed)
+      d.copy(content = d.content + s" zqrare${i % 40} zqhot")
+    }.toDS(), tmpDir("graft-cap-idx"), IndexBuilder.Config(salts = 2))
+    val (ha, hb) = (index(7L), index(8L))
+    val (ta1, ta2, tb, tbig) = ("zqrare1", "zqrare2", "zqrare3", "zqhot")
+    assert(ha.dfFor(spark, Seq(ta1, ta2, tbig)) == Map(ta1 -> 5L, ta2 -> 5L, tbig -> 200L))
+    assert(hb.dfFor(spark, Seq(tb)) == Map(tb -> 5L))
+    // A's two rare terms fit together, and so do one of A's and B's, but
+    // not all three; the hot term alone exceeds the bound
+    val bound = 3 * 5 - 1
+    val memo = new LiveMemo(bound)
+    val (va, vb) = (ha.snapshot, hb.snapshot)
+    val (la, lb) = (memo.of(spark, va), memo.of(spark, vb))
+    def capped(v: IndexBuilder.Snapshot, t: String) = Searcher.topKTermsSnap(spark, v, Seq(t), 10).collect().toSeq
+    def uncapped(h: IndexBuilder.Handle, t: String) =
+      Searcher.topKTermsSnap(spark, h.snapshot, Seq(t), 10).collect().toSeq
+    assert(capped(vb, tb) == uncapped(hb, tb))
+    assert(capped(va, ta1) == uncapped(ha, ta1))
+    assert(lb.blocks.keySet == Set(tb) && la.blocks.keySet == Set(ta1))
+    // over the bound: B's blocks are evicted, A's warm term stays
+    assert(capped(va, ta2) == uncapped(ha, ta2))
+    assert(lb.blocks.isEmpty && la.blocks.keySet == Set(ta1, ta2))
+    // blocks that alone exceed the bound: answered, not memoized
+    assert(capped(va, tbig) == uncapped(ha, tbig))
+    assert(!la.blocks.contains(tbig))
+    assert(la.blocks.valuesIterator.flatten.map(_.n.toLong).sum <= bound)
+    // and the memo still serves rank-identical answers after the evictions
+    for (t <- Seq(tb, ta1, ta2, tbig)) {
+      val (v, h) = if (t == tb) (vb, hb) else (va, ha)
+      assert(capped(v, t) == uncapped(h, t), s"ranks for '$t'")
+    }
+  }
 }

@@ -241,4 +241,16 @@ class EpochsCrashSpec extends AnyFunSuite with SparkSuite {
   test("ivfAppend returns to the old or the new state after a crash at every filesystem step") {
     ivfCrashes(Similarity.ivfAppend(spark, _, emb.filter(col("vec_id") >= 200)))
   }
+
+  test("Fs claim primitives report only a lost race as false; other I/O errors propagate") {
+    val dir = tmpDir("graft-fs-claim")
+    assert(Fs.tryCreateNew(s"$dir/a") && !Fs.tryCreateNew(s"$dir/a"), "second create must lose")
+    // a name no filesystem accepts is not "already taken": a claim loop
+    // stepping to the next name would step forever
+    intercept[java.io.IOException](Fs.tryCreateNew(s"$dir/${"x" * 300}"))
+    assert(Fs.tryCreateNew(s"$dir/b"))
+    assert(!Fs.tryRename(s"$dir/a", s"$dir/b"), "an existing destination loses")
+    assert(!Fs.tryRename(s"$dir/gone", s"$dir/c"), "a missing source loses")
+    assert(Fs.tryRename(s"$dir/a", s"$dir/c") && Fs.exists(s"$dir/c") && !Fs.exists(s"$dir/a"))
+  }
 }
