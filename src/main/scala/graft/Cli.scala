@@ -134,9 +134,9 @@ object Cli {
           partitions = opt(rest, "--partitions", "0").toInt,
           mode = mode)
         val h = IndexBuilder.build(spark, corpus, indexDir, cfg)
-        // positional tier is an EXPLICIT opt-in: it shuffles every token
-        // occurrence (costs more than all other stages combined), so only
-        // --positions builds it; phrase queries without it fail loudly.
+        // positional tier is an EXPLICIT opt-in: it writes every token
+        // position (a larger table than the postings), so only --positions
+        // builds it; phrase queries without it fail loudly.
         if (flag(rest, "--positions"))
           IndexBuilder.buildPositions(spark, corpus, indexDir, mode, cfg.partitions)
         val st = h.stats(spark)

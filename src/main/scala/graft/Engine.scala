@@ -65,9 +65,9 @@ object Engine {
 
   /** Index plus the OPTIONAL positional tier, provisioned EXPLICITLY here —
     * the driver-fixture analog of `Cli export --positions`. buildPositions
-    * shuffles every token OCCURRENCE (costs more than all other stages
-    * combined), so provisioning lives in this fixture constructor with the
-    * other expensive fixtures (streamedIndexFor, compactedIndexFor), never
+    * writes every token position (a larger table than the postings), so
+    * provisioning lives in this fixture constructor with the other
+    * expensive fixtures (streamedIndexFor, compactedIndexFor), never
     * inside a query-shaped path: a phrase query on an index without the
     * tier fails loudly (Snapshot.positionsAll) instead of building it.
     */

@@ -53,8 +53,7 @@ object CodeTokens {
 
   /** SQL registration: `SELECT code_tokens(content) ...`. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "code_tokens", exprs => CodeTokens(exprs.head), "built-in")
+    Registry.ensure(spark, "code_tokens")(exprs => CodeTokens(exprs.head))
 
   /** Column-world wrapper (registry-routed; Spark 4 keeps Column↔Expression
     * construction internal).

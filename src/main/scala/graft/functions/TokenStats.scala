@@ -71,9 +71,6 @@ object TokenStats {
     * the mode argument must be a string literal.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_stats",
-      exprs => TokenStats(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[UTF8String].toString),
-      "built-in")
+    Registry.ensure(spark, "token_stats")(exprs => TokenStats(exprs.head,
+      exprs(1).eval(InternalRow.empty).asInstanceOf[UTF8String].toString))
 }

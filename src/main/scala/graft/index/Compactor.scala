@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.IndexBuilder.{Config, Handle, Tables, readTable}
 
@@ -8,12 +8,13 @@ import graft.index.IndexBuilder.{Config, Handle, Tables, readTable}
   * entry back into the batch index, producing a new EPOCH whose tables are
   * bit-identical to a fresh `IndexBuilder.build` over the union corpus —
   * without re-tokenizing anything (tokenization dominates build cost; the
-  * fold re-uses the stored dl/sha256/tf and only re-ranks, re-salts and
-  * re-blocks). Reference analog: the ES/Lucene background segment merge the
-  * reference delegates to (SURVEY.md §3.1); without it a long-running
-  * 1 s-trigger ingest accumulates one segment per micro-batch forever and
-  * per-query listing/union cost grows with uptime, while the WAND bound
-  * factor (liveStats) only degrades.
+  * fold re-uses the stored dl/sha256/tf and only re-ranks, then hands the
+  * decoded, remapped rows to the build's writer, TableWriter.writeRoot,
+  * which re-salts and re-blocks them). Reference analog: the ES/Lucene
+  * background segment merge the reference delegates to (SURVEY.md §3.1);
+  * without it a long-running 1 s-trigger ingest accumulates one segment
+  * per micro-batch forever and per-query listing/union cost grows with
+  * uptime, while the WAND bound factor (liveStats) only degrades.
   *
   * What the fold restores:
   *  - ONE postings/docmeta/termstats table again (no per-query multi-path
@@ -123,9 +124,8 @@ object Compactor {
           // buildAvgdl = min over sources: liveStats' min-aggregation sees the
           // same minimum before and after the merge, so the WAND bound factor
           // is unchanged exactly
-          Seq(IndexStats(mergedN, mergedTok.toDouble / mergedN.toDouble, mergedTok,
-              srcStats.map(_.buildAvgdl).min)).toDS()
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/stats")
+          TableWriter.writeStats(spark, s"$out/stats", mergedN, mergedTok,
+            srcStats.map(_.buildAvgdl).min)
         })
       IndexBuilder.runConcurrently(copies)
       // replaces BEFORE the marker: a reader either sees no merged segment
@@ -271,149 +271,51 @@ object Compactor {
       // union would compute (the sample is a pure function of the re-ranked
       // (docId, dl) pairs and the mean a long-sum/long-count) — this is what
       // makes the folded epoch bit-identical to a fresh build, block maxima
-      // included. Derived from the id-assigned frame directly so the three
-      // table folds below have no ordering dependency and run CONCURRENTLY
-      // (same overlap pattern as the build and the ingest writes).
-      // lazy: forced from the fold THREADS (postings usually first), so
-      // the sample job overlaps the docmeta fold instead of serializing
-      // before the concurrent group (same overlap the build's lazy
-      // buildAvgdl does)
+      // included. Lazy: the postings chain forces it, overlapping the
+      // docmeta write.
       lazy val est = IndexBuilder.timedStage("fold-avgdl")(
-        IndexBuilder.estimateBuildAvgdl(
-          assigned.df.select($"docId", $"dl")))
-      val salts = IndexBuilder.effectiveSalts(cfg, n)
+        IndexBuilder.estimateBuildAvgdl(assigned.df.select($"docId", $"dl")))
       val remap = assigned.df.select($"oldDocId", $"docId")
-      val dmAcc = IndexBuilder.newLineageAcc(spark, "docmeta")
-      val poAcc = IndexBuilder.newLineageAcc(spark, "postings")
-
-      val foldDocmeta = () => IndexBuilder.timedStage("fold-docmeta") {
-        assigned.df
-          .select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha256")
-          .as[DocMeta]
-          .mapPartitions(IndexBuilder.tally(dmAcc, "docmeta")(
-            m => m.docId, m => m.docId, m => m.dl.toLong,
-            m => 48L + m.repo.length + m.path.length,
-            m => IndexBuilder.mix3(m.docId,
-              java.lang.Long.parseLong(m.sha256.substring(0, 15), 16),
-              m.commit.hashCode.toLong)))
-          .write.mode("overwrite").parquet(s"$newRoot/docmeta")
-        IndexBuilder.writeLineageRows(spark, newRoot, "docmeta", dmAcc.value)
-      }
-
-      // postings fold: decode → remap docIds → re-salt → range-partition →
-      // re-block. The remap (oldDocId → docId, two longs per doc) is the
-      // only join; AQE broadcasts it while it fits and falls back to a
-      // shuffle join on docId at scale. Shuffle volume = distinct (term,
-      // doc) pairs — the same as the build's postings stage, minus
-      // tokenization. The term ranges come from the sources' termstats
-      // (TermRanges.foldBounds), so no pass samples the decoded postings.
-      val foldPostings = () => IndexBuilder.timedStage("fold-postings") {
-        // force the lazy estimate HERE, on the driver thread (overlapping
-        // the docmeta fold) — referencing `est` directly inside the
-        // mapPartitions closure below would capture the LazyRef and
-        // evaluate the sample JOB inside an executor task (SPARK-28702)
-        val estV = est
-        val sources = oldRoot +: segs
-        val bounds = TermRanges.foldBounds(spark, sources.map(_ + "/termstats"),
-          IndexBuilder.readStatsCompat(spark, sources.map(_ + "/stats")).map(_.totalTokens).sum.toDouble,
-          salts, parts)
-        val decoded = readTable(spark, Tables.Postings,
-            s"$oldRoot/postings" +: segs.map(_ + "/blocks"))
-          .as[PostingBlock]
-          .flatMap { b =>
-            val ds = Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)
-            val tfs = Codec.decodeInts(b.tfs, b.n)
-            val dls = Codec.decodeInts(b.dls, b.n)
-            Iterator.tabulate(b.n)(i => (b.term, ds(i), tfs(i), dls(i)))
-          }.toDF("term", "oldDocId", "tf", "dl")
-        decoded.join(remap, "oldDocId")
-          .select($"term",
-            least(floor($"docId" * salts / math.max(n, 1L)), lit(salts - 1))
-              .cast("int").as("salt"),
-            $"docId", TermDoc.packMeta($"dl", $"tf").as("meta"))
-          .repartition(parts, TermRanges.route(spark, bounds, parts, $"term", $"salt"))
-          .sortWithinPartitions($"term", $"salt", $"docId")
-          .as[TermDoc]
-          .mapPartitions(IndexBuilder.buildBlocks(_, estV))
-          .mapPartitions(IndexBuilder.tally(poAcc, "postings")(
-            b => b.firstDocId, b => b.lastDocId, _ => 1L,
-            b => b.docDeltas.length.toLong + b.tfs.length + b.dls.length,
-            b => IndexBuilder.mix3(b.term.hashCode.toLong,
-              b.salt.toLong * 31 + b.blockIdx,
-              java.util.Arrays.hashCode(b.docDeltas).toLong)))
-          .write.mode("overwrite").parquet(s"$newRoot/postings")
-        IndexBuilder.writeLineageRows(spark, newRoot, "postings", poAcc.value)
-      }
-
-      // positions fold (only if the batch stage was explicitly built):
-      // segments always carry positions; the fold preserves the positional
-      // tier iff the batch index has it (positionsAll requires the batch
-      // stage anyway, so phrase-search capability is unchanged either way).
-      val foldPositions = () => IndexBuilder.timedStage("fold-positions")(
-        if (Fs.exists(s"$oldRoot/positions")) {
-          readTable(spark, Tables.Positions,
-              s"$oldRoot/positions" +: segs.map(_ + "/positions"))
-            .withColumnRenamed("docId", "oldDocId")
+      IndexBuilder.timedStage("fold-tables")(TableWriter.writeRoot(spark, newRoot, parts,
+        new TableWriter.Source {
+          def docmeta: DataFrame = assigned.df
+            .select($"docId", $"repo", $"path", $"commit", $"lang", $"dl", $"sha256")
+          // decode → remap docIds. The remap (oldDocId → docId, two longs
+          // per doc) is the only join; AQE broadcasts it while it fits and
+          // falls back to a shuffle join on docId at scale. Shuffle volume =
+          // distinct (term, doc) pairs — the build's, minus tokenization.
+          def termDocs: DataFrame = readTable(spark, Tables.Postings,
+              s"$oldRoot/postings" +: segs.map(_ + "/blocks"))
+            .as[PostingBlock]
+            .flatMap { b =>
+              val ds = Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)
+              val tfs = Codec.decodeInts(b.tfs, b.n)
+              val dls = Codec.decodeInts(b.dls, b.n)
+              Iterator.tabulate(b.n)(i => (b.term, ds(i), tfs(i), dls(i)))
+            }.toDF("term", "oldDocId", "tf", "dl")
             .join(remap, "oldDocId")
-            .select($"term", $"docId", $"n", $"posDeltas")
-            .repartition(parts, $"term", pmod($"docId", lit(64)))
-            .sortWithinPartitions($"term", $"docId")
-            .write.mode("overwrite").parquet(s"$newRoot/positions")
-          Fs.touch(s"$newRoot/_STAGE_positions")
-        })
-
-      // ---- stats (docmeta lineage tallies) + termstats (pruned read-back
-      // of the fresh postings): each tail depends on exactly ONE of the
-      // table folds (stats ← docmeta's accumulator, termstats ← the fresh
-      // postings files), so each is CHAINED onto its producer's thread
-      // inside one concurrent group instead of running in a second group
-      // behind a barrier — the old shape serialized the whole ~0.7 s tail
-      // after the longest fold even though the docmeta thread sat idle for
-      // most of it (critical path max(docmeta+stats, postings+termstats,
-      // positions) instead of max(folds)+max(tails)). Same jobs, same
-      // writes, same content — only the schedule changes.
-      import scala.jdk.CollectionConverters._
-      val writeStats = () => IndexBuilder.timedStage("fold-writestats") {
-        val tot = dmAcc.value.asScala.groupBy(_.partitionId)
-          .map(_._2.head.termCount).sum
-        val avgdl = tot.toDouble / n.toDouble
-        // whichever thread forces lazy `est` first computes it; the other
-        // blocks on the same lazy-val monitor until it is ready
-        val estV = est
-        Seq(IndexStats(n, avgdl, tot, estV)).toDS()
-          .write.mode("overwrite").parquet(s"$newRoot/stats")
-        IndexBuilder.writeLineageRows(spark, newRoot, "stats",
-          java.util.List.of(LineageRow("stats", 0, 0L, n - 1, 1L, 1L, 24L, n ^ tot)))
-      }
-      val writeTermstats = () => IndexBuilder.timedStage("fold-termstats") {
-        val tsAcc = IndexBuilder.newLineageAcc(spark, "termstats")
-        // persisted before the range sort so the boundary sampler reads the
-        // cached vocab instead of re-running the postings scan + groupBy
-        // (same reasoning and identical-output argument as the build's
-        // termstats stage)
-        val vocab = readTable(spark, Tables.Postings, Seq(s"$newRoot/postings"))
-          .groupBy($"term")
-          .agg(sum($"n").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        vocab
-          // same term-sorted dictionary layout as the batch build
-          // (IndexBuilder termstats stage): prefix/fuzzy scans stay pruned
-          // after a fold
-          .repartitionByRange($"term")
-          .sortWithinPartitions($"term")
-          .as[TermStat]
-          .mapPartitions(IndexBuilder.tally(tsAcc, "termstats")(
-            _ => 0L, _ => 0L, _ => 1L, t => 16L + t.term.length,
-            t => IndexBuilder.mix3(t.term.hashCode.toLong, t.df, 0L)))
-          .write.mode("overwrite").parquet(s"$newRoot/termstats")
-        vocab.unpersist(blocking = false)
-        IndexBuilder.writeLineageRows(spark, newRoot, "termstats", tsAcc.value)
-      }
-      IndexBuilder.timedStage("fold-tables")(
-        IndexBuilder.runConcurrently(Seq(
-          () => { foldDocmeta(); writeStats() },
-          () => { foldPostings(); writeTermstats() },
-          foldPositions)))
+            .select($"term", $"docId", $"dl", $"tf")
+          def n: Long = assigned.n
+          def salts: Int = IndexBuilder.effectiveSalts(cfg, n)
+          // from the sources' termstats: no pass samples the decoded postings
+          def bounds: (Array[Array[Byte]], Array[Int]) = {
+            val sources = oldRoot +: segs
+            TermRanges.foldBounds(spark, sources.map(_ + "/termstats"),
+              IndexBuilder.readStatsCompat(spark, sources.map(_ + "/stats"))
+                .map(_.totalTokens).sum.toDouble, salts, parts)
+          }
+          def buildAvgdl: Double = est
+          // segments always carry positions; the fold keeps the positional
+          // tier iff the batch index has it (positionsAll requires the batch
+          // stage anyway, so phrase-search capability is unchanged)
+          override def positions: Option[DataFrame] =
+            if (!Fs.exists(s"$oldRoot/positions")) None
+            else Some(readTable(spark, Tables.Positions,
+                s"$oldRoot/positions" +: segs.map(_ + "/positions"))
+              .withColumnRenamed("docId", "oldDocId")
+              .join(remap, "oldDocId")
+              .select($"term", $"docId", $"n", $"posDeltas"))
+        }))
     } finally assigned.release()
   }
 }

@@ -6,19 +6,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.analyze.Analyzer
-import graft.query.Bm25
 
 /** Inverted-index build pipeline (SURVEY.md §7.2 M2–M4, north rule).
   *
   * Stages (each a checkpointed table under `indexDir/` with lineage rows —
-  * a failed/killed build resumes at the first incomplete stage):
+  * a failed/killed build resumes at the first incomplete stage), written
+  * by TableWriter as two concurrent chains over one id-assigned corpus:
   *
   *   corpus ──► docmeta  (docId assignment + dl + sha256)
-  *          ──► stats    (N, avgdl — needed before postings: maxImpact)
-  *          ──► postings (salted repartition → sortWithinPartitions →
-  *                        one-pass block build in mapPartitions)
-  *          ──► termstats(df per term + global term max impact)
+  *                ──► stats     (N, avgdl from docmeta's lineage tally)
+  *          ──► postings (salted range repartition → sortWithinPartitions
+  *                        → one-pass block build)
+  *                ──► termstats (df per term + global term max impact)
+  *
+  * Block maxima use a sampled buildAvgdl, so postings do not wait for
+  * stats. The compaction fold writes the same tables through the same
+  * writer from decoded, re-ranked rows (Compactor).
   *
   * Scale design notes (the 100 TB story):
   *  - docIds are a global dense rank over the unique key
@@ -378,7 +383,7 @@ object IndexBuilder {
     * (§7.4 item 1).
     */
   def assignDocIds(spark: SparkSession, corpus: Dataset[CorpusDoc], partitions: Int,
-                   cacheLevel: Option[String] = None): Assigned = {
+                   cacheLevel: StorageLevel = StorageLevel.DISK_ONLY): Assigned = {
     val a = withDenseIds(spark, corpus.toDF(), partitions,
       Seq("repo", "path", "commit"), "docId", cacheLevel)
     a.copy(df = a.df.select("docId", "repo", "path", "commit", "lang", "content"))
@@ -393,22 +398,20 @@ object IndexBuilder {
     */
   def withDenseIds(spark: SparkSession, input: DataFrame, partitions: Int,
                    keys: Seq[String], idCol: String,
-                   cacheLevel: Option[String] = None): Assigned = {
+                   cacheLevel: StorageLevel = StorageLevel.DISK_ONLY): Assigned = {
     import spark.implicits._
     val sorted = input
       .repartitionByRange(partitions, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-      // DISK_ONLY measured better than MEMORY_AND_DISK for this transient
-      // shared sort (A/B: eff_2_8 0.865 vs 0.841, +2% wide throughput, no
-      // narrow cost): the build's own tokenize/encode
+      // DISK_ONLY (the default) measured better than MEMORY_AND_DISK for
+      // this transient shared sort (A/B: eff_2_8 0.865 vs 0.841, +2% wide
+      // throughput, no narrow cost): the build's own tokenize/encode
       // passes are allocation-heavy, so keeping the cached batches out of
       // the on-heap store trades cheap page-cache-backed disk reads for
       // execution memory + GC headroom. On a cluster the same logic holds
       // (executor local disks; a transient build artifact should not
-      // compete with execution memory). Overridable for diskless setups.
-      .persist(org.apache.spark.storage.StorageLevel.fromString(
-        cacheLevel.getOrElse(
-          sys.props.getOrElse("graft.build.cacheLevel", "DISK_ONLY"))))
+      // compete with execution memory).
+      .persist(cacheLevel)
     val counts = sorted.groupBy(spark_partition_id().as("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val maxPid = if (counts.isEmpty) 0 else counts.keys.max + 1
@@ -427,13 +430,6 @@ object IndexBuilder {
     Assigned(df, acc, () => { sorted.unpersist(blocking = false); () })
   }
 
-  private def hashRow(parts: Any*): Long =
-    scala.util.hashing.MurmurHash3.orderedHash(parts).toLong
-
-  /** Build (or resume) the full index at `dir`. Idempotent: stages whose
-    * lineage validates are skipped; otherwise recomputed and atomically
-    * replaced (parquet overwrite = write-then-swap per directory).
-    */
   /** Stage timing to stderr when GRAFT_TIMING=1 or -Dgraft.timing=1 (the
     * CLI's `export --verbose` sets the property).
     */
@@ -475,9 +471,9 @@ object IndexBuilder {
   }
 
   /** Run independent Spark jobs from parallel driver threads; rethrows the
-    * first failure. Used to overlap the docmeta/postings builds (they share
-    * the cached id-assigned input, and local cores are under-occupied by a
-    * single stage's tail) and the ingest segment writes.
+    * first failure. Used to overlap the table writes (they share the cached
+    * id-assigned input, and local cores are under-occupied by a single
+    * stage's tail).
     */
   private[graft] def runConcurrently(thunks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -490,6 +486,10 @@ object IndexBuilder {
     if (errs.get() != null) throw errs.get()
   }
 
+  /** Build (or resume) the full index at `dir`. Idempotent: stages whose
+    * lineage validates are skipped; otherwise recomputed and atomically
+    * replaced (parquet overwrite = write-then-swap per directory).
+    */
   def build(spark: SparkSession, corpus: Dataset[CorpusDoc], dir: String,
             cfg: Config = Config()): Handle = {
     import spark.implicits._
@@ -499,176 +499,41 @@ object IndexBuilder {
     // persist the analyzer mode so readers (Cli search/stats, openHandle)
     // never have to guess how the index was tokenized
     Fs.writeString(s"$dir/analyzer_mode", mode.name)
+    val done = Seq("docmeta", "postings", "stats", "termstats")
+      .filter(stageComplete(spark, dir, _)).toSet
 
-    // docmeta and postings both need the id-assigned corpus; share one
-    // materialization (the sorted-cache inside assignDocIds) instead of
-    // re-running the range-sort shuffle per stage. At extreme scale the
-    // same role is played by a transient sorted table.
-    var sharedIds: Assigned = null
-    def withIds(): DataFrame = {
-      if (sharedIds == null) sharedIds = assignDocIds(spark, corpus, parts)
-      sharedIds.df
-    }
-    graft.functions.TokenStats.register(spark)
-    def tokenStats = call_function("token_stats", $"content", lit(mode.name))
-
-    val docmetaDone = stageComplete(spark, dir, "docmeta")
-    val postingsDone = stageComplete(spark, dir, "postings")
-
-    // sampled buildAvgdl (see estimateBuildAvgdl): from the existing docmeta
-    // when resuming past stage 1, else by tokenizing the ~1/128 sample of
-    // the id-assigned corpus — one cheap job either way, identical value.
-    lazy val buildAvgdl: Double = timedStage("estAvgdl") {
-      val src =
-        if (docmetaDone)
-          readTable(spark, Tables.Docmeta, Seq(s"$dir/docmeta")).select($"docId", $"dl")
-        else withIds().select($"docId", tokenStats.getField("dl").as("dl"))
-      estimateBuildAvgdl(src)
-    }
-
-    // ---- stage 1: docmeta -------------------------------------------------
-    // Pure column expressions (token_stats is a native codegen Expression) —
-    // the only object pass is the lineage tally over the narrow final rows.
-    // Lineage is tallied by an accumulator inside the SAME job that writes
-    // the table (one pass, no read-back job). For docmeta, lineage.termCount
-    // carries Σdl per partition, which lets the stats stage derive (N, avgdl)
-    // with zero additional scans.
-    // When this job runs in-process, its lineage stays on the driver so the
-    // stats stage needs no read-back job at all (resume still reads disk).
-    @volatile var freshDocmetaLineage: Seq[LineageRow] = null
-    def docmetaJob(): Unit = timedStage("docmeta") {
-      val acc = newLineageAcc(spark, "docmeta")
-      val meta = withIds().select($"docId", $"repo", $"path", $"commit", $"lang",
-          tokenStats.getField("dl").as("dl"),
-          sha2($"content", 256).as("sha256"))
-        .as[DocMeta]
-      val instrumented = meta.mapPartitions(tally(acc, "docmeta")(
-        m => m.docId, m => m.docId, m => m.dl.toLong,
-        m => 48L + m.repo.length + m.path.length,
-        m => mix3(m.docId, java.lang.Long.parseLong(m.sha256.substring(0, 15), 16),
-          m.commit.hashCode.toLong)))
-      instrumented.write.mode("overwrite").parquet(s"$dir/docmeta")
-      writeLineageRows(spark, dir, "docmeta", acc.value)
-      freshDocmetaLineage = dedupLineage(acc.value)
-    }
-
-    // ---- stage 2: postings ------------------------------------------------
-    // docIds are deterministic (data-derived), so on a resumed build this
-    // re-derives exactly the ids persisted in docmeta — cheaper than a
-    // 3-string-key shuffle join of docmeta back to corpus; in a fresh
-    // build the persisted dataset from stage 1 is reused directly. Block
-    // maxima use the SAMPLED buildAvgdl so this stage has no dependency on
-    // docmeta/stats — it runs concurrently with docmeta.
-    def postingsJob(est: Double): Unit = timedStage("postings") {
-      val n = sharedIds.n
-      val salts = effectiveSalts(cfg, n)
-      val acc = newLineageAcc(spark, "postings")
-      // tokenize → explode → salt, all in whole-stage codegen (token_stats
-      // evaluated once per row in the projection feeding the Generate);
-      // objects materialize only at the block builder, on narrow TermDoc
-      // rows — never on 1 KB content strings.
-      def tokensOf(ids: DataFrame): DataFrame = ids
-        .select($"docId", tokenStats.as("ts"))
-        .select($"docId", $"ts.dl".as("dl"), explode($"ts.tfs").as("tt"))
-        .select($"tt.term".as("term"),
-          least(floor($"docId" * salts / math.max(n, 1L)), lit(salts - 1))
-            .cast("int").as("salt"),
-          $"docId", TermDoc.packMeta($"dl", $"tt.tf").as("meta"))
-      // range bounds from the (term, salt) keys of a small docId-hash
-      // sample of documents — only the sample is tokenized twice
-      val rate = math.max(1L, n / TermRanges.sampleDocs(parts))
-      val bounds = TermRanges.boundsOf(
-        tokensOf(withIds().filter(pmod(xxhash64($"docId"), lit(rate)) === 0))
-          .select($"term", $"salt").as[(String, Int)].collect().toSeq
-          .map { case (t, s) => (TermRanges.utf8(t), s, 1.0) }, parts)
-      val blocks = tokensOf(withIds())
-        // one term range per partition (TermRanges): a (term, salt) run
-        // stays whole, so blocks and lineage are those of any layout
-        .repartition(parts, TermRanges.route(spark, bounds, parts, $"term", $"salt"))
-        .sortWithinPartitions($"term", $"salt", $"docId")
-        .as[TermDoc]
-        .mapPartitions(buildBlocks(_, est))
-        .mapPartitions(tally(acc, "postings")(
-          b => b.firstDocId, b => b.lastDocId, _ => 1L,
-          b => b.docDeltas.length.toLong + b.tfs.length + b.dls.length,
-          b => mix3(b.term.hashCode.toLong, b.salt.toLong * 31 + b.blockIdx,
-            java.util.Arrays.hashCode(b.docDeltas).toLong)))
-      blocks.write.mode("overwrite").parquet(s"$dir/postings")
-      writeLineageRows(spark, dir, "postings", acc.value)
-    }
-
-    if (!docmetaDone || !postingsDone) {
-      withIds() // materialize the shared sort + exact count once
-      // docmeta does not depend on buildAvgdl, so its job starts
-      // immediately and the (small) sample-avgdl job runs CONCURRENTLY
-      // with it inside the postings thread — the avgdl estimate leaves the
-      // serial critical path entirely (it only gates postings' block
-      // maxima). The lazy val makes a later stage's reference reuse it.
-      val jobs = Seq(
-        if (docmetaDone) None else Some(() => docmetaJob()),
-        if (postingsDone) None else Some(() => postingsJob(buildAvgdl))).flatten
-      // both pending → overlap the two tokenize passes (a single stage's
-      // tasks leave local cores idle at stage tails; two independent jobs
-      // fill them — on a cluster, two jobs pipelined over one cached input)
-      if (jobs.size == 2) runConcurrently(jobs) else jobs.foreach(_())
-    }
-
-    // ---- stages 3+4: stats ∥ termstats ------------------------------------
-    // Independent of each other (stats ← docmeta lineage, termstats ← the
-    // postings table), so they run concurrently — together with the fused
-    // lineage path below this removes ~1s of core-count-independent serial
-    // tail per build, which is pure Amdahl loss at any cluster size.
-    val statsJob =
-      if (stageComplete(spark, dir, "stats")) None else Some(() => timedStage("stats") {
-        // derived from docmeta lineage; when stage 1 ran in-process the
-        // rows are already on the driver — no read-back job at all
-        val lin =
-          if (freshDocmetaLineage != null) freshDocmetaLineage
-          else readTable(spark, Tables.Lineage, Seq(s"$dir/lineage/docmeta"))
-            .as[LineageRow].collect().toSeq
-        val n = lin.map(_.rows).sum
-        val tot = lin.map(_.termCount).sum
-        // avgdl defined as sum/count in double — transliterated identically in
-        // the oracle SQL (DuckDB avg over ints computes the same).
-        val st = IndexStats(n, tot.toDouble / n.toDouble, tot, buildAvgdl)
-        Seq(st).toDS().write.mode("overwrite").parquet(s"$dir/stats")
-        writeLineageRows(spark, dir, "stats",
-          java.util.List.of(LineageRow("stats", 0, 0L, n - 1, 1L, 1L, 24L, n ^ tot)))
-      })
-    val termstatsJob =
-      if (stageComplete(spark, dir, "termstats")) None else Some(() => timedStage("termstats") {
-        // reads back only 3 pruned columns of the just-written postings
-        val acc = newLineageAcc(spark, "termstats")
-        val po = readTable(spark, Tables.Postings, Seq(s"$dir/postings"))
-        // vocab-sized aggregate PERSISTED before the range sort: the range
-        // exchange's boundary sampler executes its child subtree, so an
-        // uncached plan pays the postings scan + groupBy TWICE (once to
-        // sample term boundaries, once for real). Caching the (small)
-        // aggregate makes the sampler read it back instead; rows, order
-        // inside files and lineage are unchanged (the sampler sees the
-        // identical data either way).
-        val vocab = po.groupBy($"term")
-          .agg(sum($"n").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        vocab
-          // range-sort the dictionary on term: prefix-suggest and fuzzy-dict
-          // scans (Lexicon) then prune on parquet min/max term stats instead
-          // of reading the whole vocabulary; the exchange is vocab-sized —
-          // noise next to the postings shuffle it follows
-          .repartitionByRange($"term")
-          .sortWithinPartitions($"term")
-          .as[TermStat]
-          .mapPartitions(tally(acc, "termstats")(
-            _ => 0L, _ => 0L, _ => 1L, t => 16L + t.term.length,
-            t => mix3(t.term.hashCode.toLong, t.df, 0L)))
-          .write.mode("overwrite").parquet(s"$dir/termstats")
-        vocab.unpersist(blocking = false)
-        writeLineageRows(spark, dir, "termstats", acc.value)
-      })
-    val tailJobs = Seq(statsJob, termstatsJob).flatten
-    if (tailJobs.size == 2) runConcurrently(tailJobs) else tailJobs.foreach(_())
-
-    if (sharedIds != null) sharedIds.release()
+    // docmeta and postings both read the id-assigned corpus: one shared
+    // materialization (the sorted cache inside assignDocIds), made only
+    // when one of them is pending. docIds are deterministic, so a resumed
+    // build re-derives exactly the ids persisted in docmeta.
+    val ids =
+      if (done("docmeta") && done("postings")) None
+      else Some(assignDocIds(spark, corpus, parts))
+    // sampled buildAvgdl (see estimateBuildAvgdl): from the existing
+    // docmeta when resuming past it, else from the ~1/128 sample of the
+    // id-assigned corpus — one cheap job either way, identical value. The
+    // postings chain forces it, overlapping the docmeta write.
+    lazy val est: Double = timedStage("estAvgdl")(estimateBuildAvgdl(
+      (if (done("docmeta")) readTable(spark, Tables.Docmeta, Seq(s"$dir/docmeta"))
+       else TableWriter.docmetaOf(ids.get.df, mode)).select($"docId", $"dl")))
+    try TableWriter.writeRoot(spark, dir, parts, new TableWriter.Source {
+        def docmeta: DataFrame = TableWriter.docmetaOf(ids.get.df, mode)
+        def termDocs: DataFrame = TableWriter.termDocsOf(ids.get.df, mode)
+        def n: Long = ids.get.n
+        def salts: Int = effectiveSalts(cfg, n)
+        // range bounds from the (term, salt) keys of a small docId-hash
+        // sample of documents — only the sample is tokenized twice
+        def bounds: (Array[Array[Byte]], Array[Int]) = {
+          val rate = math.max(1L, n / TermRanges.sampleDocs(parts))
+          val sample = ids.get.df.filter(pmod(xxhash64($"docId"), lit(rate)) === 0)
+          TermRanges.boundsOf(
+            TableWriter.keyed(TableWriter.termDocsOf(sample, mode), n, salts)
+              .select($"term", $"salt").as[(String, Int)].collect().toSeq
+              .map { case (t, s) => (TermRanges.utf8(t), s, 1.0) }, parts)
+        }
+        def buildAvgdl: Double = est
+      }, done)
+    finally ids.foreach(_.release())
     // a rebuild in place rewrites tables the catalog may still describe
     // with a TTL-cached state (and fingerprint)
     Catalog.invalidate(dir)
@@ -678,195 +543,35 @@ object IndexBuilder {
   /** OPTIONAL positional index stage — an EXPLICIT build (CLI: `export
     * --positions`; not part of the default build, and a phrase query on an
     * index without it fails loudly rather than launching it implicitly: it
-    * shuffles every token OCCURRENCE, not just distinct (term, doc) pairs,
-    * so it costs more than all other stages combined and an innocent query
-    * must not be able to trigger the most expensive stage of the system).
-    * One row per (term, docId): the 0-based token positions, delta+varint
-    * encoded. docIds re-derive identically from the data (assignDocIds is a
-    * pure function of the corpus — and the compactor's re-rank over
-    * batch∪segments yields the same dense ids as a build over the union
-    * corpus), so the stage can be added to an existing index at any time;
-    * marker + idempotent overwrite make replays safe. Writes into the
-    * handle's ACTIVE root (genesis dir or current epoch).
+    * writes every token position, a larger table than the postings, and an
+    * innocent query must not be able to trigger it). One row per
+    * (term, docId): the 0-based token positions, delta+varint encoded
+    * (TableWriter.positionsOf). docIds re-derive identically from the data
+    * (assignDocIds is a pure function of the corpus — and the compactor's
+    * re-rank over batch∪segments yields the same dense ids as a build over
+    * the union corpus), so the stage can be added to an existing index at
+    * any time; marker + idempotent overwrite make replays safe. Writes into
+    * the handle's ACTIVE root (genesis dir or current epoch).
     */
   def buildPositions(spark: SparkSession, corpus: Dataset[CorpusDoc], dir: String,
                      mode: Analyzer.Mode, partitions: Int = 0): Unit = {
-    import spark.implicits._
     val root = Handle(dir, mode).root
     if (Fs.exists(s"$root/_STAGE_positions")) return
     val parts = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
     val assigned = assignDocIds(spark, corpus, parts)
     try {
-      val occs = assigned.df.select($"docId", $"content").as[(Long, String)]
-        .flatMap { case (docId, content) =>
-          val ts = Analyzer.tokens(content, mode)
-          Iterator.tabulate(ts.length)(i => (ts(i), docId, i))
-        }.toDF("term", "docId", "pos")
-      occs
-        // salted on docId too: a Zipfian hot term's OCCURRENCES (several
-        // percent of all tokens) must not land on one reducer — same skew
-        // the postings stage salts away; a (term, docId) group always stays
-        // whole because the salt is a function of docId
-        .repartition(parts, $"term", pmod($"docId", lit(64)))
-        .sortWithinPartitions($"term", $"docId", $"pos")
-        .as[(String, Long, Int)]
-        .mapPartitions(buildPositionRows)
-        .write.mode("overwrite").parquet(s"$root/positions")
+      TableWriter.writePositions(TableWriter.positionsOf(assigned.df, mode), parts,
+        s"$root/positions")
       Fs.touch(s"$root/_STAGE_positions")
     } finally assigned.release()
   }
-
-  /** Streaming run-length grouper over a (term, docId, pos)-sorted
-    * partition → one PositionsRow per (term, docId).
-    */
-  private[graft] def buildPositionRows(it: Iterator[(String, Long, Int)]): Iterator[PositionsRow] = {
-    val in = it.buffered
-    new Iterator[PositionsRow] {
-      def hasNext: Boolean = in.hasNext
-      def next(): PositionsRow = {
-        val (term, docId, _) = in.head
-        val ps = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (in.hasNext && in.head._1 == term && in.head._2 == docId)
-          ps += in.next()._3.toLong
-        PositionsRow(term, docId, ps.length, Codec.encodeDeltas(ps.toArray, 0L))
-      }
-    }
-  }
-
-  def saltOf(docId: Long, n: Long, salts: Int): Int =
-    math.min(((docId * salts) / math.max(n, 1L)).toInt, salts - 1)
-
-  // MessageDigest.getInstance contends on provider locks when called per
-  // row across many task threads — thread-local instance + manual hex
-  // keeps hashing embarrassingly parallel.
-  private val mdLocal: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("SHA-256"))
-  private val hexChars = "0123456789abcdef".toCharArray
-
-  def sha256Hex(s: String): String = {
-    val md = mdLocal.get()
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(i * 2) = hexChars((d(i) >> 4) & 0xf)
-      out(i * 2 + 1) = hexChars(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
-  /** One-pass block builder over a (term, salt, docId)-sorted partition.
-    * Pure streaming: holds at most one block (128 postings) in memory.
-    */
-  private[graft] def buildBlocks(it: Iterator[TermDoc], avgdl: Double): Iterator[PostingBlock] =
-    new Iterator[PostingBlock] {
-      private val in = it.buffered
-      private var blockIdxFor: (String, Int) = null
-      private var blockIdx = 0
-      def hasNext: Boolean = in.hasNext
-      def next(): PostingBlock = {
-        val head = in.head
-        val key = (head.term, head.salt)
-        if (key != blockIdxFor) { blockIdxFor = key; blockIdx = 0 }
-        val docs = new Array[Long](Codec.BlockSize)
-        val tfs = new Array[Int](Codec.BlockSize)
-        val dls = new Array[Int](Codec.BlockSize)
-        var m = 0
-        var maxImp = 0.0
-        while (m < Codec.BlockSize && in.hasNext &&
-               in.head.term == key._1 && in.head.salt == key._2) {
-          val td = in.next()
-          docs(m) = td.docId; tfs(m) = td.tf; dls(m) = td.dl
-          val imp = Bm25.impact(td.tf, td.dl, avgdl)
-          if (imp > maxImp) maxImp = imp
-          m += 1
-        }
-        val d = java.util.Arrays.copyOf(docs, m)
-        val t = java.util.Arrays.copyOf(tfs, m)
-        val l = java.util.Arrays.copyOf(dls, m)
-        val out = PostingBlock(key._1, key._2, blockIdx, d(0), d(m - 1), m,
-          Codec.encodeDeltas(d, d(0)), Codec.encodeInts(t), Codec.encodeInts(l), maxImp)
-        blockIdx += 1
-        out
-      }
-    }
-
-  // ---- lineage / resume ----------------------------------------------------
 
   private[graft] def mix3(a: Long, b: Long, c: Long): Long = {
     var x = a ^ (b * 0x9e3779b97f4a7c15L) ^ (c * 0xc2b2ae3d27d4eb4fL)
     x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
     x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
     x ^ (x >>> 31)
-  }
-
-  private[index] def newLineageAcc(spark: SparkSession, stage: String) =
-    spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$stage")
-
-  /** Wraps a partition iterator to tally one LineageRow per partition into
-    * the accumulator as rows stream to the writer — lineage costs zero
-    * extra jobs. Task retries/speculation may add duplicate rows for a
-    * partition; tallies are a pure function of that partition's data, so
-    * duplicates are identical and deduped by partitionId on the driver.
-    */
-  private[index] def tally[T](acc: org.apache.spark.util.CollectionAccumulator[LineageRow],
-                       stage: String)(
-      docIdMin: T => Long, docIdMax: T => Long, terms: T => Long,
-      bytes: T => Long, hash: T => Long): Iterator[T] => Iterator[T] = { it =>
-    new Iterator[T] {
-      private val pid = org.apache.spark.TaskContext.getPartitionId()
-      private var mn = Long.MaxValue
-      private var mx = Long.MinValue
-      private var tc = 0L
-      private var rows = 0L
-      private var bs = 0L
-      private var h = 0L
-      private var emitted = false
-      def hasNext: Boolean = {
-        val hn = it.hasNext
-        if (!hn && !emitted) {
-          emitted = true
-          if (rows > 0) acc.add(LineageRow(stage, pid, mn, mx, tc, rows, bs, h))
-        }
-        hn
-      }
-      def next(): T = {
-        val t = it.next()
-        val lo = docIdMin(t); val hi = docIdMax(t)
-        if (lo < mn) mn = lo
-        if (hi > mx) mx = hi
-        tc += terms(t); rows += 1; bs += bytes(t); h ^= hash(t)
-        t
-      }
-    }
-  }
-
-  /** Lineage is written after the stage's table write returns (data is
-    * committed), and the marker file last → crash between data and marker
-    * ⇒ stage recomputes; stageComplete additionally reconciles row counts
-    * against the actual table (SURVEY.md §7.4 item 5: never trust file
-    * existence alone).
-    */
-  /** Accumulator rows → one row per partition (task retries/speculation add
-    * identical duplicates — tallies are pure functions of a partition's
-    * data), sorted for determinism.
-    */
-  private[index] def dedupLineage(rows: java.util.List[LineageRow]): Seq[LineageRow] = {
-    import scala.jdk.CollectionConverters._
-    rows.asScala.groupBy(_.partitionId).map(_._2.head).toSeq.sortBy(_.partitionId)
-  }
-
-  private[index] def writeLineageRows(spark: SparkSession, dir: String, stage: String,
-                               rows: java.util.List[LineageRow]): Unit = {
-    import spark.implicits._
-    val dedup = dedupLineage(rows)
-    // One lineage directory per stage, overwritten on recompute — so a
-    // retried stage never leaves stale lineage that would break validation.
-    dedup.toDS().coalesce(1).write.mode("overwrite").parquet(s"$dir/lineage/$stage")
-    Fs.touch(s"$dir/_STAGE_$stage")
   }
 
   /** A stage is complete iff its marker exists AND its lineage rows exist

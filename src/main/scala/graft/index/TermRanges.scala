@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -106,15 +106,11 @@ object TermRanges {
     */
   def route(spark: SparkSession, bounds: (Array[Array[Byte]], Array[Int]), parts: Int,
             term: Column, salt: Column): Column = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("term_range_route")))
-      registry.createOrReplaceTempFunction(
-        "term_range_route",
-        exprs => TermRangeRoute(exprs(0), exprs(1), new TermRangeRouter(
-          exprs(2).eval(InternalRow.empty).asInstanceOf[ArrayData].toArray[Array[Byte]](BinaryType),
-          exprs(3).eval(InternalRow.empty).asInstanceOf[ArrayData].toIntArray(),
-          exprs(4).eval(InternalRow.empty).asInstanceOf[Int])),
-        "built-in")
+    graft.functions.Registry.ensure(spark, "term_range_route")(exprs =>
+      TermRangeRoute(exprs(0), exprs(1), new TermRangeRouter(
+        exprs(2).eval(InternalRow.empty).asInstanceOf[ArrayData].toArray[Array[Byte]](BinaryType),
+        exprs(3).eval(InternalRow.empty).asInstanceOf[ArrayData].toIntArray(),
+        exprs(4).eval(InternalRow.empty).asInstanceOf[Int])))
     call_function("term_range_route", term, salt,
       typedLit(bounds._1.toSeq), typedLit(bounds._2.toSeq), lit(parts))
   }

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.analyze.Analyzer
-import graft.index.{Catalog, CorpusDoc, DocMeta, Fs, IndexBuilder, IndexStats}
+import graft.index.{Catalog, CorpusDoc, Fs, IndexBuilder, LineageRow, PostingBlock, TableWriter}
 
 /** Live ingest (reference: `ingest` command, commands/ingest.go:22-54) —
   * the Go side is a 1-second poll loop whose whole point is that ingested
@@ -39,6 +40,14 @@ object StreamingIngest {
     * (effectiveSalts caps at 65536).
     */
   val SegmentSaltBase: Int = 1 << 20
+
+  /** Micro-batch shuffle width (capped by the session's): a 1-second
+    * trigger sees at most ~(1<<20) docs and usually a few hundred — 32-way
+    * shuffles there are pure fixed overhead (32 tasks + up to 32 parquet
+    * files per table per segment, which also bloats later listing and
+    * compaction). Wide parallelism belongs to the batch build.
+    */
+  private val IngestPartitions = 4
 
   /** Streamed corpus source: parquet files arriving under `srcDir` with the
     * corpus schema. maxFilesPerTrigger=1 mirrors the reference's
@@ -174,23 +183,22 @@ object StreamingIngest {
       .start()
   }
 
-  /** One micro-batch → one complete, searchable posting segment.
+  /** One micro-batch → one complete, searchable posting segment, written
+    * through the index's table writer (TableWriter).
     * Deterministic within a batch: docIds are the dense rank of
     * (repo, path, commit) from the two-pass assignDocIds (NO global
     * single-partition window), offset into the batch's reserved id range.
     *
     * Job budget (the reference's cadence is a 1-second poll loop, so the
-    * per-batch Spark-job count is the latency driver): exactly FOUR jobs
-    * touch data — the assignDocIds count pass (which also materializes the
-    * sorted cache all three writers reuse) and the docmeta / blocks /
-    * positions writes. Everything else rides those jobs: the batch count
-    * comes from assignDocIds' per-partition counts, Σdl is tallied by an
-    * accumulator inside the docmeta write, and per-term df/maxImpact by an
-    * accumulator inside the blocks write (both deduped by partitionId — the
-    * tallies are pure functions of a partition's data, so task-retry
-    * duplicates are identical). stats/termstats then write from driver-local
-    * rows with no table re-read. (The first version ran ~8 jobs incl. two
-    * full re-reads and overran the 1 s trigger.)
+    * per-batch Spark-job count is the latency driver): 12 jobs — 5 assign
+    * the dense ids (range sample, the persisted sort all writers reuse and
+    * its per-partition count), 1 writes docmeta, 2 each (shuffle, write)
+    * write blocks and positions, and 1 each writes stats and termstats.
+    * Nothing re-reads a table: the batch count comes from assignDocIds'
+    * per-partition counts, Σdl from docmeta's lineage tally, and per-term
+    * df/maxImpact from a tally inside the blocks write (both deduped by
+    * partitionId — task-retry duplicates are identical), so stats and
+    * termstats write from driver-local rows.
     */
   private[graft] def appendSegment(spark: SparkSession, batch: Dataset[CorpusDoc],
                                        batchId: Long, indexDir: String, avgdl: Double,
@@ -207,19 +215,13 @@ object StreamingIngest {
       s"segment name batch=$batchId was folded by a previous compaction — " +
         "restarting batch ids against a compacted index requires a fresh " +
         "checkpoint offset (or keep the original checkpoint dir)")
-    // Micro-batch parallelism is sized to the BATCH, not the session: a
-    // 1-second trigger sees at most ~(1<<20) docs and usually a few hundred
-    // — 32-way shuffles there are pure fixed overhead (32 tasks + up to 32
-    // parquet files per table per segment, which also bloats later listing
-    // and compaction). Wide parallelism belongs to the batch build.
-    val parts = math.min(spark.sessionState.conf.numShufflePartitions,
-      sys.props.getOrElse("graft.ingest.partitions", "4").toInt)
+    val parts = math.min(spark.sessionState.conf.numShufflePartitions, IngestPartitions)
     // micro-batches stay ON-HEAP: the DISK_ONLY default that wins for the
     // 600k-doc batch build (A/B in BENCH/BASELINE.md) would add per-batch
     // disk round-trips to the latency-critical 1 s-trigger path for a cache
     // of a few hundred rows
     val assigned = IndexBuilder.assignDocIds(spark, batch, parts,
-      cacheLevel = Some("MEMORY_AND_DISK"))
+      cacheLevel = StorageLevel.MEMORY_AND_DISK)
     try {
       val cnt = assigned.n
       if (cnt == 0) return
@@ -227,26 +229,8 @@ object StreamingIngest {
       val base = baseDocId + batchId * (1L << 20)
       val saltBase = SegmentSaltBase.toLong + batchId * salts
       require(saltBase + salts <= Int.MaxValue, s"segment salt namespace exhausted at batch $batchId")
+      val ids = assigned.df.withColumn("docId", $"docId" + base)
 
-      // foreachBatch hands a Dataset bound to the stream's CLONED session —
-      // temp functions must be registered there, not (only) on the outer one
-      graft.functions.TokenStats.register(batch.sparkSession)
-      graft.functions.TokenStats.register(spark)
-      val tokenStats = call_function("token_stats", $"content", lit(mode.name))
-      val withIds = assigned.df.select(($"docId" + base).as("docId"),
-        $"repo", $"path", $"commit", $"lang", $"content",
-        // docId-range salt over the batch's dense ranks
-        (lit(saltBase) + least(floor($"docId" * salts / cnt), lit(salts - 1)))
-          .cast("int").as("salt"))
-
-      // The three table writes are independent once the id-assigned sort is
-      // materialized (the count pass inside assignDocIds did that), so they
-      // run CONCURRENTLY — wall time per batch ≈ count job + the slowest
-      // write + the tiny driver-local stats writes, instead of the sum.
-      val dlAcc = spark.sparkContext
-        .collectionAccumulator[(Int, Long)](s"segment-dl-$batchId")
-      val tsAcc = spark.sparkContext
-        .collectionAccumulator[(Int, Map[String, (Long, Double)])](s"segment-ts-$batchId")
       // the per-batch vocabulary must fit on the driver (the termstats tally
       // ships one map per partition): bounded in practice by the 2^20 batch
       // cap, but a pathological batch (huge distinct-term docs) must fail
@@ -254,25 +238,22 @@ object StreamingIngest {
       // (VERDICT r3 wrong-item 3). Resolved driver-side, captured below.
       val maxTermsPerPartition =
         sys.props.getOrElse("graft.ingest.maxTermsPerPartition", "1000000").toInt
-      val writers = Seq(
-        // docmeta, Σdl tallied in-flight (no re-read job)
-        () => withIds.select($"docId", $"repo", $"path", $"commit", $"lang",
-            tokenStats.getField("dl").as("dl"), sha2($"content", 256).as("sha256"))
-          .as[DocMeta]
-          .mapPartitions(perPartitionTally[DocMeta, Long](dlAcc, 0L)((s, m) => s + m.dl))
-          .write.mode("overwrite").parquet(s"$segDir/docmeta"),
-        // posting blocks, per-term (df, maxImpact) tallied in-flight
-        () => withIds
-          .select($"docId", $"salt", tokenStats.as("ts"))
-          .select($"docId", $"salt", $"ts.dl".as("dl"), explode($"ts.tfs").as("tt"))
-          .select($"tt.term".as("term"), $"salt", $"docId",
-            graft.index.TermDoc.packMeta($"dl", $"tt.tf").as("meta"))
-          .repartition(parts, $"term", $"salt")
-          .sortWithinPartitions($"term", $"salt", $"docId")
-          .as[graft.index.TermDoc]
-          .mapPartitions(IndexBuilder.buildBlocks(_, avgdl))
-          .mapPartitions(perPartitionTally[graft.index.PostingBlock,
-              Map[String, (Long, Double)]](tsAcc, Map.empty) { (m, b) =>
+      val termAcc = TableWriter.tallyAcc[Map[String, (Long, Double)]](spark, s"segment-ts-$batchId")
+      @volatile var docmetaLineage: Seq[LineageRow] = Nil
+      // The three table writes are independent once the id-assigned sort is
+      // materialized (the count pass inside assignDocIds did that), so they
+      // run CONCURRENTLY — wall time per batch ≈ count job + the slowest
+      // write + the tiny driver-local stats writes, instead of the sum.
+      IndexBuilder.runConcurrently(Seq(
+        () => docmetaLineage = TableWriter.writeDocmeta(spark,
+          TableWriter.docmetaOf(ids, mode), s"$segDir/docmeta"),
+        // a segment's blocks are hash partitioned: its termstats come from
+        // the in-flight tally, not from a range-sorted read-back
+        () => TableWriter.writeBlocks(
+            TableWriter.keyed(TableWriter.termDocsOf(assigned.df, mode), cnt, salts,
+              saltBase, base),
+            Seq($"term", $"salt"), parts, avgdl, s"$segDir/blocks")(
+          TableWriter.tallied(termAcc, Map.empty[String, (Long, Double)]) { (m, b: PostingBlock) =>
             require(m.contains(b.term) || m.size < maxTermsPerPartition,
               s"micro-batch distinct-term tally exceeded $maxTermsPerPartition " +
                 "terms in one partition — the per-batch vocabulary must fit on " +
@@ -280,32 +261,18 @@ object StreamingIngest {
                 "-Dgraft.ingest.maxTermsPerPartition")
             val (df0, mi0) = m.getOrElse(b.term, (0L, 0.0))
             m.updated(b.term, (df0 + b.n, math.max(mi0, b.maxImpact)))
-          })
-          .write.mode("overwrite").parquet(s"$segDir/blocks"),
+          }),
         // positional postings — phrase search over the live union must see
         // streamed docs too (the batch positions stage is an explicit build;
-        // per-batch occurrence volume is small, so segments carry positions
+        // per-batch volume is small, so segments carry positions
         // unconditionally)
-        () => withIds.select($"docId", $"content").as[(Long, String)]
-          .flatMap { case (docId, content) =>
-            val ts = Analyzer.tokens(content, mode)
-            Iterator.tabulate(ts.length)(i => (ts(i), docId, i))
-          }.toDF("term", "docId", "pos")
-          .repartition(parts, $"term", pmod($"docId", lit(64)))
-          .sortWithinPartitions($"term", $"docId", $"pos")
-          .as[(String, Long, Int)]
-          .mapPartitions(IndexBuilder.buildPositionRows)
-          .write.mode("overwrite").parquet(s"$segDir/positions"))
-      IndexBuilder.runConcurrently(writers)
+        () => TableWriter.writePositions(TableWriter.positionsOf(ids, mode), parts,
+          s"$segDir/positions")))
 
       // driver-local writes (tiny): per-segment corpus stats — n + Σdl, with
       // the avgdl the blocks' maxImpact was computed against (liveStats uses
-      // it for the WAND bound factor) — and per-term stats, both from the
-      // accumulators deduped by partitionId
-      import scala.jdk.CollectionConverters._
-      val tok = dlAcc.value.asScala.groupBy(_._1).map(_._2.head._2).sum
-      val segAvgdl = tok.toDouble / cnt.toDouble
-      val termstats = tsAcc.value.asScala.groupBy(_._1).map(_._2.head._2)
+      // it for the WAND bound factor) — and per-term stats
+      val termstats = TableWriter.perPartition(termAcc).map(_._2)
         .foldLeft(Map.empty[String, (Long, Double)]) { (acc, m) =>
           m.foldLeft(acc) { case (a, (t, (df, mi))) =>
             val (df0, mi0) = a.getOrElse(t, (0L, 0.0))
@@ -313,8 +280,8 @@ object StreamingIngest {
           }
         }
       IndexBuilder.runConcurrently(Seq(
-        () => Seq(IndexStats(cnt, segAvgdl, tok, avgdl)).toDS()
-          .write.mode("overwrite").parquet(s"$segDir/stats"),
+        () => TableWriter.writeStats(spark, s"$segDir/stats", cnt,
+          docmetaLineage.map(_.termCount).sum, avgdl),
         () => termstats.toSeq.map { case (t, (df, mi)) => (t, df, mi) }
           .toDF("term", "df", "maxImpact")
           .coalesce(1).write.mode("overwrite").parquet(s"$segDir/termstats")))
@@ -323,33 +290,6 @@ object StreamingIngest {
       Fs.touch(s"$segDir/_DONE")
       Catalog.invalidate(indexDir)
     } finally assigned.release()
-  }
-
-  /** Wraps a partition iterator to fold rows into a per-partition tally and
-    * add ONE (partitionId, tally) entry to `acc` as the writer drains the
-    * stream — the driver dedupes by partitionId (task retries re-tally the
-    * same data). Same pattern as IndexBuilder's lineage `tally`.
-    */
-  private def perPartitionTally[T, S](
-      acc: org.apache.spark.util.CollectionAccumulator[(Int, S)], zero: S)(
-      foldRow: (S, T) => S): Iterator[T] => Iterator[T] = { it =>
-    new Iterator[T] {
-      private val pid = org.apache.spark.TaskContext.getPartitionId()
-      private var s = zero
-      private var any = false
-      private var emitted = false
-      def hasNext: Boolean = {
-        val hn = it.hasNext
-        if (!hn && !emitted) { emitted = true; if (any) acc.add((pid, s)) }
-        hn
-      }
-      def next(): T = {
-        val t = it.next()
-        s = foldRow(s, t)
-        any = true
-        t
-      }
-    }
   }
 
   /** Live metrics stream (the reference's `stats`/`es-stats` loop as a

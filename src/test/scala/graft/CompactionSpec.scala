@@ -23,6 +23,31 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       .select(col("commit"), col("score"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
 
+  private def rowsOf(root: String, table: String): Seq[String] =
+    spark.read.parquet(s"$root/$table").collect()
+      .map(_.toSeq.map { case x: Array[Byte] => x.toSeq; case x => x }.mkString("|")).sorted.toSeq
+
+  /** termstats rows, lineage rows and (when given) positions rows equal
+    * between two roots. A fold takes its postings term ranges from the
+    * sources' termstats and a build from a doc sample, so their postings
+    * files split the same blocks at different terms: the postings lineage
+    * is compared as its per-table totals.
+    */
+  private def sameTailTables(a: IndexBuilder.Handle, b: IndexBuilder.Handle,
+                             positions: Boolean = false): Unit = {
+    for (t <- Seq("termstats", "lineage/docmeta", "lineage/stats", "lineage/termstats") ++
+           (if (positions) Seq("positions") else Nil)) {
+      val ra = rowsOf(a.root, t)
+      assert(ra.nonEmpty && ra == rowsOf(b.root, t), s"$t rows differ")
+    }
+    def postingsTotals(h: IndexBuilder.Handle) = {
+      val l = h.lineage(spark).collect().filter(_.stage == "postings")
+      (l.map(_.docIdMin).min, l.map(_.docIdMax).max, l.map(_.termCount).sum,
+        l.map(_.rows).sum, l.map(_.bytes).sum, l.map(_.contentHash).reduce(_ ^ _))
+    }
+    assert(postingsTotals(a) == postingsTotals(b), "postings lineage totals differ")
+  }
+
   test("compact folds all segments: results bit-identical, boundFactor 1.0, epoch == fresh build") {
     import spark.implicits._
     val all = (0 until 90).map(i => Corpus.synthDoc(i, 17L))
@@ -58,6 +83,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
         b.docDeltas.toSeq, b.tfs.toSeq, b.dls.toSeq)
     assert(hc.postings(spark).collect().map(blockKey).sortBy(_.toString).toSeq ==
       hAll.postings(spark).collect().map(blockKey).sortBy(_.toString).toSeq)
+    sameTailTables(hc, hAll)
     // ...and searches over the two are bit-identical including docIds
     for (q <- queries)
       assert(Searcher.topK(spark, hc, q, Int.MaxValue).collect().toSeq ==
@@ -110,6 +136,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     IndexBuilder.buildPositions(spark, all.toDS(), idxAll, hAll.mode)
     assert(graft.query.Phrase.search(spark, hc, "the import").collect().toSeq ==
       graft.query.Phrase.search(spark, hAll, "the import").collect().toSeq)
+    sameTailTables(hc, hAll, positions = true)
   }
 
   test("minor merge concatenates segments: one segment, identical results, same bound factor") {
@@ -359,6 +386,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     val idxSurv = tmpDir("graft-tombc-surv")
     val cfg = IndexBuilder.Config(salts = 4)
     val h = IndexBuilder.build(spark, all.take(70).toDS(), idx, cfg)
+    IndexBuilder.buildPositions(spark, all.take(70).toDS(), idx, h.mode)
     StreamingIngest.appendSegment(spark, all.drop(70).toDS(), 0L, idx,
       h.stats(spark).avgdl, 4, 1L << 40)
     // tombstone a batch-index subset AND a streamed subset (commit-keyed)
@@ -373,6 +401,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     // (re-ranked dense ids), postings blocks, searches
     val surv = all.filterNot(d => deadCommits(d.commit))
     val hS = IndexBuilder.build(spark, surv.toDS(), idxSurv, cfg)
+    IndexBuilder.buildPositions(spark, surv.toDS(), idxSurv, hS.mode)
     assert(hc.stats(spark) == hS.stats(spark))
     assert(hc.docmeta(spark).collect().sortBy(_.docId).toSeq ==
       hS.docmeta(spark).collect().sortBy(_.docId).toSeq)
@@ -381,6 +410,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
         b.docDeltas.toSeq, b.tfs.toSeq, b.dls.toSeq)
     assert(hc.postings(spark).collect().map(blockKey).sortBy(_.toString).toSeq ==
       hS.postings(spark).collect().map(blockKey).sortBy(_.toString).toSeq)
+    sameTailTables(hc, hS, positions = true)
     for (q <- queries)
       assert(Searcher.topK(spark, hc, q, Int.MaxValue).collect().toSeq ==
         Searcher.topK(spark, hS, q, Int.MaxValue).collect().toSeq)
