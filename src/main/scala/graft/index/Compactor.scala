@@ -112,10 +112,13 @@ object Compactor {
           "blocks" -> Tables.Postings, "positions" -> Tables.Positions).map { case (t, schema) =>
         () => readTable(spark, schema, segs.map(_ + s"/$t"))
           .coalesce(4).write.mode("overwrite").parquet(s"$out/$t") } ++ Seq(
+        // aggregated in one partition, which already satisfies the
+        // aggregate's distribution: no exchange
         () => readTable(spark, Tables.Termstats, segs.map(_ + "/termstats"))
+          .coalesce(1)
           .groupBy($"term")
           .agg(sum($"df").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
-          .coalesce(1).sortWithinPartitions($"term")
+          .sortWithinPartitions($"term")
           .write.mode("overwrite").parquet(s"$out/termstats"),
         () => {
           val srcStats = IndexBuilder.readStatsCompat(spark, segs.map(_ + "/stats"))

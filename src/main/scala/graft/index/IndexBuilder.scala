@@ -207,7 +207,11 @@ object IndexBuilder {
       readStatsCompat(spark, Seq(s"$root/stats")).head
     def lineage(spark: SparkSession): Dataset[LineageRow] = {
       import spark.implicits._
-      readTable(spark, Tables.Lineage, Seq(s"$root/lineage/*")).as[LineageRow]
+      // the listed stage dirs: a glob path would send Spark's metadata-dir
+      // probe to a literal `*` dir, which warns with a stack trace per read
+      val stages = Fs.listDirs(s"$root/lineage")
+      if (stages.isEmpty) spark.emptyDataset[LineageRow]
+      else readTable(spark, Tables.Lineage, stages).as[LineageRow]
     }
 
     /** Positional postings (present only after buildPositions). */
@@ -382,10 +386,9 @@ object IndexBuilder {
     * identical partitioning — ids are a pure function of the data
     * (§7.4 item 1).
     */
-  def assignDocIds(spark: SparkSession, corpus: Dataset[CorpusDoc], partitions: Int,
-                   cacheLevel: StorageLevel = StorageLevel.DISK_ONLY): Assigned = {
+  def assignDocIds(spark: SparkSession, corpus: Dataset[CorpusDoc], partitions: Int): Assigned = {
     val a = withDenseIds(spark, corpus.toDF(), partitions,
-      Seq("repo", "path", "commit"), "docId", cacheLevel)
+      Seq("repo", "path", "commit"), "docId")
     a.copy(df = a.df.select("docId", "repo", "path", "commit", "lang", "content"))
   }
 
@@ -397,13 +400,12 @@ object IndexBuilder {
     * union without touching content.
     */
   def withDenseIds(spark: SparkSession, input: DataFrame, partitions: Int,
-                   keys: Seq[String], idCol: String,
-                   cacheLevel: StorageLevel = StorageLevel.DISK_ONLY): Assigned = {
+                   keys: Seq[String], idCol: String): Assigned = {
     import spark.implicits._
     val sorted = input
       .repartitionByRange(partitions, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-      // DISK_ONLY (the default) measured better than MEMORY_AND_DISK for
+      // DISK_ONLY measured better than MEMORY_AND_DISK for
       // this transient shared sort (A/B: eff_2_8 0.865 vs 0.841, +2% wide
       // throughput, no narrow cost): the build's own tokenize/encode
       // passes are allocation-heavy, so keeping the cached batches out of
@@ -411,7 +413,7 @@ object IndexBuilder {
       // execution memory + GC headroom. On a cluster the same logic holds
       // (executor local disks; a transient build artifact should not
       // compete with execution memory).
-      .persist(cacheLevel)
+      .persist(StorageLevel.DISK_ONLY)
     val counts = sorted.groupBy(spark_partition_id().as("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val maxPid = if (counts.isEmpty) 0 else counts.keys.max + 1

@@ -16,7 +16,7 @@ import graft.query.Bm25
   *    (`termCount`), so the stats row needs no scan.
   *  - postings: one row per distinct (term, doc), salted by docId range
   *    (`keyed`), partitioned so a (term, salt) run stays whole — term
-  *    ranges for a root (TermRanges), a hash for a segment — sorted by
+  *    ranges for a root (TermRanges), one partition for a segment — sorted by
   *    (term, salt, docId) and cut into blocks in one streaming pass.
   *  - termstats: a root's dictionary, aggregated from its fresh postings
   *    and written range-sorted on term.
@@ -186,16 +186,17 @@ object TableWriter {
   }
 
   /** Write the posting blocks of `keyed` rows to `path`: `partitioning`
-    * keeps every (term, salt) run whole in one of `parts` partitions, a
-    * sort by (term, salt, docId) orders it, and one streaming pass cuts it
-    * into blocks whose maxima are computed at `buildAvgdl`. `tally`
-    * observes the blocks as they stream to the writer.
+    * keeps every (term, salt) run whole in one of `parts` partitions (see
+    * `partitioned`), a sort by (term, salt, docId) orders it, and one
+    * streaming pass cuts it into blocks whose maxima are computed at
+    * `buildAvgdl`. `tally` observes the blocks as they stream to the
+    * writer.
     */
   def writeBlocks(keyed: DataFrame, partitioning: Seq[Column], parts: Int, buildAvgdl: Double,
                   path: String)(tally: Iterator[PostingBlock] => Iterator[PostingBlock]): Unit = {
     val spark = keyed.sparkSession
     import spark.implicits._
-    keyed.repartition(parts, partitioning: _*)
+    partitioned(keyed, parts, partitioning)
       .sortWithinPartitions($"term", $"salt", $"docId")
       .as[TermDoc]
       .mapPartitions(buildBlocks(_, buildAvgdl))
@@ -248,10 +249,18 @@ object TableWriter {
   def writePositions(rows: DataFrame, parts: Int, path: String): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.repartition(parts, $"term", pmod($"docId", lit(64)))
+    partitioned(rows, parts, Seq($"term", pmod($"docId", lit(64))))
       .sortWithinPartitions($"term", $"docId")
       .write.mode("overwrite").parquet(path)
   }
+
+  /** `rows` in `parts` partitions on `by`. One partition takes the rows
+    * as they are, with no exchange: it holds every run whole, and a
+    * micro-batch segment's input is one partition already
+    * (StreamingIngest.appendSegment).
+    */
+  private def partitioned(rows: DataFrame, parts: Int, by: Seq[Column]): DataFrame =
+    if (parts == 1) rows.coalesce(1) else rows.repartition(parts, by: _*)
 
   /** One-pass block builder over a (term, salt, docId)-sorted partition.
     * Pure streaming: holds at most one block (128 postings) in memory.

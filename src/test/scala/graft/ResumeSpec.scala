@@ -70,4 +70,35 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(lin.map(_.docIdMin).min == 0L)
     assert(lin.map(_.docIdMax).max == n - 1)
   }
+
+  test("a lineage read lists its stage dirs: no metadata-dir warning, the same rows") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    val dir = tmpDir("graft-lin-read")
+    val h = IndexBuilder.build(spark, corpus, dir, IndexBuilder.Config(salts = 3))
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-lineage-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          warned.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    val got = try h.lineage(spark).collect() finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    val metadataWarnings = warned.toArray.map(_.toString).filter(_.contains("metadata directory"))
+    assert(metadataWarnings.isEmpty, metadataWarnings.mkString("\n"))
+    val stages = Seq("docmeta", "postings", "stats", "termstats")
+    val want = spark.read.parquet(stages.map(s => s"$dir/lineage/$s"): _*)
+      .as[graft.index.LineageRow].collect()
+    assert(got.map(_.toString).sorted.toSeq == want.map(_.toString).sorted.toSeq)
+    assert(got.map(_.stage).distinct.sorted.toSeq == stages)
+  }
 }
