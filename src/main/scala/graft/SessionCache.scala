@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-SparkSession memo maps shared by Engine / LiveMemo / Similarity.
+/** Per-SparkSession memo maps: Engine's index handles, StateMemo's index
+  * states (`Live` for postings, `IvfLive` for IVF), Tuning's applied-conf
+  * flags and the Dedup and Aggs plan caches (`cachedPlan`).
   *
   * Weak keying alone is NOT enough here: several cached values are
   * Datasets/DataFrames, which strongly reference their owning session —
@@ -37,7 +39,7 @@ object SessionCache {
     * a same-session delete+rewrite of the source parquet under the SAME
     * path advances the stamp, so the stale entry is evicted (and its cached
     * data unpersisted) instead of served — the same fingerprint discipline
-    * as Similarity.ivfKey / Catalog's _STAGE_postings stamp (VERDICT r3
+    * as Catalog's _STAGE_ stamps / IvfLive's centroids stamp (VERDICT r3
     * wrong-item 1: path-only keys were the one cache class without it).
     * Callers pass `Fs.sourceStamp` (per-part-file name/mtime/length mix),
     * not the bare dir mtime — coarse 1 s mtime granularity let a same-tick

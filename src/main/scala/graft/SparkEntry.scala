@@ -733,8 +733,8 @@ object SparkEntry {
     // IVF ANN under the oracle: with nprobe = lists the probe is exhaustive,
     // so the result is exactly the brute-force top-k arithmetic — which
     // makes the whole buildIvf → partitioned-layout → probe → rescore
-    // pipeline oracle-checkable (the partition-PRUNED plan property is
-    // asserted in OpsSpec; ann_ivf_probe below exercises default pruning).
+    // pipeline oracle-checkable (that a pruned probe reads only its lists'
+    // files is asserted in OpsSpec; ann_ivf_probe below exercises it).
     "ann_ivf_topk" -> ((s, d) => Similarity.ivfTopK(s, d, lists = 16, nprobe = 16)),
     // INCREMENTAL IVF under the oracle: index built over 3/4 of the corpus,
     // the rest ivfAppend'ed against the frozen centroids (marker-committed
@@ -747,7 +747,7 @@ object SparkEntry {
     // filters them live, so it must equal brute force over the SURVIVORS
     "ann_tombstone_topk" -> ((s, d) => Similarity.ivfTombstoneTopK(s, d)),
     // default approximate probe (nprobe < lists): reads only nprobe/lists of
-    // the table via PartitionFilters — rows-only check (recall vs brute is
+    // the table, the files of its lists — rows-only check (recall vs brute is
     // asserted in OpsSpec), like the other approximate ops.
     "ann_ivf_probe" -> ((s, d) => Similarity.ivfTopK(s, d, lists = 16, nprobe = 4)),
     "ann_centroid_assign" -> ((s, d) => Similarity.centroidAssign(s, d)),

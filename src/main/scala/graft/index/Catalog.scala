@@ -79,8 +79,8 @@ object Catalog {
     // delete+rebuild of the SAME dir (create-index --force + export in one
     // session), or a resume that recomputes one stage, would otherwise
     // fingerprint identically and serve the old files' cached relations,
-    // blocks, df or stats — the same stale-cache class the IVF mtime key
-    // fixes (Similarity.ivfKey)
+    // blocks, df or stats — the same stale-state class the centroids stamp
+    // in an IVF state's fingerprint covers (graft.ops.IvfLive.of)
     val stamp = Seq("docmeta", "postings", "termstats", "stats")
       .map(t => Fs.mtime(s"$root/_STAGE_$t")).mkString(".")
     val rootFp = s"${epoch.getOrElse("genesis")}:$stamp"

@@ -79,18 +79,25 @@ object Fs {
     else fs.listStatus(p).filter(_.isFile).map(_.getPath.toString).sorted.toSeq
   }
 
-  /** Files directly under `path` with their block locations, sorted by
-    * path — statuses a Spark file index can take without listing again.
+  /** Data files directly under `path` (or, if `recursive`, anywhere below
+    * it) with their block locations, sorted by path — statuses a Spark file
+    * index can take without listing again. Names starting with `_` or `.`
+    * (markers, checksums, `_temporary`) are not data, as in Spark's
+    * listing. Each status is built the way Spark's listing builds it: the
+    * copying LocatedFileStatus constructor reads the file's permission,
+    * which on the local file system forks a process per file.
     */
-  def listLocatedFiles(path: String): Seq[LocatedFileStatus] = {
+  def listLocatedFiles(path: String, recursive: Boolean = false): Seq[LocatedFileStatus] = {
     val (fs, p) = fsOf(path)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val buf = Seq.newBuilder[LocatedFileStatus]
-      val it = fs.listLocatedStatus(p)
-      while (it.hasNext) { val s = it.next(); if (s.isFile) buf += s }
-      buf.result().sortBy(_.getPath.toString)
+    def walk(dir: Path): Seq[LocatedFileStatus] = fs.listStatus(dir).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Nil
+      else if (s.isDirectory) { if (recursive) walk(s.getPath) else Nil }
+      else Seq(new LocatedFileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
+        s.getModificationTime, 0L, null, null, null, null, s.getPath, false, false, false,
+        fs.getFileBlockLocations(s, 0L, s.getLen)))
     }
+    if (!fs.exists(p)) Seq.empty else walk(p).sortBy(_.getPath.toString)
   }
 
   /** ALL descendant files of `path` (recursive), sorted — fully-qualified

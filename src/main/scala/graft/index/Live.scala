@@ -19,7 +19,8 @@ import graft.index.IndexBuilder.{Snapshot, Tables, readStatsCompat, readTable}
   */
 final class Live private[index] (val spark: SparkSession, val snapshot: Snapshot,
                                  memo: LiveMemo,
-                                 @volatile private[index] var ranges: Seq[TermRanges.FileRange]) {
+                                 @volatile private[index] var ranges: Seq[TermRanges.FileRange])
+    extends StateMemo.Held {
 
   def fingerprint: String = snapshot.fingerprint
 
@@ -103,13 +104,10 @@ final class Live private[index] (val spark: SparkSession, val snapshot: Snapshot
 
   private[index] def blockPostings: Long = LiveMemo.postingsIn(blocks.valuesIterator.flatten)
 
-  /** Set when a newer state replaced this one in the memo: it memoizes no
-    * more blocks (it is outside the memo's bound).
+  /** Drop what a retired state holds beyond a running query's need; a
+    * retired Live memoizes no more blocks (it is outside the memo's bound).
     */
-  @volatile private[graft] var retired = false
-
-  /** Drop what a retired state holds beyond a running query's need. */
-  private[index] def release(): Unit = {
+  private[graft] def release(): Unit = {
     blocks.clear()
     // unpersist, not destroy: a query still running on this state may use
     // the broadcast; executors re-fetch it from the driver if they must
@@ -117,29 +115,66 @@ final class Live private[index] (val spark: SparkSession, val snapshot: Snapshot
   }
 }
 
-/** The Lives of a session, one per index dir — the single place that maps
-  * a dir to its index state's memo — and the bound on the posting blocks
-  * they hold together. A query on a new fingerprint replaces the dir's
-  * Live and retires the old one.
+/** The states of a session, one per index dir, each derived from the
+  * dir's fingerprint when it was resolved — the one place that replaces a
+  * dir's state when its fingerprint moves. Used for the postings side
+  * (`LiveMemo`, keyed by Catalog fingerprints) and for IVF indexes
+  * (`graft.ops.IvfLive`).
   */
-final class LiveMemo private[graft] (maxBlockPostings: Long) {
-  private val byDir = new graft.SessionCache[Live]
+class StateMemo[S <: StateMemo.Held] {
+  private val byDir = new graft.SessionCache[S]
 
-  /** The Live of `v`'s state, which `v` keeps from now on. */
-  def of(spark: SparkSession, v: Snapshot): Live = {
-    val (live, replaced) = synchronized {
+  /** `dir`'s state in `spark`'s session: the held one if its fingerprint is
+    * `fingerprint`, else `mk(held)`, which replaces the held one; that one
+    * is retired under the memo's lock and released after it. Makes no
+    * filesystem call and runs no job besides what `mk` does.
+    */
+  def of(spark: SparkSession, dir: String, fingerprint: String)(mk: Option[S] => S): S = {
+    val (state, replaced) = synchronized {
       val m = byDir(spark)
-      m.get(v.dir) match {
-        case Some(l) if l.fingerprint == v.fingerprint => (l, None)
+      m.get(dir) match {
+        case Some(s) if s.fingerprint == fingerprint => (s, None)
         case old =>
-          val sameRoot = old.filter(_.snapshot.state.rootFingerprint == v.state.rootFingerprint)
-          val l = new Live(spark, v, this, sameRoot.map(_.ranges).orNull)
-          m.put(v.dir, l)
-          old.foreach(_.retired = true) // under the lock: keep() adds no more to it
-          (l, old)
+          val s = mk(old)
+          m.put(dir, s)
+          old.foreach(_.retired = true)
+          (s, old)
       }
     }
     replaced.foreach(_.release())
+    state
+  }
+
+  /** The states held for `spark`'s session; callers hold the memo's lock. */
+  def states(spark: SparkSession): Iterable[S] = byDir(spark).values
+}
+
+object StateMemo {
+  /** What a memo holds: state derived from one fingerprint. */
+  trait Held {
+    def fingerprint: String
+
+    /** Set, under the memo's lock, when a newer state replaced this one. */
+    @volatile private[graft] var retired = false
+
+    /** Drop what a replaced state holds beyond a running query's need. */
+    private[graft] def release(): Unit
+  }
+}
+
+/** The Lives of a session, one per index dir, and the bound on the
+  * posting blocks they hold together. A query on a new fingerprint
+  * replaces the dir's Live and retires the old one; a new Live with the
+  * old one's root fingerprint starts with its footer ranges.
+  */
+final class LiveMemo private[graft] (maxBlockPostings: Long) extends StateMemo[Live] {
+
+  /** The Live of `v`'s state, which `v` keeps from now on. */
+  def of(spark: SparkSession, v: Snapshot): Live = {
+    val live = of(spark, v.dir, v.fingerprint) { old =>
+      val sameRoot = old.filter(_.snapshot.state.rootFingerprint == v.state.rootFingerprint)
+      new Live(spark, v, this, sameRoot.map(_.ranges).orNull)
+    }
     v.pin(live)
     live
   }
@@ -152,9 +187,9 @@ final class LiveMemo private[graft] (maxBlockPostings: Long) {
     * the bound is not memoized.
     */
   private[index] def keep(live: Live, fetched: Seq[(String, Array[PostingBlock])]): Unit =
-    synchronized {
+    synchronized { // the lock retiring a replaced Live
       if (!live.retired) {
-        val lives = byDir(live.spark).values.toSeq
+        val lives = states(live.spark).toSeq
         def held = lives.iterator.map(_.blockPostings).sum
         var cached = held
         fetched.foreach { case (t, arr) =>

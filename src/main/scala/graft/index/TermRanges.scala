@@ -156,29 +156,26 @@ object TermRanges {
   }
 
   /** Footer term ranges of a table's data files (driver-side: one footer
-    * read per file). Hidden files (`_SUCCESS`, `.crc`) are skipped, as
-    * Spark's file listing skips them, and so are files without a row group
-    * (the writer's task 0 writes one even when its partition is empty):
-    * they hold no term.
+    * read per file; `Fs.listLocatedFiles` skips `_SUCCESS` and `.crc`).
+    * Files without a row group (the writer's task 0 writes one even when
+    * its partition is empty) are skipped: they hold no term.
     */
   def fileRanges(tableDir: String): Seq[FileRange] =
-    Fs.listLocatedFiles(tableDir)
-      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-      .flatMap { f =>
-        import scala.jdk.CollectionConverters._
-        val groups = Fs.parquetFooter(f.getPath.toString).getBlocks.asScala.toSeq
-        val perGroup = groups.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == "term")
-            .map(_.getStatistics)
-            .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-            .map(s => (s.getMinBytes, s.getMaxBytes))
-        }
-        def range =
-          if (perGroup.exists(_.isEmpty)) None
-          else Some((perGroup.flatten.map(_._1).reduce((a, b) => if (compareBytes(a, b) <= 0) a else b),
-            perGroup.flatten.map(_._2).reduce((a, b) => if (compareBytes(a, b) >= 0) a else b)))
-        if (groups.isEmpty) None else Some(FileRange(f, range))
+    Fs.listLocatedFiles(tableDir).flatMap { f =>
+      import scala.jdk.CollectionConverters._
+      val groups = Fs.parquetFooter(f.getPath.toString).getBlocks.asScala.toSeq
+      val perGroup = groups.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "term")
+          .map(_.getStatistics)
+          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+          .map(s => (s.getMinBytes, s.getMaxBytes))
       }
+      def range =
+        if (perGroup.exists(_.isEmpty)) None
+        else Some((perGroup.flatten.map(_._1).reduce((a, b) => if (compareBytes(a, b) <= 0) a else b),
+          perGroup.flatten.map(_._2).reduce((a, b) => if (compareBytes(a, b) >= 0) a else b)))
+      if (groups.isEmpty) None else Some(FileRange(f, range))
+    }
 
   /** True when two files' term ranges overlap beyond a shared boundary
     * term — the layout of an index written before the range layout (every

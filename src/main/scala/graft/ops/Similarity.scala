@@ -15,14 +15,28 @@ import graft.Engine.quantized
   *    single top-k QUERY parquet cannot point-look-up buckets, so the flat
   *    bucket table costs a scan comparable to the data itself (measured:
   *    slower than brute at every size tried, BENCH/BASELINE.md);
-  *  - IVF with `partitionBy(list_id)`: the measured query scale path —
-  *    partition pruning makes query IO nprobe/lists of the corpus at any
-  *    size (10M vectors: 0.34 s vs 1.4–4 s brute on this box).
+  *  - IVF with `partitionBy(list_id)`: the measured query scale path — a
+  *    probe reads only the listed files of its nprobe lists, so query IO
+  *    is nprobe/lists of the corpus at any size (10M vectors: 0.34 s vs
+  *    1.4–4 s brute on this box). What a probe derives from an IVF index
+  *    state (centroids, files per list, delete set) lives in its `IvfLive`.
   */
 object Similarity {
 
   private def emb(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
+
+  /** The embedding of vector `qId` in `e`, the source table of `sfDir`;
+    * taking the frame lets brute force and LSH, which scan it too, resolve
+    * the source once.
+    */
+  private def queryVector(e: DataFrame, sfDir: String, qId: Long): Array[Float] = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val found = e.filter(col("vec_id") === qId).select(col("embedding")).as[Array[Float]].take(1)
+    require(found.nonEmpty, s"no vec_id $qId in $sfDir/embeddings.parquet")
+    found.head
+  }
 
   /** Exact cosine in double precision, strict left-to-right summation —
     * matches the transliterated oracle SQL arithmetic.
@@ -75,9 +89,7 @@ object Similarity {
   def cosineTopK(spark: SparkSession, sfDir: String, qId: Long = 0L, k: Int = 20): DataFrame = {
     import spark.implicits._
     val e = emb(spark, sfDir)
-    val q: Array[Float] = e.filter(col("vec_id") === qId)
-      .select(col("embedding")).as[Array[Float]].head()
-    val bq = spark.sparkContext.broadcast(q)
+    val bq = spark.sparkContext.broadcast(queryVector(e, sfDir, qId))
     val score = new TaskLazy(() => cosineFrom(bq.value)) // query norm once per task
     e.filter(col("vec_id") =!= qId)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
@@ -275,8 +287,7 @@ object Similarity {
     graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val dir = buildLshBuckets(spark, sfDir, tables, planes)
     val e = emb(spark, sfDir)
-    val q: Array[Float] = e.filter(col("vec_id") === qId)
-      .select(col("embedding")).as[Array[Float]].head()
+    val q = queryVector(e, sfDir, qId)
     val dim = q.length
     val allPlanes = planesFor(tables, planes, dim)
     val qBuckets: Seq[Long] = (0 until tables).flatMap { t =>
@@ -354,7 +365,7 @@ object Similarity {
       .orderBy(col("a"), col("b"))
   }
 
-  // ---- IVF (inverted-file) ANN: the partition-pruned scale path ----------
+  // ---- IVF (inverted-file) ANN: the list-pruned scale path ---------------
 
   def ivfDir(sfDir: String, lists: Int): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -364,7 +375,7 @@ object Similarity {
   // ---- IVF epochs (the Epochs protocol) ----------------------------------
   // Genesis layout: emb/centroids/_DONE at `dir` itself. After an
   // `ivfCompact` fold the live root is an epoch subdir; every read path
-  // resolves the root once (Epochs.root), so a fold (retrained centroids
+  // pins the root once (IvfLive.of), so a fold (retrained centroids
   // + rewritten partitioned layout + consumed appends) becomes visible in
   // ONE atomic pointer flip. Appends are ROOT-scoped (`root/append-K`):
   // their list_id assignment is only meaningful against their root's
@@ -382,48 +393,13 @@ object Similarity {
     deadAtGenesis = n => n == "emb" || n == "centroids" || n.startsWith("append-") ||
       n.startsWith("del-") || graft.index.Epochs.isClaim(n))
 
-  /** True iff a root-based cache key belongs to THIS index dir: the key is
-    * `root|…` where root is `dir` itself (genesis) or `dir/epoch-K`.
-    * A bare startsWith(dir) would also match sibling dirs sharing the path
-    * prefix (e.g. the `-appendfx` fixture next to its base) and thrash
-    * their live caches.
-    */
-  private def keyOfDir(dir: String)(key: String): Boolean =
-    key.startsWith(s"$dir|") || key.startsWith(s"$dir/")
-
-  /** Evict every cached centroid/FileIndex/delete-set entry derived from
-    * `dir` — the rebuild/fold eviction (the quantizer itself changed).
-    */
-  private def evictIvfCaches(dir: String): Unit = {
-    evictIvfDataCaches(dir, tombs = true)
-    SparkSession.getActiveSession.foreach { s =>
-      ivfCentroidCache(s).keys.filter(keyOfDir(dir)).foreach(ivfCentroidCache(s).remove)
-    }
-  }
-
-  /** Evict the layout cache (and, iff the delete set changed, the
-    * tombstone-broadcast cache) — the append/tombstone eviction: those
-    * commits never touch the frozen coarse quantizer, which stays cached
-    * so a streamed 1 s-cadence append pays no per-batch centroid collect;
-    * and an APPEND cannot change the delete set either, so it must not
-    * evict the delete broadcast (a standing delete set under streamed
-    * ingest would otherwise re-collect + re-broadcast per micro-batch).
-    */
-  private def evictIvfDataCaches(dir: String, tombs: Boolean): Unit =
-    SparkSession.getActiveSession.foreach { s =>
-      ivfEmbCache(s).keys.filter(keyOfDir(dir)).foreach(ivfEmbCache(s).remove)
-      if (tombs)
-        ivfTombCache(s).keys.filter(keyOfDir(dir)).foreach(k =>
-          ivfTombCache(s).remove(k).foreach(_.unpersist(blocking = false)))
-    }
-
   /** Build (or resume) an IVF index: k-means-style coarse quantizer
     * (deterministic hash-sampled init + `iters` Lloyd refinements, each one
     * narrow broadcast-assign pass + one tiny per-list average), then the
     * embeddings written PARTITIONED BY list id. This is the layout that
     * actually prunes IO in Spark: a query probes its nprobe nearest lists
-    * and the scan reads ONLY those directories (PartitionFilters), unlike
-    * any row-level filter over a flat table (parquet can't point-look-up an
+    * and reads ONLY the files under those directories, unlike any
+    * row-level filter over a flat table (parquet can't point-look-up an
     * IN list, so LSH-style rescans still read every row group at query
     * time — see BENCH/BASELINE.md's brute/LSH/IVF crossover).
     */
@@ -436,8 +412,9 @@ object Similarity {
 
   /** buildIvf over an explicit source frame + target dir (the append
     * fixture builds from a corpus subset; ivfAppend then adds the rest).
+    * `src` is resolved only when the index is not built yet.
     */
-  def buildIvfFrom(spark: SparkSession, src: DataFrame, dir: String,
+  def buildIvfFrom(spark: SparkSession, src: => DataFrame, dir: String,
                    lists: Int, iters: Int = 2): String = {
     import spark.implicits._
     if (!graft.index.Fs.exists(s"$dir/_DONE")) {
@@ -515,49 +492,25 @@ object Similarity {
             .toDF("list_id", "centroid")
             .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))))
       graft.index.Fs.touch(s"$dir/_DONE")
-      // a REBUILD under the same dir (delete + buildIvf, the bench pattern)
-      // must not serve the deleted build's FileIndex: evict any cached
-      // entries for this dir across live sessions (keys are mtime-stamped
-      // too — see ivfKey — this is belt-and-braces for the same session)
-      evictIvfCaches(dir)
     }
     dir
   }
 
-  /** Completed append deltas under an explicit root. Read paths resolve
-    * the root ONCE per operation and pin it (the one-Catalog.State-per-op
-    * discipline Searcher follows): re-resolving per sub-read would let a
-    * concurrent fold's CURRENT flip pair one epoch's centroids with
-    * another epoch's partitioned layout mid-probe.
-    */
-  private def ivfAppendDirsAt(root: String): Seq[String] =
-    graft.index.Epochs.committedDeltas(root, "append-")
-
-  /** Completed delete deltas under an explicit root (ivfTombstone). */
-  private def ivfDelDirsAt(root: String): Seq[String] =
-    graft.index.Epochs.committedDeltas(root, "del-")
-
-  /** Cache key carrying the live fingerprint: the pinned root (an
-    * ivfCompact flips CURRENT), its _DONE mtime (changes on every rebuild),
-    * the append-delta list (grows with each ivfAppend) and the delete-delta
-    * list (grows with each ivfTombstone) — a cached DataFrame can never
-    * outlive the files it indexes, miss a committed append/delete, or
-    * survive an epoch fold (ADVICE r2: the dir-only key served deleted
-    * files after a delete+rebuild in one session).
-    */
-  private def ivfKeyAt(root: String): String =
-    s"$root|${graft.index.Fs.mtime(s"$root/_DONE")}" +
-      s"|${ivfAppendDirsAt(root).map(graft.index.Fs.name).sorted.mkString(",")}" +
-      s"|${ivfDelDirsAt(root).map(graft.index.Fs.name).sorted.mkString(",")}"
+  /** The IVF index state at `dir`, which must be built. */
+  private def built(spark: SparkSession, dir: String): IvfLive = {
+    val st = IvfLive.of(spark, dir)
+    require(graft.index.Fs.exists(s"${st.root}/_DONE"), s"no IVF index at $dir — buildIvf first")
+    st
+  }
 
   /** INCREMENTAL IVF (VERDICT r3 missing-item 2: ANN was the one subsystem
     * without a continuous-ingest story): assign a NEW embedding batch to
     * the EXISTING centroids and commit it as a marker-last append delta
     * (`dir/append-K/emb`, partitioned by list_id like the base) — the same
     * segment protocol as posting ingest. Queries read base ∪ completed
-    * appends; partition pruning applies to every delta (the probe filter
-    * pushes through the union), so query IO stays nprobe/lists of the
-    * corpus. The cache fingerprint (ivfKey) advances with each commit.
+    * appends; a probe reads only its lists' files in every delta, so query
+    * IO stays nprobe/lists of the corpus. The commit yields a new IvfLive
+    * state, which keeps the old one's centroids and root listing.
     * Centroids are NOT retrained here — the standard IVF practice (assign
     * against the frozen coarse quantizer; retrain = an occasional full
     * rebuild, the ANN analog of the posting index's epoch fold).
@@ -573,9 +526,8 @@ object Similarity {
     // Appends are occasional batch commits (not the 1 s posting cadence),
     // so lock acquisition cost is irrelevant.
     graft.index.Epochs.withMaintLock(dir, "ivf-append") { tok =>
-      val root = graft.index.Epochs.root(dir)
-      require(graft.index.Fs.exists(s"$root/_DONE"),
-        s"no IVF index at $dir — buildIvf first")
+      val st = built(spark, dir)
+      val root = st.root
       // `batchTag` = streaming-ingest mode (startIvfAppend): the delta is
       // NAMED by the (stream-namespaced) micro-batch tag, making the
       // commit IDEMPOTENT under foreachBatch's at-least-once replays — a
@@ -591,12 +543,10 @@ object Similarity {
         graft.index.Fs.exists(s"$root/$n/_DONE") ||
           foldedAppendsAt(root).contains(n))
       if (!alreadyIn) {
-        // the frozen coarse quantizer is cached per root (centroids change
-        // only on rebuild/fold, never per append) — a 1 s-cadence streamed
-        // append must not pay a collect job per micro-batch
-        val centroids: Array[Array[Double]] =
-          quantizerAt(spark, dir, root).map(_._2)
-        val bc = spark.sparkContext.broadcast(centroids)
+        // the frozen coarse quantizer is held by the state (centroids
+        // change only on rebuild/fold, never per append) — a 1 s-cadence
+        // streamed append must not pay a collect job per micro-batch
+        val bc = spark.sparkContext.broadcast(st.centroids.map(_._2))
         // untagged mode: a claimed fresh name (Epochs.mintDelta); tagged
         // mode: the tag's name, cleared of a crashed attempt under it
         val out = tagged.map(n => s"$root/$n")
@@ -615,10 +565,6 @@ object Similarity {
         graft.index.Epochs.verifyOwnedThen(dir, tok) {
           graft.index.Fs.touch(s"$out/_DONE")
         }
-        // the commit changed the cache fingerprint: drop layout/delete
-        // entries under the old keys (the quantizer and delete-set caches
-        // survive — neither can change on an append)
-        evictIvfDataCaches(dir, tombs = false)
       }
     }
   }
@@ -634,10 +580,10 @@ object Similarity {
     * `losers`-style outputs). Lucene-style two-phase:
     *
     *  1. LOGICAL (this call): vec_ids land in a marker-committed delta
-    *     `root/del-K/ids`; the cache fingerprint advances, and every probe
+    *     `root/del-K/ids`; the IvfLive fingerprint advances, and every probe
     *     filters them via a broadcast sorted array — deleted vectors vanish
     *     from results immediately.
-    *  2. PHYSICAL (next `ivfCompact`): the fold anti-joins the delete set
+    *  2. PHYSICAL (next `ivfCompact`): the fold filters the delete set
     *     out of the union before retraining, so the new epoch equals a
     *     fresh build over the SURVIVING vectors and starts with an empty
     *     delete set.
@@ -648,9 +594,7 @@ object Similarity {
     */
   def ivfTombstone(spark: SparkSession, dir: String, vecIds: DataFrame): Unit = {
     graft.index.Epochs.withMaintLock(dir, "ivf-tombstone") { tok =>
-      val root = graft.index.Epochs.root(dir)
-      require(graft.index.Fs.exists(s"$root/_DONE"),
-        s"no IVF index at $dir — buildIvf first")
+      val root = built(spark, dir).root
       // id column BY NAME, never by position (the Compactor.tombstone
       // discipline): positional fallback only for single-column inputs
       val idCol =
@@ -670,72 +614,15 @@ object Similarity {
       // on every probe, and make the next fold do a full retrain with
       // nothing to purge — drop the delta instead (the count reads the
       // tiny just-written file, not the caller's possibly-expensive plan)
-      if (spark.read.parquet(s"$out/ids").limit(1).count() == 0L) {
+      if (graft.index.IndexBuilder.readTable(spark, IvfLive.Ids, Seq(s"$out/ids"))
+            .limit(1).count() == 0L) {
         graft.index.Fs.delete(out)
       } else {
         graft.index.Epochs.verifyOwnedThen(dir, tok) {
           graft.index.Fs.touch(s"$out/_DONE") // marker LAST
         }
-        evictIvfDataCaches(dir, tombs = true)
       }
     }
-  }
-
-  /** Broadcast SORTED delete set for a pinned root — cached per
-    * (root, _DONE mtime, delete-delta list) and unpersisted on eviction:
-    * one driver→executor transfer per delete-set state, not one per probe
-    * (the Searcher.tombstonesBc pattern). None ⇔ no deletes (zero jobs,
-    * zero broadcasts, no per-row filter).
-    */
-  private def ivfTombBcAt(spark: SparkSession, dir: String, root: String)
-      : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] = {
-    val dirs = ivfDelDirsAt(root)
-    if (dirs.isEmpty) return None
-    // keyed on the centroids' CONTENT stamp, not the _DONE mtime: a
-    // same-tick delete+rebuild of the dir must miss (the SessionCache
-    // coarse-mtime staleness class, ADVICE r4)
-    val key = s"$root|${graft.index.Fs.sourceStamp(s"$root/centroids")}|tombs" +
-      s"|${dirs.map(graft.index.Fs.name).sorted.mkString(",")}"
-    val m = ivfTombCache(spark)
-    m.get(key).orElse {
-      // build-then-putIfAbsent (NOT getOrElseUpdate): TrieMap may evaluate
-      // a racing default twice, and a losing broadcast would leak — the
-      // loser here unpersists itself and adopts the winner
-      import spark.implicits._
-      val fresh = spark.sparkContext.broadcast(
-        spark.read.parquet(dirs.map(_ + "/ids"): _*)
-          .select(col("vec_id")).distinct().as[Long].collect().sorted)
-      m.putIfAbsent(key, fresh) match {
-        case None =>
-          m.keys.filter(k2 => keyOfDir(dir)(k2) && k2 != key).foreach(k =>
-            m.remove(k).foreach(_.unpersist(blocking = false)))
-          Some(fresh)
-        case Some(winner) =>
-          fresh.unpersist(blocking = false)
-          Some(winner)
-      }
-    }
-  }
-
-  /** The frozen coarse quantizer for a pinned root, cached per
-    * (root, centroids content stamp) — centroids change only on
-    * rebuild/fold, never on append/delete commits, so streamed appends and
-    * probes share one resident copy with zero per-call jobs; the content
-    * stamp (not the coarse `_DONE` mtime) also covers a same-tick
-    * delete+rebuild reaching a session — e.g. the foreachBatch CLONE
-    * session, whose cache map an active-session eviction cannot reach —
-    * purely through the key.
-    */
-  private def quantizerAt(spark: SparkSession, dir: String,
-                          root: String): Array[(Int, Array[Double])] = {
-    import spark.implicits._
-    val qKey = s"$root|${graft.index.Fs.sourceStamp(s"$root/centroids")}|quantizer"
-    val cc = ivfCentroidCache(spark)
-    cc.getOrElseUpdate(qKey, {
-      cc.keys.filter(k2 => keyOfDir(dir)(k2) && k2 != qKey).foreach(cc.remove)
-      spark.read.parquet(s"$root/centroids")
-        .as[(Int, Array[Double])].collect().sortBy(_._1)
-    })
   }
 
   /** THE ANN EPOCH FOLD (VERDICT r4 missing-item 2): retrain the coarse
@@ -764,56 +651,34 @@ object Similarity {
     Epochs.withMaintLock(dir, "ivf-compact") { tok =>
       Epochs.gcSweep(dir) // previous fold's deferred deletes
       val epoch = Epochs.current(dir)
-      val root = Epochs.rootOf(dir, epoch)
-      require(graft.index.Fs.exists(s"$root/_DONE"),
-        s"no IVF index at $dir — buildIvf first")
+      val st = built(spark, dir)
       Epochs.reconcile(dir, ivfLayout)
-      val appends = ivfAppendDirsAt(root)
-      val dels = ivfDelDirsAt(root)
       // something to fold? appends to absorb, or deletes to purge
-      if (appends.nonEmpty || dels.nonEmpty) {
-        val nLists =
-          if (lists > 0) lists
-          else spark.read.parquet(s"$root/centroids").count().toInt
+      if (st.appends.nonEmpty || st.dels.nonEmpty) {
+        val nLists = if (lists > 0) lists else st.centroids.length
         // the consumed append names are carried forward BEFORE the flip: a
         // streaming batch tag replayed after its fold is SKIPPED by
         // ivfAppend (its vectors are provably in this epoch) — without this
         // list the replay would re-append and duplicate them
         Epochs.commitEpoch(dir, tok, ivfLayout, epoch,
-          consumed = appends.map(graft.index.Fs.name), dead = Nil) { newRoot =>
+          consumed = st.appends.map(graft.index.Fs.name), dead = Nil) { newRoot =>
           // tombstoned vectors are dropped BEFORE the retrain: they train no
           // centroid and land in no list — the new epoch equals a fresh
           // build over the SURVIVING vectors and starts with an empty
           // delete set (exactly Compactor's purge-at-fold semantics)
-          val union0 = ivfEmbAt(spark, root)
-            .select(col("vec_id"), col("embedding"), col("label"))
-          val union =
-            if (dels.isEmpty) union0
-            else union0.join(
-              spark.read.parquet(dels.map(_ + "/ids"): _*)
-                .select(col("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
+          val union = st.live(st.embAll)
           // a delete set covering EVERY vector would train zero centroids
           // and fold a quietly-empty index — refuse loudly (Compactor's n>0
           // twin)
-          if (dels.nonEmpty)
+          if (st.dels.nonEmpty)
             require(union.limit(1).count() > 0, "fold would produce an EMPTY " +
               "ANN index (every vector tombstoned) — refusing; drop the index " +
               "instead")
           buildIvfFrom(spark, union, newRoot, nLists, iters)
         }
-        evictIvfCaches(dir)
       }
     }
   }
-
-  /** Base ∪ completed append deltas under a PINNED root — each its own
-    * partitioned scan (probe filters push through the union, so pruning
-    * holds per delta).
-    */
-  private def ivfEmbAt(spark: SparkSession, root: String): DataFrame =
-    ivfAppendDirsAt(root).map(a => spark.read.parquet(s"$a/emb"))
-      .foldLeft(spark.read.parquet(s"$root/emb"))(_ unionByName _)
 
   /** Mean vector of a group, accumulated in ascending-vec_id order — double
     * summation order is pinned BY CONSTRUCTION, so centroids are identical
@@ -835,6 +700,18 @@ object Similarity {
       n += 1
     }
     acc.map(_ / n)
+  }
+
+  /** Cosine of a vector and a centroid: dot, |v|² and |c|² summed left to
+    * right in double — the probe's list ranking and centroidAssign's argmax.
+    */
+  private[graft] def centroidCosine(v: Array[Float], c: Array[Double]): Double = {
+    var dot = 0.0; var nv = 0.0; var nc = 0.0
+    var i = 0
+    while (i < v.length) {
+      dot += v(i) * c(i); nv += v(i).toDouble * v(i); nc += c(i) * c(i); i += 1
+    }
+    dot / (math.sqrt(nv) * math.sqrt(nc))
   }
 
   private[graft] def nearestList(v: Array[Float], cs: Array[Array[Double]]): Int =
@@ -883,33 +760,15 @@ object Similarity {
     }
   }
 
-  // per-session caches (graft.SessionCache: stopped sessions are swept —
-  // the DataFrame values pin their session, so plain weak keying would
-  // leak): the centroid table (collected once — the in-memory coarse
-  // quantizer every IVF system keeps resident) and the partitioned table's
-  // DataFrame (reusing its FileIndex skips re-listing `lists` directories
-  // per query)
-  private val ivfCentroidCache = new graft.SessionCache[Array[(Int, Array[Double])]]
-  private val ivfEmbCache = new graft.SessionCache[DataFrame]
-  // per-fingerprint BROADCAST of the sorted deleted-vec_id set
-  // (ivfTombstone) — a delete commit advances the fingerprint and
-  // invalidates (stale broadcasts unpersisted)
-  private val ivfTombCache =
-    new graft.SessionCache[org.apache.spark.broadcast.Broadcast[Array[Long]]]
-
   /** IVF ANN top-k: rank the (tiny, resident) centroid table by cosine to
     * the query, probe the nprobe nearest lists, exact-rescore only those
-    * partitions. The scan's PartitionFilters prune every other list
-    * directory — query IO is nprobe/lists of the corpus by construction,
-    * at any corpus size.
+    * lists. The probe reads only the files of those lists — query IO is
+    * nprobe/lists of the corpus by construction, at any corpus size.
     */
   def ivfTopK(spark: SparkSession, sfDir: String, qId: Long = 0L, k: Int = 20,
               lists: Int = 64, nprobe: Int = 8): DataFrame = {
-    import spark.implicits._
     val dir = buildIvf(spark, sfDir, lists)
-    val q: Array[Float] = emb(spark, sfDir).filter(col("vec_id") === qId)
-      .select(col("embedding")).as[Array[Float]].head()
-    ivfProbe(spark, dir, q, qId, k, nprobe)
+    ivfProbe(spark, dir, queryVector(emb(spark, sfDir), sfDir, qId), qId, k, nprobe)
   }
 
   /** The probe half of ivfTopK against an explicit IVF dir (base ∪ appended
@@ -919,40 +778,18 @@ object Similarity {
   def ivfProbe(spark: SparkSession, dir: String, q: Array[Float], excludeId: Long,
                k: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
-    // ONE root resolution for the whole probe (key, centroids, emb): a
+    // ONE state for the whole probe (centroids, files, deletes): a
     // concurrent fold's CURRENT flip mid-probe must not pair one epoch's
     // centroids with another epoch's list_id layout
-    val root = graft.index.Epochs.root(dir)
-    val key = ivfKeyAt(root)
-    val centroids = quantizerAt(spark, dir, root)
-    val probeLists: Seq[Int] = centroids.map { case (l, c) =>
-      var dot = 0.0; var nv = 0.0; var nc = 0.0
-      var i = 0
-      while (i < q.length) {
-        dot += q(i) * c(i); nv += q(i).toDouble * q(i); nc += c(i) * c(i); i += 1
-      }
-      (l, dot / (math.sqrt(nv) * math.sqrt(nc)))
-    }.sortBy(-_._2).take(nprobe).map(_._1).toSeq
+    val st = IvfLive.of(spark, dir)
+    val probeLists: Seq[Int] = st.centroids.map { case (l, c) => (l, centroidCosine(q, c)) }
+      .sortBy(-_._2).take(nprobe).map(_._1).toSeq
     val bq = spark.sparkContext.broadcast(q)
-    // delete set for THIS state (ivfTombstone): tombstoned vectors vanish
-    // from results immediately; physically purged at the next fold. The
-    // broadcast is cached per delete-set fingerprint — and absent entirely
-    // (no per-row filter) on an index with no deletes.
-    val bDead = ivfTombBcAt(spark, dir, root)
-    val ec = ivfEmbCache(spark)
-    val scanned = ec.getOrElseUpdate(key, {
-        ec.keys.filter(k2 => keyOfDir(dir)(k2) && k2 != key).foreach(ec.remove)
-        ivfEmbAt(spark, root)
-      })
-      .filter(col("list_id").isin(probeLists: _*) && col("vec_id") =!= excludeId)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-    val live = bDead match {
-      case None => scanned
-      case Some(b) =>
-        scanned.filter(t => java.util.Arrays.binarySearch(b.value, t._1) < 0)
-    }
     val score = new TaskLazy(() => cosineFrom(bq.value)) // query norm once per task
-    live
+    // tombstoned vectors (ivfTombstone) vanish from results immediately and
+    // are physically purged at the next fold; with no deletes, no filter
+    st.live(st.emb(probeLists).filter(col("vec_id") =!= excludeId))
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .map { case (id, v) => (id, score.value(v)) }
       .toDF("vec_id", "cos")
       .select(col("vec_id"), quantized(col("cos")).as("cos_q"))
@@ -968,15 +805,12 @@ object Similarity {
     */
   def ivfAppendTopK(spark: SparkSession, sfDir: String, qId: Long = 0L,
                     k: Int = 20, lists: Int = 16, nprobe: Int = 16): DataFrame = {
-    import spark.implicits._
     val dir = s"${ivfDir(sfDir, lists)}-appendfx"
     buildIvfFrom(spark, emb(spark, sfDir).filter(col("vec_id") % 4 =!= 0),
       dir, lists)
-    if (ivfAppendDirsAt(graft.index.Epochs.root(dir)).isEmpty)
+    if (IvfLive.of(spark, dir).appends.isEmpty)
       ivfAppend(spark, dir, emb(spark, sfDir).filter(col("vec_id") % 4 === 0))
-    val q: Array[Float] = emb(spark, sfDir).filter(col("vec_id") === qId)
-      .select(col("embedding")).as[Array[Float]].head()
-    ivfProbe(spark, dir, q, qId, k, nprobe)
+    ivfProbe(spark, dir, queryVector(emb(spark, sfDir), sfDir, qId), qId, k, nprobe)
   }
 
   /** The live-delete fixture under the driver gate: IVF over the full
@@ -988,15 +822,12 @@ object Similarity {
     */
   def ivfTombstoneTopK(spark: SparkSession, sfDir: String, qId: Long = 0L,
                        k: Int = 20, lists: Int = 16, nprobe: Int = 16): DataFrame = {
-    import spark.implicits._
     val dir = s"${ivfDir(sfDir, lists)}-tombfx"
     buildIvfFrom(spark, emb(spark, sfDir), dir, lists)
-    if (ivfDelDirsAt(graft.index.Epochs.root(dir)).isEmpty)
+    if (IvfLive.of(spark, dir).dels.isEmpty)
       ivfTombstone(spark, dir,
         emb(spark, sfDir).filter(col("vec_id") % 5 === 1).select(col("vec_id")))
-    val q: Array[Float] = emb(spark, sfDir).filter(col("vec_id") === qId)
-      .select(col("embedding")).as[Array[Float]].head()
-    ivfProbe(spark, dir, q, qId, k, nprobe)
+    ivfProbe(spark, dir, queryVector(emb(spark, sfDir), sfDir, qId), qId, k, nprobe)
   }
 
   /** EMBEDDING-space decontamination: corpus vectors with cosine ≥
@@ -1059,12 +890,7 @@ object Similarity {
       var best = -1
       var bestCos = Double.NegativeInfinity
       bc.value.foreach { case (cl, c) =>
-        var dot = 0.0; var na = 0.0; var nc = 0.0
-        var i = 0
-        while (i < v.length) {
-          dot += v(i) * c(i); na += v(i).toDouble * v(i); nc += c(i) * c(i); i += 1
-        }
-        val cos = dot / (math.sqrt(na) * math.sqrt(nc))
+        val cos = centroidCosine(v, c)
         if (cos > bestCos) { bestCos = cos; best = cl }
       }
       (id, label, best)

@@ -107,6 +107,24 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(lsh == exact, s"missed: ${exact -- lsh}, extra: ${lsh -- exact}")
   }
 
+  /** The nprobe lists a probe of `q` picks: its nearest centroids by cosine. */
+  private def probedLists(root: String, q: Array[Float], nprobe: Int): Seq[Int] = {
+    import spark.implicits._
+    spark.read.parquet(s"$root/centroids").as[(Int, Array[Double])].collect()
+      .map { case (l, c) => (l, Similarity.centroidCosine(q, c)) }
+      .sortBy(-_._2).take(nprobe).map(_._1).toSeq
+  }
+
+  /** Data files under `lists`' `list_id=` dirs of the emb tables, as paths. */
+  private def listFiles(tables: Seq[String], lists: Seq[Int]): Set[String] =
+    (for {
+      t <- tables; l <- lists; f <- graft.index.Fs.listFiles(s"$t/list_id=$l")
+      if !graft.index.Fs.name(f).startsWith(".") && !graft.index.Fs.name(f).startsWith("_")
+    } yield new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+
+  private def inputPaths(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+
   test("IVF top-k: partition-pruned probe recovers the clustered true neighbors") {
     import spark.implicits._
     // clustered corpus: IVF's regime — same-cluster cosine ≈ 1/(1+noise²)
@@ -122,10 +140,13 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       assert(bruteMap.get(id).forall(_ == cq), s"score mismatch for $id") }
     val recall = ivf.map(_._1).count(brute.map(_._1).toSet) / brute.length.toDouble
     assert(recall >= 0.9, s"IVF recall too low on clustered data: $recall")
-    // the probe reads only nprobe of the lists (partition pruning)
-    val plan = Similarity.ivfTopK(spark, dir, 0L, 20, lists = 32, nprobe = 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "expected partition-pruned scan")
+    // the probe reads exactly the files of its nprobe lists
+    val root = Similarity.ivfDir(dir, 32)
+    val q = spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") === 0L)
+      .select(col("embedding")).as[Array[Float]].head()
+    val want = listFiles(Seq(s"$root/emb"), probedLists(root, q, 4))
+    assert(want.nonEmpty && want.size < listFiles(Seq(s"$root/emb"), 0 until 32).size)
+    assert(inputPaths(Similarity.ivfTopK(spark, dir, 0L, 20, lists = 32, nprobe = 4)) == want)
   }
 
   test("incremental IVF: append ≡ rebuild assignments; exhaustive probe == brute over the union") {
@@ -155,10 +176,58 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val probed = Similarity.ivfProbe(spark, ivf, q, 0L, 20, 16).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(probed == brute)
-    // the pruned probe still partition-prunes BOTH scans of the union
-    val plan = Similarity.ivfProbe(spark, ivf, q, 0L, 20, 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "expected partition-pruned union scan")
+    // a pruned probe reads exactly its lists' files of the root AND the delta
+    val tables = Seq(s"$ivf/emb", s"$ivf/append-000001/emb")
+    val want = listFiles(tables, probedLists(ivf, q, 4))
+    assert(want.exists(_.contains("/append-000001/")) && want.exists(_.contains("/ivf/emb/")))
+    assert(want.size < listFiles(tables, 0 until 16).size)
+    assert(inputPaths(Similarity.ivfProbe(spark, ivf, q, 0L, 20, 4)) == want)
+  }
+
+  test("IVF state: warm probes run one job, appends keep the centroids, commits are seen in every session") {
+    import spark.implicits._
+    val dir = tmpDir("graft-ivflive")
+    Similarity.synthEmbeddings(spark, dir, 1200L, 16, centers = 30)
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+    val q = vecs.find(_._1 == 0L).get._2
+    def exact(keep: Long => Boolean): Seq[(Long, Long)] = vecs
+      .filter { case (id, _) => id != 0L && keep(id) }
+      .map { case (id, v) => (id, math.floor(Similarity.cosine(q, v) * 10000 + 0.5).toLong) }
+      .sortBy { case (id, cq) => (-cq, id) }.take(20).toSeq
+    val ivf = s"$dir/ivf"
+    def probe(s: org.apache.spark.sql.SparkSession = spark, nprobe: Int = 8): Seq[(Long, Long)] =
+      Similarity.ivfProbe(s, ivf, q, 0L, 20, nprobe).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    Similarity.buildIvfFrom(spark, e.filter(col("vec_id") < 1000), ivf, 8)
+    assert(probe() == exact(_ < 1000))
+    // (a) a warm probe on an unchanged state runs its top-k job only: no
+    // centroid read, no listing job, no schema inference
+    assert(jobsOf("graft-ivf-warm")(probe()) == 1)
+    assert(probe(nprobe = 0).isEmpty)
+    // (b) an append keeps the centroids; its delta is listed on the driver
+    Similarity.ivfAppend(spark, ivf, e.filter(col("vec_id") >= 1000))
+    var appended: Seq[(Long, Long)] = Nil
+    assert(jobsOf("graft-ivf-appended") { appended = probe() } == 1)
+    assert(appended == exact(_ => true))
+    // (c) a delete + rebuild of the same dir is served fresh
+    graft.index.Fs.delete(ivf)
+    Similarity.buildIvfFrom(spark, e.filter(col("vec_id") % 2 === 0), ivf, 8)
+    assert(probe() == exact(_ % 2 == 0))
+    // (d) commits through another session are seen by this one's next probe
+    val other = spark.newSession()
+    val dead = probe().take(3).map(_._1).toSet
+    Similarity.ivfTombstone(other, ivf, dead.toSeq.toDF("vec_id"))
+    assert(probe() == exact(id => id % 2 == 0 && !dead(id)))
+    Similarity.ivfAppend(other, ivf, e.filter(col("vec_id") % 2 =!= 0))
+    assert(probe() == exact(id => !dead(id)))
+    assert(probe(other) == probe())
+  }
+
+  test("a query vector id missing from the source fails naming the id and the table") {
+    val ex = intercept[IllegalArgumentException](Similarity.cosineTopK(spark, sfDir, 987654321L, 5))
+    assert(ex.getMessage.contains("vec_id 987654321") &&
+      ex.getMessage.contains(s"$sfDir/embeddings.parquet"), ex.getMessage)
   }
 
   test("centroid assignment is the true argmax for a sample of vectors") {
