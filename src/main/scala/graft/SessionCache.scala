@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-SparkSession memo maps: Engine's index handles, StateMemo's index
-  * states (`Live` for postings, `IvfLive` for IVF), Tuning's applied-conf
-  * flags and the Dedup and Aggs plan caches (`cachedPlan`).
+  * states (`Live` for postings, `IvfLive` for IVF) and the Dedup and Aggs
+  * plan caches (`cachedPlan`).
   *
   * Weak keying alone is NOT enough here: several cached values are
   * Datasets/DataFrames, which strongly reference their owning session —

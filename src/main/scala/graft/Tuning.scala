@@ -1,46 +1,41 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
 import org.apache.spark.sql.functions.{broadcast, col}
 
-/** Session-level execution tuning applied lazily from the engine's own
-  * query paths (the bench/driver sessions are built by frozen harness code,
-  * so the engine cannot rely on conf being set at session construction).
+/** Driver-side execution helpers shared by the engine's query paths. None
+  * reads or writes session config: a bound is a parameter of the call.
   */
 object Tuning {
 
-  private val applied = new SessionCache[java.lang.Boolean]
-
-  /** Make guarded one-shot collects single-job.
-    *
-    * Every `limit(cap + 1).collect()` in the engine (Searcher.blocksProbe,
-    * the LSH/MinHash candidate probes, tombstone/allowlist resolution) is an
-    * OVERFLOW GUARD, not a row cut: the expected case is that everything
-    * under the cap is collected, so the plan must scan every partition
-    * anyway. Spark's CollectLimit executes incrementally —
-    * `spark.sql.limit.initialNumPartitions` (default 1) partitions first,
-    * growing by `spark.sql.limit.scaleUpFactor` (4) — which turns one
-    * logical probe into up to ⌈log₄ P⌉ + 1 sequential job launches (guide
-    * §1: measure where the time goes — for sub-second warm queries these
-    * extra launches dominate). Raising the initial partition count to cover
-    * the scan makes each probe exactly ONE job. Results are unchanged:
-    * under the cap the full row set is collected either way; over the cap
-    * both shapes return > cap rows and the caller takes its fallback.
-    *
-    * 512 covers every local layout (shuffle width = cores); on a cluster
-    * with more scan partitions the first batch is 512 instead of 1 — still
-    * bounded, and still the right trade for guard-style limits. Set
-    * explicitly on the session to override; we only fill the default.
+  /** Bound on a driver-collected LSH / dedup candidate set (doc ids or id
+    * pairs); past it the caller takes its distributed semi-join.
     */
-  def ensureProbeConf(spark: SparkSession): Unit =
-    applied(spark).getOrElseUpdate("probe", {
-      val k = "spark.sql.limit.initialNumPartitions"
-      // respect an explicit non-default user/session setting; note that
-      // RuntimeConfig.get returns the registered default ("1") when unset,
-      // so "still at the default" is the only observable "unset" signal
-      if (spark.conf.get(k) == "1") spark.conf.set(k, "512")
-      java.lang.Boolean.TRUE
-    })
+  val MaxDriverCands: Int = 100000
+
+  /** The rows `ds.limit(n).collect()` returns, in the same order, from ONE
+    * Spark job. Every bounded driver fetch in the engine is an OVERFLOW
+    * GUARD, not a row cut (`collectUpTo(ds, cap + 1)`, then `length > cap`
+    * takes the caller's fallback or fails loudly): the expected case
+    * collects everything under the cap, so every partition is scanned
+    * anyway. `limit(n).collect()` plans a CollectLimit, which scans
+    * `spark.sql.limit.initialNumPartitions` (default 1) partitions first
+    * and grows by `scaleUpFactor` — up to ⌈log₄ P⌉ + 1 sequential jobs for
+    * one logical probe. Here each partition keeps its first n rows (a
+    * per-partition LocalLimit, no shuffle), all partitions run in one
+    * collect job, and the driver keeps the first n in partition order —
+    * exactly CollectLimit's rows. Driver memory stays bounded by n rows per
+    * partition. An empty local relation folds away in the optimizer and
+    * runs no job, as under `limit`; over an AQE exchange (`distinct()`)
+    * both forms run the exchange's job first.
+    */
+  def collectUpTo[T](ds: Dataset[T], n: Int): Array[T] = {
+    val qe = ds.queryExecution
+    new classic.Dataset[T](qe.sparkSession, LocalLimit(Literal(n), qe.logical),
+      ds.encoder).collect().take(n)
+  }
 
   /** Membership filter on a driver-resident id set. Small sets stay an
     * `isin` (a literal list Catalyst can fold and push as a min/max range);

@@ -19,14 +19,6 @@ import graft.index.CorpusDoc
   */
 object Corpus {
 
-  /** `sha2(content, 256)` — the per-row ingest invariant asserted against
-    * the source on every read (BASELINE.json:15). Reference analog: content
-    * addressing via ledgerhash/txid (db/ledger_header_row.go:12,
-    * db/tx_history_row.go:15).
-    */
-  def withSha(df: DataFrame): DataFrame =
-    df.withColumn("sha256", sha2(col("content"), 256))
-
   /** Map the driver's documents.parquet to the corpus shape. Pure column
     * ops — stays in whole-stage codegen; parquet scan reads only the used
     * columns.

@@ -211,6 +211,27 @@ object Fs {
   /** Last path component (works for both `file:/x/y` and `/x/y`). */
   def name(path: String): String = new Path(path).getName
 
+  /** Delete the siblings of a stamped artifact dir `<prefix>-<stamp>` that
+    * carry a DIFFERENT stamp — a source or index-state change mints a fresh
+    * stamped dir, and the old stamp's tree is dead; without this, tmp
+    * accumulates one copy per change. A sibling's stamp is its name after
+    * `<prefix>-` up to the next '-' or the end, so `<prefix>-<stamp>-<tag>`
+    * fixtures of the current stamp are kept (the prefix and the stamp hold
+    * no other '-'). Called only when a build is about to run, so queries
+    * never pay the listing.
+    */
+  def sweepStaleStamps(dir: String): Unit = {
+    val name0 = name(dir)
+    val cut = name0.lastIndexOf('-') + 1
+    val (prefix, stamp) = name0.splitAt(cut)
+    listDirs(new Path(dir).getParent.toString)
+      .filter { d =>
+        val n = name(d)
+        n.startsWith(prefix) && n.substring(cut).takeWhile(_ != '-') != stamp
+      }
+      .foreach(delete)
+  }
+
   /** Content fingerprint of a source file/dir: mixes every immediate child
     * file's (name, mtime, length) — strictly stronger than the dir mtime,
     * which has coarse (often 1 s) granularity on many filesystems, so a

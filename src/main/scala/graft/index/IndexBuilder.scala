@@ -79,7 +79,6 @@ object IndexBuilder {
     // of these derives ALL its paths from that one snapshot internally.
     def root: String = snapshot.root
     def segmentDirs: Seq[String] = snapshot.segmentDirs
-    def segmentFingerprint: String = snapshot.fingerprint
     def docmeta(spark: SparkSession): Dataset[DocMeta] = snapshot.docmeta(spark)
     def postings(spark: SparkSession): Dataset[PostingBlock] = snapshot.postings(spark)
     def termstats(spark: SparkSession): Dataset[TermStat] = snapshot.termstats(spark)
@@ -307,7 +306,7 @@ object IndexBuilder {
 
     /** The delete set as a SORTED docId array — the broadcast-friendly
       * Lucene live-docs analog (`binarySearch < 0` = live). Bounded by
-      * `graft.tombstones.maxResident` (default 10M ≈ 80 MB): the set is
+      * `Searcher.MaxAllowDocs` (10M ≈ 80 MB): the set is
       * broadcast to every WAND task, and between compactions it is expected
       * small — a pipeline that tombstones a larger fraction should compact,
       * which purges the set entirely; exceeding the bound fails loudly with
@@ -319,13 +318,13 @@ object IndexBuilder {
       if (dirs.isEmpty) Array.emptyLongArray
       else {
         import spark.implicits._
-        val cap = sys.props.getOrElse("graft.tombstones.maxResident", "10000000").toInt
-        val ids = readTable(spark, Tables.TombstoneIds, dirs.map(_ + "/ids"))
-          .distinct()
-          .limit(cap + 1).as[Long].collect()
+        val cap = graft.query.Searcher.MaxAllowDocs
+        val ids = graft.Tuning.collectUpTo(
+          readTable(spark, Tables.TombstoneIds, dirs.map(_ + "/ids")).distinct().as[Long],
+          cap + 1)
         require(ids.length <= cap,
           s"tombstone set exceeds $cap resident docIds — run Compactor.compact " +
-            "to purge deletes (or raise -Dgraft.tombstones.maxResident)")
+            "to purge deletes")
         java.util.Arrays.sort(ids)
         ids
       }

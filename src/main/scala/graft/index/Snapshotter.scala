@@ -96,6 +96,52 @@ object Snapshotter {
     (rootFiles ++ segFiles ++ tombFiles).sorted
   }
 
+  /** Runs `body` over `items` in one Spark job. Hadoop Configuration is
+    * not Serializable — its entries ship in a broadcast and are rebuilt per
+    * task (loadDefaults=true re-reads core-site etc., the entries overlay
+    * session-specific settings). Each TASK opens one raw FileSystem per
+    * `bases` entry and closes them in a finally (ADVICE r5 item 1: per-file
+    * uncached instances were never closed — on HDFS/S3 each holds
+    * sockets/threads — and re-parsed the full conf per file).
+    */
+  private def onExecutors[A: scala.reflect.ClassTag, B: scala.reflect.ClassTag](
+      spark: SparkSession, items: Seq[A], bases: IndexedSeq[String])(
+      body: (IndexedSeq[org.apache.hadoop.fs.FileSystem], A) => B): Seq[B] = {
+    if (items.isEmpty) return Seq.empty
+    val confEntries: Array[(String, String)] = {
+      val it = spark.sessionState.newHadoopConf().iterator()
+      val buf = Array.newBuilder[(String, String)]
+      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
+      buf.result()
+    }
+    val bConf = spark.sparkContext.broadcast(confEntries)
+    val slices = math.min(items.size,
+      math.max(1, spark.sparkContext.defaultParallelism * 2))
+    spark.sparkContext.parallelize(items, slices).mapPartitions { it =>
+      val conf = new Configuration()
+      bConf.value.foreach { case (k, v) => conf.set(k, v) }
+      val fss = bases.map(b => rawFs(new Path(s"$b/_probe"), conf))
+      try it.map(body(fss, _)).toVector.iterator
+      finally fss.foreach(_.close())
+    }.collect().toSeq
+  }
+
+  /** Streams `in` to its end through sha256, copying every byte to `copy`
+    * if given; returns (length, hex digest). Closes neither stream.
+    */
+  private def sha256Of(in: java.io.InputStream,
+                       copy: Option[java.io.OutputStream]): (Long, String) = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = new Array[Byte](1 << 16)
+    var len = 0L
+    var n = in.read(buf)
+    while (n >= 0) {
+      if (n > 0) { md.update(buf, 0, n); copy.foreach(_.write(buf, 0, n)); len += n }
+      n = in.read(buf)
+    }
+    (len, md.digest().map("%02x".format(_)).mkString)
+  }
+
   /** Distributed copy `srcDir/rel → dstDir/rel` for every rel, streaming
     * each file through sha256 once. `expect` (restore path) verifies
     * length+sha against the manifest DURING the copy and fails loudly on
@@ -104,61 +150,21 @@ object Snapshotter {
   private def copyAll(spark: SparkSession, srcDir: String, dstDir: String,
                       rels: Seq[String],
                       expect: Map[String, Entry]): Seq[Entry] = {
-    if (rels.isEmpty) return Seq.empty
-    // Hadoop Configuration is not Serializable — ship its entries and
-    // rebuild per task (loadDefaults=true re-reads core-site etc., the
-    // entries overlay session-specific settings)
-    val confEntries: Array[(String, String)] = {
-      val c = spark.sessionState.newHadoopConf()
-      val it = c.iterator()
-      val buf = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.result()
-    }
-    val bConf = spark.sparkContext.broadcast(confEntries)
     val bExpect = spark.sparkContext.broadcast(expect)
-    val slices = math.min(rels.size,
-      math.max(1, spark.sparkContext.defaultParallelism * 2))
-    // ONE Configuration + one (src, dst) FileSystem pair per TASK, closed in
-    // a finally (ADVICE r5 item 1: the per-file uncached instances were
-    // never closed — on HDFS/S3 each holds sockets/threads, leaking executor
-    // resources over large snapshots; per-file construction also re-parsed
-    // the full conf per copy).
-    spark.sparkContext.parallelize(rels, slices).mapPartitions { relIt =>
-      val conf = new Configuration()
-      bConf.value.foreach { case (k, v) => conf.set(k, v) }
-      val sfs = rawFs(new Path(s"$srcDir/_probe"), conf)
-      val dfs = rawFs(new Path(s"$dstDir/_probe"), conf)
-      val out0 = Seq.newBuilder[Entry]
-      try {
-        relIt.foreach { rel =>
-          val src = new Path(s"$srcDir/$rel")
-          val dst = new Path(s"$dstDir/$rel")
-          dfs.mkdirs(dst.getParent)
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          val in = sfs.open(src)
-          val out = dfs.create(dst, true)
-          var len = 0L
-          try {
-            val buf = new Array[Byte](1 << 16)
-            var n = in.read(buf)
-            while (n >= 0) {
-              if (n > 0) { md.update(buf, 0, n); out.write(buf, 0, n); len += n }
-              n = in.read(buf)
-            }
-          } finally { in.close(); out.close() }
-          val sha = md.digest().map("%02x".format(_)).mkString
-          bExpect.value.get(rel).foreach { e =>
-            if (e.len != len || e.sha256 != sha)
-              throw new IllegalStateException(
-                s"snapshot file $rel corrupt: manifest says (len=${e.len}, " +
-                  s"sha=${e.sha256}), copied (len=$len, sha=$sha)")
-          }
-          out0 += Entry(rel, len, sha)
-        }
-      } finally { sfs.close(); dfs.close() }
-      out0.result().iterator
-    }.collect().toSeq.sortBy(_.rel)
+    onExecutors(spark, rels, Vector(srcDir, dstDir)) { (fss, rel) =>
+      val dst = new Path(s"$dstDir/$rel")
+      fss(1).mkdirs(dst.getParent)
+      val in = fss(0).open(new Path(s"$srcDir/$rel"))
+      val out = fss(1).create(dst, true)
+      val (len, sha) = try sha256Of(in, Some(out)) finally { in.close(); out.close() }
+      bExpect.value.get(rel).foreach { e =>
+        if (e.len != len || e.sha256 != sha)
+          throw new IllegalStateException(
+            s"snapshot file $rel corrupt: manifest says (len=${e.len}, " +
+              s"sha=${e.sha256}), copied (len=$len, sha=$sha)")
+      }
+      Entry(rel, len, sha)
+    }.sortBy(_.rel)
   }
 
   private def writeManifest(destDir: String, epoch: Option[String],
@@ -251,46 +257,13 @@ object Snapshotter {
     require(Fs.exists(s"$snapDir/$DoneMarker"),
       s"$snapDir is not a COMPLETED snapshot (no $DoneMarker)")
     val (_, entries) = readManifest(snapDir)
-    val confEntries: Array[(String, String)] = {
-      val c = spark.sessionState.newHadoopConf()
-      val it = c.iterator()
-      val buf = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.result()
-    }
-    val bConf = spark.sparkContext.broadcast(confEntries)
-    val base = snapDir
-    val slices = math.min(math.max(entries.size, 1),
-      math.max(1, spark.sparkContext.defaultParallelism * 2))
-    // one conf + FileSystem per task, closed in finally (same leak fix as
-    // copyAll)
-    spark.sparkContext.parallelize(entries, slices).mapPartitions { entryIt =>
-      val conf = new Configuration()
-      bConf.value.foreach { case (k, v) => conf.set(k, v) }
-      val fs = rawFs(new Path(s"$base/_probe"), conf)
-      val bad = Seq.newBuilder[String]
-      try {
-        entryIt.foreach { e =>
-          val p = new Path(s"$base/${e.rel}")
-          if (!fs.exists(p)) bad += e.rel
-          else {
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            val in = fs.open(p)
-            var len = 0L
-            try {
-              val buf = new Array[Byte](1 << 16)
-              var n = in.read(buf)
-              while (n >= 0) {
-                if (n > 0) { md.update(buf, 0, n); len += n }
-                n = in.read(buf)
-              }
-            } finally in.close()
-            val sha = md.digest().map("%02x".format(_)).mkString
-            if (len != e.len || sha != e.sha256) bad += e.rel
-          }
-        }
-      } finally fs.close()
-      bad.result().iterator
-    }.collect().toSeq.sorted
+    onExecutors(spark, entries, Vector(snapDir)) { (fss, e) =>
+      val p = new Path(s"$snapDir/${e.rel}")
+      val intact = fss(0).exists(p) && {
+        val in = fss(0).open(p)
+        try sha256Of(in, None) == (e.len -> e.sha256) finally in.close()
+      }
+      Option.when(!intact)(e.rel)
+    }.flatten.sorted
   }
 }

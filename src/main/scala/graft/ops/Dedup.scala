@@ -176,7 +176,6 @@ object Dedup {
     */
   def minhashLshPairs(spark: SparkSession, sfDir: String, threshold: Double = 0.6): DataFrame = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val buckets = bandBuckets(spark, docs(spark, sfDir))
     val cands = buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
@@ -209,14 +208,13 @@ object Dedup {
     val candDocsDf = cands
       .select(explode(array(col("a"), col("b"))).as("doc_id"))
       .distinct()
-    val maxDriverCands = 100000
     val probed: Array[Long] =
-      candDocsDf.limit(maxDriverCands + 1).as[Long].collect().sorted
+      graft.Tuning.collectUpTo(candDocsDf.as[Long], graft.Tuning.MaxDriverCands + 1).sorted
     if (probed.isEmpty)
       return spark.range(0)
         .select(col("id").as("a"), col("id").as("b"), col("id").as("jacc_q"))
     val candDocs: DataFrame => DataFrame =
-      if (probed.length <= maxDriverCands)
+      if (probed.length <= graft.Tuning.MaxDriverCands)
         df => graft.Tuning.idFilter(spark, df, "doc_id", probed)
       else
         _.join(candDocsDf, Seq("doc_id"), "left_semi")
@@ -265,15 +263,14 @@ object Dedup {
     * appearing in ≥1 pair.
     */
   def dedupClusters(spark: SparkSession, sfDir: String, threshold: Double = 0.6,
-                    maxDriverPairs: Int = 100000): DataFrame = {
+                    maxDriverPairs: Int = graft.Tuning.MaxDriverCands): DataFrame = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     // materialize the pair pipeline ONCE (band join + exact verify are the
     // dominant cost); both the size probe and the edge set read the
     // checkpoint — probing the lazy plan would execute it twice
     val pairsCp = minhashLshPairs(spark, sfDir, threshold)
       .select(col("a"), col("b")).localCheckpoint(true)
-    val probed = pairsCp.limit(maxDriverPairs + 1).as[(Long, Long)].collect()
+    val probed = graft.Tuning.collectUpTo(pairsCp.as[(Long, Long)], maxDriverPairs + 1)
     if (probed.length <= maxDriverPairs) {
       pairsCp.unpersist(blocking = false)
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -374,7 +371,6 @@ object Dedup {
   def decontaminatePairs(spark: SparkSession, corpus: DataFrame, ref: DataFrame,
                          threshold: Double = 0.6): DataFrame = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     // materialize the signature+band-join pipeline ONCE (it is the
     // dominant cost; collecting each side's id set from the lazy plan
     // would re-run both corpora's MinHash maps per collect) — the same
@@ -398,15 +394,15 @@ object Dedup {
     // candidate pair set is LSH's output — normally driver-small; ONE
     // collect yields both sides' id sets as IN filters, else fall back to
     // distributed semi-joins against the checkpoint
-    val maxDriverCands = 100000
-    val probed = candsCp.limit(maxDriverCands + 1).as[(Long, Long)].collect()
+    val probed = graft.Tuning.collectUpTo(candsCp.as[(Long, Long)],
+      graft.Tuning.MaxDriverCands + 1)
     if (probed.isEmpty) {
       candsCp.unpersist(blocking = false)
       return spark.range(0).select(col("id").as("doc_id"),
         col("id").as("ref_id"), col("id").as("jacc_q"))
     }
     val (shC, shR) =
-      if (probed.length <= maxDriverCands) {
+      if (probed.length <= graft.Tuning.MaxDriverCands) {
         candsCp.unpersist(blocking = false)
         val cIds = probed.map(_._1).distinct.sorted
         val rIds = probed.map(_._2).distinct.sorted

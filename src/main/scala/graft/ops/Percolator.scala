@@ -38,11 +38,11 @@ object Percolator {
     val qterms = queries
       .select(col("query_id"), explode(col("terms")).as("term"))
       .distinct()
-    val bad = queries
+    val bad = graft.Tuning.collectUpTo(queries
       .select(col("query_id"), col("min_match"),
         size(array_distinct(col("terms"))).as("nterms"))
       .filter(col("min_match") < 1 || col("min_match") > col("nterms"))
-      .select(col("query_id")).limit(5).collect()
+      .select(col("query_id")), 5)
     require(bad.isEmpty,
       s"degenerate stored queries (min_match < 1 or > |distinct terms|): " +
         bad.map(_.getString(0)).mkString(", "))

@@ -33,7 +33,8 @@ object Similarity {
   private def queryVector(e: DataFrame, sfDir: String, qId: Long): Array[Float] = {
     val spark = e.sparkSession
     import spark.implicits._
-    val found = e.filter(col("vec_id") === qId).select(col("embedding")).as[Array[Float]].take(1)
+    val found = graft.Tuning.collectUpTo(
+      e.filter(col("vec_id") === qId).select(col("embedding")).as[Array[Float]], 1)
     require(found.nonEmpty, s"no vec_id $qId in $sfDir/embeddings.parquet")
     found.head
   }
@@ -189,27 +190,6 @@ object Similarity {
     s"${sys.props("java.io.tmpdir")}/graft-ann/v2-t$tables-p$planes-$key-${srcStamp(sfDir)}"
   }
 
-  /** Delete sibling artifact dirs for the SAME (geometry, source path) with
-    * a DIFFERENT stamp — a source rewrite mints a fresh stamped dir, and
-    * the old stamp's tree is provably dead (its source content no longer
-    * exists); without this, tmp accumulates one full corpus copy per
-    * rewrite. The stamp is the suffix after the last '-' (the sanitized
-    * key contains no dashes). Called only when a build is about to run, so
-    * queries never pay the listing.
-    */
-  private def sweepStaleStamps(dir: String): Unit = {
-    val cut = dir.lastIndexOf('/')
-    val parent = dir.substring(0, cut)
-    val name = dir.substring(cut + 1)
-    val prefix = name.substring(0, name.lastIndexOf('-') + 1)
-    graft.index.Fs.listDirs(parent)
-      .filter { d =>
-        val n = graft.index.Fs.name(d)
-        n.startsWith(prefix) && n != name
-      }
-      .foreach(graft.index.Fs.delete)
-  }
-
   /** Build (or resume) the LSH bucket table: ONE pass over the corpus
     * computes each vector's `tables` sign-hashes and emits
     * (bucket = table<<32|key, vec_id), written range-sorted on `bucket` so
@@ -224,7 +204,7 @@ object Similarity {
     import spark.implicits._
     val dir = lshBucketsDir(sfDir, tables, planes)
     if (!graft.index.Fs.exists(s"$dir/_DONE")) {
-      sweepStaleStamps(dir)
+      graft.index.Fs.sweepStaleStamps(dir)
       val e = emb(spark, sfDir)
       val dim = e.select(col("embedding")).as[Array[Float]].head().length
       val bPlanes = spark.sparkContext.broadcast(planesFor(tables, planes, dim))
@@ -284,7 +264,6 @@ object Similarity {
     // candidate fraction. At larger n, raise `planes` ∝ log n to keep
     // buckets (and the fraction) small.
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val dir = buildLshBuckets(spark, sfDir, tables, planes)
     val e = emb(spark, sfDir)
     val q = queryVector(e, sfDir, qId)
@@ -315,10 +294,10 @@ object Similarity {
     // and rescore with a narrow IN-filtered scan, the same plan shape as
     // brute force but over the candidate fraction. Degenerate queries
     // exceeding the bound fall back to the distributed semi-join.
-    val maxDriverCands = 100000
-    val probed: Array[Long] = cands.limit(maxDriverCands + 1).as[Long].collect()
+    val probed: Array[Long] =
+      graft.Tuning.collectUpTo(cands.as[Long], graft.Tuning.MaxDriverCands + 1)
     val candVecs =
-      if (probed.length <= maxDriverCands)
+      if (probed.length <= graft.Tuning.MaxDriverCands)
         graft.Tuning.idFilter(spark, e, "vec_id", probed)
       else e.join(cands, Seq("vec_id"), "left_semi")
     val score = new TaskLazy(() => cosineFrom(bq.value)) // query norm once per task
@@ -406,7 +385,7 @@ object Similarity {
   def buildIvf(spark: SparkSession, sfDir: String, lists: Int = 64,
                iters: Int = 2): String = {
     val dir = ivfDir(sfDir, lists)
-    if (!graft.index.Fs.exists(s"$dir/_DONE")) sweepStaleStamps(dir)
+    if (!graft.index.Fs.exists(s"$dir/_DONE")) graft.index.Fs.sweepStaleStamps(dir)
     buildIvfFrom(spark, emb(spark, sfDir), dir, lists, iters)
   }
 

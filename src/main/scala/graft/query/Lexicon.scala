@@ -233,22 +233,12 @@ object Lexicon {
   private[graft] def fuzzyDictDir(v: Snapshot, maxDist: Int): String = {
     // the raw dir's hash rides in the sweep-stable prefix: sanitization
     // alone collapses distinct dirs (/data/idx-a vs /data/idx_a) into one
-    // namespace, and sweepStaleSiblings would then evict the OTHER index's
+    // namespace, and Fs.sweepStaleStamps would then evict the OTHER index's
     // dict on every alternation
     val key = v.dir.replaceAll("[^A-Za-z0-9.]", "_") +
       Integer.toHexString(v.dir.hashCode)
     val fp = Integer.toHexString(v.fingerprint.hashCode)
     s"${sys.props("java.io.tmpdir")}/graft-lex/v1-d$maxDist-$key-$fp"
-  }
-
-  private def sweepStaleSiblings(dir: String): Unit = {
-    val cut = dir.lastIndexOf('/')
-    val parent = dir.substring(0, cut)
-    val name = dir.substring(cut + 1)
-    val prefix = name.substring(0, name.lastIndexOf('-') + 1)
-    Fs.listDirs(parent)
-      .filter { d => val n = Fs.name(d); n.startsWith(prefix) && n != name }
-      .foreach(Fs.delete)
   }
 
   /** Build (or reuse) the SymSpell deletion table for this snapshot:
@@ -263,7 +253,7 @@ object Lexicon {
     val dir = fuzzyDictDir(v, maxDist)
     if (!Fs.exists(s"$dir/_DONE") ||
         !Fs.readString(s"$dir/fingerprint").map(_.trim).contains(v.fingerprint)) {
-      sweepStaleSiblings(dir)
+      Fs.sweepStaleStamps(dir)
       Fs.delete(dir)
       val d = maxDist
       // persisted before the range sort: the boundary sampler executes the

@@ -54,7 +54,7 @@ object Searcher {
     val missing = terms.filterNot(have.contains)
     val fetchedArr: Array[PostingBlock] =
       if (missing.isEmpty) Array.empty
-      else live.snapshot.postingsOf(live.spark, missing).limit(maxBlocks + 1).collect()
+      else graft.Tuning.collectUpTo(live.snapshot.postingsOf(live.spark, missing), maxBlocks + 1)
     if (fetchedArr.length > maxBlocks) return None // volume too large: distribute
     val fetched: Map[String, Array[PostingBlock]] = fetchedArr.groupBy(_.term)
     if (missing.nonEmpty)
@@ -203,7 +203,6 @@ object Searcher {
                     statsOverride: Option[graft.index.IndexStats] = None,
                     dfsOverride: Option[Map[String, Long]] = None): Dataset[Hit] = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val terms = terms0.distinct.sorted
     val live = v.live(spark)
     val (st0, boundFactor0) = live.stats
@@ -318,8 +317,9 @@ object Searcher {
     }
   }
 
-  /** Max driver-resident filter allowlist — same order as the tombstone
-    * resident cap (10M sorted longs ≈ 80 MB broadcast).
+  /** Max driver-resident sorted docId set — the filter allowlist, the
+    * must_not denylist and the tombstone set (Snapshot.tombstoneIds): 10M
+    * sorted longs ≈ 80 MB, broadcast to every WAND task.
     */
   val MaxAllowDocs: Int = 10000000
 
@@ -342,10 +342,8 @@ object Searcher {
                        pred: org.apache.spark.sql.Column,
                        minMatch: Int = 1): Dataset[Hit] = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
-    val allow = v.docmetaAll(spark).toDF()
-      .filter(pred).select(col("docId")).limit(MaxAllowDocs + 1)
-      .as[Long].collect()
+    val allow = graft.Tuning.collectUpTo(v.docmetaAll(spark).toDF()
+      .filter(pred).select(col("docId")).as[Long], MaxAllowDocs + 1)
     require(allow.length <= MaxAllowDocs,
       s"filter matches > $MaxAllowDocs docs — too unselective for the " +
         "allowlist path; join the exhaustive unranked hit stream " +
@@ -422,11 +420,10 @@ object Searcher {
   def mustNotDenySnap(spark: SparkSession, v: Snapshot,
                       mustNot: String): Array[Long] = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     val notTerms = Analyzer.tokens(mustNot, v.mode).toSeq.distinct
     require(notTerms.nonEmpty, "must_not clause analyzed to zero terms")
-    val deny = docsWithAnySnap(spark, v, notTerms)
-      .limit(MaxAllowDocs + 1).as[Long].collect()
+    val deny = graft.Tuning.collectUpTo(
+      docsWithAnySnap(spark, v, notTerms).as[Long], MaxAllowDocs + 1)
     require(deny.length <= MaxAllowDocs,
       s"must_not matches > $MaxAllowDocs docs — too unselective for the " +
         "denylist path; anti-join the exhaustive unranked hit stream " +
@@ -612,7 +609,6 @@ object Searcher {
                         conjunctive: Boolean = false, minMatch: Int = 1,
                         driverPathMaxPostings: Long = DriverPathMaxPostings): DataFrame = {
     import spark.implicits._
-    graft.Tuning.ensureProbeConf(spark) // single-job guarded collects
     require(minMatch >= 1, s"minMatch must be ≥ 1, got $minMatch")
     val terms = Analyzer.tokens(query, v.mode).toSeq.distinct.sorted
     val minM = if (conjunctive) terms.length else minMatch
@@ -713,15 +709,6 @@ object Searcher {
     // (the searchAgg/ranked=false convention)
     if (k == Int.MaxValue) combined
     else combined.orderBy(desc("score_q"), col("docId")).limit(k)
-  }
-
-  def rescore(spark: SparkSession, h: IndexBuilder.Handle, query: String,
-              window: Int, k: Int, queryWeightQ: Long = 1L,
-              rescoreWeightQ: Long = 1L, conjunctive: Boolean = false)(
-              rescoreHits: Snapshot => DataFrame): DataFrame = {
-    val v = h.snapshot
-    rescoreSnap(spark, v, query, window, k, queryWeightQ, rescoreWeightQ,
-      conjunctive, rescoreHits(v))
   }
 
   /** docIds containing ANY of `terms` (one `postingsOf` scan, no

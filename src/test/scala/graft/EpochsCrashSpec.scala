@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{Catalog, Compactor, Epochs, Fs, IndexBuilder}
+import graft.index.{Catalog, Compactor, Epochs, Fs, IndexBuilder, Snapshotter}
 import graft.ops.Similarity
 import graft.query.Searcher
 import graft.streaming.StreamingIngest
@@ -170,6 +170,33 @@ class EpochsCrashSpec extends AnyFunSuite with SparkSuite {
 
   test("mergeSegments returns to the old or the new state after a crash at every filesystem step") {
     postingCrashes(Compactor.mergeSegments(spark, _))
+  }
+
+  test("restore leaves no index or a complete one after a crash at every filesystem step; a retry succeeds") {
+    val snap = s"${tmpDir("graft-crash-snap")}/snap"
+    Snapshotter.snapshot(spark, postingEpochFixture, snap)
+    val want = postingAnswer(postingEpochFixture)
+    // the destination either does not exist yet or is an empty dir
+    for (preCreate <- Seq(false, true)) {
+      def dest(parent: String) = s"$parent/restored"
+      def restore(parent: String): Unit = {
+        if (preCreate && !Fs.exists(dest(parent))) Fs.mkdirs(dest(parent))
+        Snapshotter.restore(spark, snap, dest(parent))
+      }
+      val pristine = tmpDir("graft-restore")
+      val m = crashAt(Int.MaxValue)(restore(pristine))
+      assert(m > 0 && postingAnswer(dest(pristine)) == want)
+      for (n <- 1 to m) {
+        val parent = tmpDir("graft-restore-crash")
+        crashAt(n)(restore(parent))
+        assert(Fs.isAbsentOrEmptyDir(dest(parent)) || postingAnswer(dest(parent)) == want,
+          s"crash at step $n of $m left a partial index")
+        if (Fs.isAbsentOrEmptyDir(dest(parent))) restore(parent)
+        assert(postingAnswer(dest(parent)) == want, s"restore retried after a crash at step $n of $m")
+        assert(Fs.listDirs(parent).map(Fs.name) == Seq("restored"),
+          s"a retry after a crash at step $n of $m left ${Fs.listDirs(parent)}")
+      }
+    }
   }
 
   // ---- IVF index: genesis + one append delta + one delete delta -----------

@@ -531,6 +531,21 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         .select(col("vec_id")).as[Long].collect().toSet))
   }
 
+  test("a base IVF build keeps its own stamp's fixtures and sweeps other stamps") {
+    val dir = tmpDir("graft-ivf-sweep")
+    Similarity.synthEmbeddings(spark, dir, 300L, 16, centers = 6)
+    val base = Similarity.ivfDir(dir, 4)
+    val stale = base.substring(0, base.lastIndexOf('-') + 1) + "stale"
+    Seq(stale, s"$stale-appendfx").foreach(graft.index.Fs.mkdirs)
+    Similarity.ivfAppendTopK(spark, dir, 0L, 10, lists = 4, nprobe = 4).collect()
+    Similarity.buildIvf(spark, dir, 4)
+    assert(graft.index.Fs.exists(s"$base/_DONE"))
+    assert(graft.index.Fs.exists(s"$base-appendfx/_DONE"),
+      "the base build deleted its own stamp's -appendfx fixture")
+    assert(!graft.index.Fs.exists(stale) && !graft.index.Fs.exists(s"$stale-appendfx"),
+      "another stamp's dirs must be swept")
+  }
+
   test("IVF build over a null vec_id fails loudly instead of seeding a centroid from it") {
     import spark.implicits._
     val e = Seq((Option.empty[Long], Array(0.5f, 0.25f), 0)).toDF("vec_id", "embedding", "label")
