@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, LocatedFileStatus, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side filesystem helpers routed through Hadoop's FileSystem API, so
@@ -49,17 +49,37 @@ object Fs {
     out.close()
   }
 
-  def writeString(path: String, s: String): Unit = {
-    beforeMutation("writeString", path)
-    val (fs, p) = fsOf(path)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+  /** A protocol text file's file system: the raw one under a checksummed
+    * file system (Hadoop's local one), plus the checksum sidecar an older
+    * write may have left. A checksummed rewrite writes the file and its
+    * `.crc` as two files, so two overlapping rewrites (a lock holder's
+    * heartbeat and a stealer) can leave them from different writes, and a
+    * reader in another process then fails with a ChecksumException instead
+    * of reading a token. `_MAINT`, `CURRENT`, the lists and `_gc` are small,
+    * written whole and read whole, so they carry none.
+    */
+  private def rawOf(path: String): (FileSystem, Path, Option[Path]) = fsOf(path) match {
+    case (c: ChecksumFileSystem, p) => (c.getRawFileSystem, p, Some(c.getChecksumFile(p)))
+    case (fs, p) => (fs, p, None)
   }
 
+  /** Write a text file whole, with no checksum sidecar (`rawOf`); a
+    * sidecar an older write left is removed first.
+    */
+  def writeString(path: String, s: String): Unit = {
+    beforeMutation("writeString", path)
+    val (fs, p, crc) = rawOf(path)
+    fs.mkdirs(p.getParent)
+    crc.foreach(fs.delete(_, false))
+    val out = fs.create(p, true)
+    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** A text file written by `writeString` or `atomicWrite`, read raw: no
+    * checksum is checked.
+    */
   def readString(path: String): Option[String] = {
-    val (fs, p) = fsOf(path)
+    val (fs, p, _) = rawOf(path)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -155,6 +175,8 @@ object Fs {
     val tmp = s"$path.tmp"
     writeString(tmp, content)
     beforeMutation("atomicWrite", path)
+    // the rename moves no sidecar: drop one an older write left on `path`
+    rawOf(path) match { case (fs, _, crc) => crc.foreach(fs.delete(_, false)) }
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(new Path(path).toUri, conf)
     fc.rename(new Path(tmp), new Path(path), Options.Rename.OVERWRITE)
   }
@@ -200,11 +222,15 @@ object Fs {
   }
 
   /** Footer (schema, row groups and their column statistics) of one
-    * parquet file.
+    * listed parquet file. The read options take the session's Hadoop conf:
+    * parquet's conf-less default builds a fresh Configuration, which loads
+    * its resources on every open.
     */
-  def parquetFooter(path: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+  def parquetFooter(status: FileStatus): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val c = conf
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, c),
+      org.apache.parquet.HadoopReadOptions.builder(c).build())
     try r.getFooter finally r.close()
   }
 

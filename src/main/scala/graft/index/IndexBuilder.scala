@@ -124,23 +124,21 @@ object IndexBuilder {
   def readTable(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
     spark.read.schema(schema).parquet(paths: _*)
 
-  /** The relation `readTable` resolves for the `listed` files plus
-    * `paths`, built from a file index of exactly those: the listed files
-    * keep their statuses, so only `paths` are listed, and DataSource's
-    * per-call path globbing and existence checks (each on a new thread
-    * pool) are skipped. A query reading a subset of listed files thus
-    * makes no filesystem call and starts no thread. For paths known to
-    * exist (listed or committed ones).
+  /** The relation `readTable` resolves for the `listed` files, built from
+    * a file index of exactly those: the files keep their statuses, so
+    * nothing is listed, and DataSource's per-call path globbing and
+    * existence checks (each on a new thread pool) are skipped. A query
+    * reading a subset of listed files thus makes no filesystem call and
+    * starts no thread.
     */
-  def readFiles(spark: SparkSession, schema: StructType, listed: Seq[FileStatus],
-                paths: Seq[String]): DataFrame = {
+  def readFiles(spark: SparkSession, schema: StructType, listed: Seq[FileStatus]): DataFrame = {
     val known = listed.map(s => s.getPath -> Array(s)).toMap
     val statuses = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] = known.get(path)
       override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
-    val index = new InMemoryFileIndex(spark, listed.map(_.getPath) ++ paths.map(new Path(_)),
+    val index = new InMemoryFileIndex(spark, listed.map(_.getPath),
       Map.empty, Some(schema), statuses)
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
       None, new ParquetFileFormat, Map.empty)(spark))
@@ -156,7 +154,7 @@ object IndexBuilder {
     * its `Live` (Live.scala), resolved once per (session, dir,
     * fingerprint): nothing derived can change without the fingerprint
     * changing (every commit and every stage rewrite stamps it —
-    * Catalog.scala), so a cold query pays only its pruned scan.
+    * Catalog.scala), so a cold query pays only its postings read.
     */
   final case class Snapshot(dir: String, mode: Analyzer.Mode, state: Catalog.State) {
 
@@ -250,24 +248,23 @@ object IndexBuilder {
       */
     def rootRanges: Seq[TermRanges.FileRange] = live(SparkSession.active).rootRanges
 
-    /** The postings of `terms` — every term-filtered postings read goes
-      * through here. The relation is the root files whose footer term range
-      * can hold one of `terms` (a file without term statistics always
-      * qualifies) plus every live segment's blocks, filtered on
-      * `term isin terms`; parquet row-group statistics then prune inside
-      * the files read. No qualifying file ⇒ an empty Dataset, which runs
-      * no job. The relation is built per call from the root files'
-      * statuses, listed with their ranges (`readFiles`): no filesystem call
-      * for root files, and a cost that does not depend on which file
+    /** The postings of `terms` as a Spark relation — the distributed
+      * path's read (the coordinator probe reads the same files on the
+      * driver: Live.readBlocks). The relation is the root and segment
+      * files whose footer term range can hold one of `terms`
+      * (Live.filesHolding; a file without term statistics always
+      * qualifies), filtered on `term isin terms`; parquet row-group
+      * statistics then prune inside the files read. No qualifying file ⇒
+      * an empty Dataset, which runs no job. The relation is built per call
+      * from the files' statuses, listed once per state (`readFiles`): no
+      * filesystem call, and a cost that does not depend on which file
       * subsets earlier queries read.
       */
     def postingsOf(spark: SparkSession, terms: Seq[String]): Dataset[PostingBlock] = {
       import spark.implicits._
-      val keys = terms.map(TermRanges.utf8)
-      val picked = live(spark).rootRanges.filter(r => keys.exists(r.mayHold)).map(_.status)
-      val segments = segmentDirs.map(_ + "/blocks")
-      if (picked.isEmpty && segments.isEmpty) spark.emptyDataset[PostingBlock]
-      else readFiles(spark, Tables.Postings, picked, segments)
+      val picked = live(spark).filesHolding(terms).map(_.status)
+      if (picked.isEmpty) spark.emptyDataset[PostingBlock]
+      else readFiles(spark, Tables.Postings, picked)
         .filter(col("term").isin(terms: _*)).as[PostingBlock]
     }
 

@@ -9,7 +9,9 @@ import graft.index.IndexBuilder.{Snapshot, Tables, readStatsCompat, readTable}
   * fingerprint of one dir) — the analog of a Lucene reader opened on one
   * point-in-time commit, with its caches hanging off it. Each part is
   * resolved at most once, on first use: the batch ∪ segments relations,
-  * the root postings footer ranges, the live stats and WAND bound factor,
+  * the listed postings files of the root and of every live segment with
+  * their footers and term ranges, the Hadoop conf the driver reads them
+  * with, the live stats and WAND bound factor,
   * the sorted delete set and its broadcast, and the per-term df and
   * posting-block memos.
   *
@@ -39,6 +41,30 @@ final class Live private[index] (val spark: SparkSession, val snapshot: Snapshot
     if (ranges == null) ranges = TermRanges.fileRanges(s"${snapshot.root}/postings")
     ranges
   }
+
+  /** Footer term ranges of every live segment's `blocks` files, listed
+    * once per state.
+    */
+  private lazy val segmentRanges: Seq[TermRanges.FileRange] =
+    snapshot.segmentDirs.flatMap(d => TermRanges.fileRanges(s"$d/blocks"))
+
+  /** The postings files, root and segment, whose footer term range can
+    * hold one of `terms` (a file without term statistics always can) —
+    * every term probe reads these and only these. No filesystem call.
+    */
+  def filesHolding(terms: Seq[String]): Seq[TermRanges.FileRange] = {
+    val keys = terms.map(TermRanges.utf8)
+    (rootRanges ++ segmentRanges).filter(r => keys.exists(r.mayHold))
+  }
+
+  /** The session's Hadoop conf, resolved once per state for the driver reads. */
+  private lazy val hadoopConf = spark.sessionState.newHadoopConf()
+
+  /** Up to `limit` blocks of `terms`, read on the driver from
+    * `filesHolding(terms)` (PostingsReader): no Spark job.
+    */
+  private[graft] def readBlocks(terms: Seq[String], limit: Int): Array[PostingBlock] =
+    PostingsReader.read(hadoopConf, filesHolding(terms), terms, limit)
 
   /** Live corpus stats over batch + streamed segments, plus the WAND
     * bound factor. Each source's blocks store maxImpact computed with the

@@ -2,6 +2,7 @@ package graft.index
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -144,11 +145,15 @@ object TermRanges {
     boundsOf(sample, parts)
   }
 
-  /** A postings file (its listed status) and the [min, max] of its `term`
-    * column over all its row groups — None when any row group lacks term
-    * statistics (such a file can hold any term).
+  /** A postings file: its listed status, its footer (schema, row groups
+    * and their column statistics) and the [min, max] of its `term` column
+    * over all its row groups — None when any row group lacks term
+    * statistics (such a file can hold any term). A term probe selects files
+    * by the range and opens them with the footer (`PostingsReader`), so a
+    * probe lists no directory and reads no footer again.
     */
-  final case class FileRange(status: FileStatus, range: Option[(Array[Byte], Array[Byte])]) {
+  final case class FileRange(status: FileStatus, footer: ParquetMetadata,
+                             range: Option[(Array[Byte], Array[Byte])]) {
     def path: String = status.getPath.toString
     def mayHold(term: Array[Byte]): Boolean = range.forall { case (lo, hi) =>
       compareBytes(lo, term) <= 0 && compareBytes(term, hi) <= 0
@@ -163,7 +168,8 @@ object TermRanges {
   def fileRanges(tableDir: String): Seq[FileRange] =
     Fs.listLocatedFiles(tableDir).flatMap { f =>
       import scala.jdk.CollectionConverters._
-      val groups = Fs.parquetFooter(f.getPath.toString).getBlocks.asScala.toSeq
+      val footer = Fs.parquetFooter(f)
+      val groups = footer.getBlocks.asScala.toSeq
       val perGroup = groups.map { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == "term")
           .map(_.getStatistics)
@@ -174,7 +180,7 @@ object TermRanges {
         if (perGroup.exists(_.isEmpty)) None
         else Some((perGroup.flatten.map(_._1).reduce((a, b) => if (compareBytes(a, b) <= 0) a else b),
           perGroup.flatten.map(_._2).reduce((a, b) => if (compareBytes(a, b) >= 0) a else b)))
-      if (groups.isEmpty) None else Some(FileRange(f, range))
+      if (groups.isEmpty) None else Some(FileRange(f, footer, range))
     }
 
   /** True when two files' term ranges overlap beyond a shared boundary

@@ -65,7 +65,7 @@ final class IvfLive private (spark: SparkSession, val root: String,
     * included; reads only those lists' files.
     */
   def emb(lists: Seq[Int]): DataFrame =
-    IndexBuilder.readFiles(spark, Emb, lists.flatMap(byList.getOrElse(_, Nil)), Nil)
+    IndexBuilder.readFiles(spark, Emb, lists.flatMap(byList.getOrElse(_, Nil)))
 
   /** Every vector of this state, deletes included. */
   def embAll: DataFrame = emb(byList.keys.toSeq)

@@ -20,7 +20,10 @@ import graft.index.IndexBuilder.Snapshot
   * row groups inside the files read via min/max stats on the sorted `term`
   * column. At 1000 executors this is: k small broadcasts + one pruned scan
   * of the files holding the terms + S-way parallel WAND + a k·S-row merge
-  * on the driver side of a TakeOrderedAndProject.
+  * on the driver side of a TakeOrderedAndProject. A query whose postings
+  * fit the coordinator (DriverPathMaxPostings) runs no Spark job at all:
+  * its blocks are read on the driver from the same files
+  * (Live.readBlocks) and scored there.
   */
 object Searcher {
 
@@ -33,28 +36,26 @@ object Searcher {
     */
   val MaxCachedPostings: Long = 4000000L
 
-  /** Optimistic coordinator fetch: collected blocks for `terms`, served
-    * from the state's bounded per-term memo (Live.blocks); misses fetched
-    * in ONE filtered, LIMITed collect over `postingsOf(missing)` — only the
-    * files whose term range holds a missing term, row groups pruned inside
-    * them. `None` = the fetch hit the block limit — the posting volume is
-    * too large for the coordinator, caller takes the distributed path.
-    * Fusing the df lookup away is the point: df per term ≡ Σ block n (an
-    * index invariant EngineSpec asserts), so a cold coordinator query costs
-    * ONE scan job, not a termstats job + a postings job — and no planning
-    * job either: the pruned relation is built from the listed files with
-    * a declared schema (Snapshot), so the probe's collect is the only job
-    * (EngineSpec counts it), and its tasks cover only the files read.
-    * Residency is bounded by query df — a hot repeated term costs its own
-    * postings once, and the whole memo never exceeds MaxCachedPostings.
+  /** Optimistic coordinator fetch: blocks for `terms`, served from the
+    * state's bounded per-term memo (Live.blocks); misses read on the
+    * driver in ONE bounded read (Live.readBlocks) of only the files whose
+    * footer term range holds a missing term, row groups and pages pruned
+    * inside them. `None` = the read hit the block limit — the posting
+    * volume is too large for the coordinator, caller takes the distributed
+    * path. Fusing the df lookup away is the point: df per term ≡ Σ block n
+    * (an index invariant EngineSpec asserts), so a cold coordinator query
+    * needs no termstats job — and the read itself is no Spark job either:
+    * no Catalyst planning, no task, no Hadoop-conf broadcast (EngineSpec
+    * counts zero jobs and the files opened). Residency is bounded by query
+    * df — a hot repeated term costs its own postings once, and the whole
+    * memo never exceeds MaxCachedPostings.
     */
   private def blocksProbe(live: Live, terms: Seq[String], maxBlocks: Int,
                           postingsBudget: Long): Option[Seq[PostingBlock]] = {
     val have = terms.flatMap(t => live.blocks.get(t).map(t -> _)).toMap
     val missing = terms.filterNot(have.contains)
     val fetchedArr: Array[PostingBlock] =
-      if (missing.isEmpty) Array.empty
-      else graft.Tuning.collectUpTo(live.snapshot.postingsOf(live.spark, missing), maxBlocks + 1)
+      if (missing.isEmpty) Array.empty else live.readBlocks(missing, maxBlocks + 1)
     if (fetchedArr.length > maxBlocks) return None // volume too large: distribute
     val fetched: Map[String, Array[PostingBlock]] = fetchedArr.groupBy(_.term)
     if (missing.nonEmpty)
@@ -111,9 +112,9 @@ object Searcher {
     }.toArray.sortBy(_.term)
 
   /** Σdf below which the coordinator executes the query itself over
-    * collected blocks (one job scanning the files that hold the terms, no
-    * shuffle) — the ES coordinating-node analog. Above it, per-salt
-    * distributed WAND.
+    * blocks read on the driver (Live.readBlocks: no Spark job, no shuffle)
+    * — the ES coordinating-node analog. Above it, per-salt distributed
+    * WAND.
     */
   val DriverPathMaxPostings = 500000L
 
@@ -148,17 +149,17 @@ object Searcher {
   /** Disjunctive (OR, the Lucene `match` default) BM25 top-k.
     * k = Int.MaxValue ⇒ exhaustive: every matching doc, ranked.
     *
-    * Execution is adaptive: an optimistic coordinator probe collects the
-    * query terms' blocks in ONE limited job over `postingsOf(terms)` — the
-    * root files whose term range holds a query term plus the live
-    * segments, row groups pruned inside them (df derives from the blocks
-    * themselves — no separate termstats job; the relation has a declared
-    * schema, so no schema-inference job precedes it; zero jobs when the
-    * terms are warm in the per-term cache). The first query on a new
-    * index state also reads every source's stats in one job (liveStats,
-    * memoized per state) and, once per root, the root postings footers on
-    * the driver. If the probe hits its block bound, the query re-plans as
-    * distributed per-salt WAND over the same pruned relation + a global
+    * Execution is adaptive: an optimistic coordinator probe reads the
+    * query terms' blocks on the driver, bounded, from the root and segment
+    * files whose term range holds a query term, row groups and pages
+    * pruned inside them (df derives from the blocks themselves — no
+    * separate termstats job; the read is no Spark job either, so a cold
+    * coordinator query runs none, and a warm one is served from the
+    * per-term cache). The first query on a new index state also reads
+    * every source's stats in one job (liveStats, memoized per state) and,
+    * once per state, the postings footers on the driver. If the probe hits
+    * its block bound, the query re-plans as distributed per-salt WAND over
+    * `postingsOf(terms)`, the same files as a Spark relation, + a global
     * TakeOrderedAndProject merge.
     * Results are identical — salts are disjoint sub-indexes either way
     * (EngineSpec asserts path identity).
@@ -305,9 +306,9 @@ object Searcher {
 
     if (driverPathMaxPostings <= 0L) distributed()
     else {
-      // optimistic coordinator probe: one limited pruned-scan collect; the
-      // block bound keeps coordinator postings ≤ driverPathMaxPostings even
-      // when every block is full
+      // optimistic coordinator probe: one bounded driver read; the block
+      // bound keeps coordinator postings ≤ driverPathMaxPostings even when
+      // every block is full
       val maxBlocks = math.max(64L,
         driverPathMaxPostings / graft.index.Codec.BlockSize).toInt
       blocksProbe(live, terms, maxBlocks, driverPathMaxPostings) match {
@@ -592,8 +593,8 @@ object Searcher {
     *  - single live term, no tombstones: df from the cached termstats memo —
     *    ZERO posting IO, zero jobs when warm (the index invariant
     *    df ≡ Σ block n makes the metadata answer exact);
-    *  - coordinator path: the same bounded block probe as topK, counted on
-    *    the driver — one job over the files holding the terms;
+    *  - coordinator path: the same bounded block probe as topK, read and
+    *    counted on the driver — no Spark job;
     *  - distributed: `postingsOf` scan → per-salt membership count inside
     *    `mapGroups` (salts are disjoint docId ranges, so per-salt counts SUM
     *    — no distinct, no shuffle beyond the query terms' blocks) → one

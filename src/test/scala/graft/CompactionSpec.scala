@@ -595,16 +595,21 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     * file layout: "hash" is the layout indexes had before term ranges
     * (hash-partitioned on (term, salt): every file spans the dictionary);
     * "range" is the term-range layout, with the range partitions named in
-    * `noStats` written without column statistics.
+    * `noStats` written without column statistics, and with small row groups
+    * and pages if `small`.
     */
   private def rewritePostings(dir: String, blocks: Seq[PostingBlock], layout: String,
-                              noStats: Set[Int] = Set.empty): Unit = {
+                              noStats: Set[Int] = Set.empty, small: Boolean = false): Unit = {
     import spark.implicits._
     val parts = 4
     val out = tmpDir("graft-relayout") + "/postings"
+    // `small`: a row group per ~10 rows and a page per 4, so row-group
+    // statistics and the column index both prune
+    val sizes = if (small) Map("parquet.block.row.count.limit" -> "10", "parquet.page.row.count.limit" -> "4")
+      else Map.empty[String, String]
     def write(bs: Seq[PostingBlock], key: Seq[org.apache.spark.sql.Column], stats: Boolean) =
       bs.toDS().repartition(parts, key: _*).sortWithinPartitions($"term", $"salt", $"blockIdx")
-        .write.option("parquet.column.statistics.enabled", stats.toString)
+        .write.option("parquet.column.statistics.enabled", stats.toString).options(sizes)
         .mode("append").parquet(out)
     layout match {
       case "hash" => write(blocks, Seq($"term", $"salt"), stats = true)
@@ -643,11 +648,14 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     val v = h.snapshot
     assert(v.segmentDirs.size == 1)
     assert(v.rootRanges eq built, "a segment commit must not re-read the root's footers")
-    val segFiles = Fs.listFiles(v.segmentDirs.head + "/blocks").filter(_.endsWith(".parquet"))
+    val segFiles = TermRanges.fileRanges(v.segmentDirs.head + "/blocks")
+    assert(segFiles.nonEmpty && segFiles.forall(_.range.isDefined))
     for (t <- Seq("the", "import", "def", "zzz_nothing_like_it") ++ h.termstats(spark).collect().map(_.term).take(3)) {
-      val want = built.filter(_.mayHold(TermRanges.utf8(t))).map(_.path) ++ segFiles
+      val want = (built ++ segFiles).filter(_.mayHold(TermRanges.utf8(t))).map(_.path)
       assert(local(v.postingsOf(spark, Seq(t)).inputFiles) == local(want), s"files read for '$t'")
     }
+    assert(v.postingsOf(spark, Seq("zzz_nothing_like_it")).inputFiles.isEmpty,
+      "a term outside every root and segment range reads no file")
     val before = queries.map(q => q -> byCommit(h, q)).toMap
     val hc = Compactor.compact(spark, idx, cfg)
     val folded = rootFiles(hc)
@@ -696,19 +704,20 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     for (q <- queries) assert(byCommit(h, q) == before(q), s"results changed for '$q'")
   }
 
+  // In UTF-16 code-unit order (String.compareTo) U+1D49C sorts BELOW
+  // U+E000 and U+FFFD; in UTF-8 byte order, Parquet's, above them.
+  private def exotic(t: String): String = t.head match {
+    case c if c < 'h' => "\uE000" + t
+    case c if c < 'p' => "\uFFFD" + t
+    case c if c <= 'z' => "\uD835\uDC9C" + t
+    case _ => t
+  }
+
   test("terms with supplementary-plane and U+E000..U+FFFF characters are found") {
     import spark.implicits._
     val idx = tmpDir("graft-unicode-idx")
     val h = IndexBuilder.build(spark, (0 until 80).map(i => Corpus.synthDoc(i, 53L)).toDS(),
       idx, IndexBuilder.Config(salts = 4))
-    // In UTF-16 code-unit order (String.compareTo) U+1D49C sorts BELOW
-    // U+E000 and U+FFFD; in UTF-8 byte order, Parquet's, above them.
-    def exotic(t: String): String = t.head match {
-      case c if c < 'h' => "\uE000" + t
-      case c if c < 'p' => "\uFFFD" + t
-      case c if c <= 'z' => "\uD835\uDC9C" + t
-      case _ => t
-    }
     val terms = h.termstats(spark).collect().map(_.term).sorted.grouped(6).map(_.head).toSeq
     val want = terms.map(t => Searcher.termLookup(spark, h, t).collect().map(_.getLong(0)).toSeq)
     val ranked = Seq("the import", "def merge").map(q =>
@@ -722,6 +731,58 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     for ((q, hits) <- Seq("the import", "def merge").zip(ranked))
       assert(Searcher.topKTermsSnap(spark, h.snapshot,
         graft.analyze.Analyzer.tokens(q, h.mode).toSeq.map(exotic), 10).collect().toSeq == hits)
+  }
+
+  test("the driver probe reads exactly the blocks postingsOf collects") {
+    import spark.implicits._
+    val all = (0 until 110).map(i => Corpus.synthDoc(i, 59L))
+    val idx = tmpDir("graft-probe-idx")
+    val h = IndexBuilder.build(spark, all.take(80).toDS(), idx, IndexBuilder.Config(salts = 4))
+    val vocab = h.termstats(spark).collect().map(_.term).sorted
+    val rnd = new scala.util.Random(59L)
+    // random sets of 1–4 terms, some with a term the index lacks
+    val termSets = Seq.fill(16)(Seq.fill(1 + rnd.nextInt(4))(vocab(rnd.nextInt(vocab.length))) ++
+      (if (rnd.nextBoolean()) Seq("zzz_absent") else Nil))
+    def fields(b: PostingBlock) = (b.term, b.salt, b.blockIdx, b.firstDocId, b.lastDocId, b.n,
+      Seq(b.docDeltas, b.tfs, b.dls).map(a => Option(a).map(_.toSeq)), b.maxImpact)
+    def multiset(bs: Seq[PostingBlock]) = bs.groupBy(fields).map { case (k, xs) => k -> xs.size }
+    def same(fixture: String, sets: Seq[Seq[String]] = termSets): Unit = {
+      val v = h.snapshot
+      var total = 0
+      for (terms <- sets) {
+        val driver = v.live(spark).readBlocks(terms, Int.MaxValue).toSeq
+        val viaSpark = v.postingsOf(spark, terms).collect().toSeq
+        assert(multiset(driver) == multiset(viaSpark), s"[$fixture] blocks of ${terms.mkString(" ")}")
+        total += driver.size
+      }
+      assert(total > 0, s"[$fixture] the term sets must find blocks")
+    }
+    same("fresh build")
+    // a term in no file's range opens no file
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    graft.index.PostingsReader.beforeOpen = p => opened.add(p)
+    try assert(h.snapshot.live(spark).readBlocks(Seq("~"), Int.MaxValue).isEmpty)
+    finally graft.index.PostingsReader.beforeOpen = _ => ()
+    assert(opened.isEmpty, s"opened $opened")
+    val avgdl = h.stats(spark).avgdl
+    for (b <- 0 until 3)
+      StreamingIngest.appendSegment(spark, all.slice(80 + 10 * b, 90 + 10 * b).toDS(), b.toLong,
+        idx, avgdl, 4, 1L << 40)
+    assert(h.segmentDirs.size == 3)
+    same("3 live segments")
+    val blocks = h.postings(spark).collect().toSeq
+    rewritePostings(idx, blocks, "hash")
+    assert(TermRanges.overlapping(rootFiles(h)))
+    same("hash layout")
+    rewritePostings(idx, blocks, "range", noStats = Set(3))
+    assert(rootFiles(h).exists(_.range.isEmpty))
+    same("a file without term statistics")
+    rewritePostings(idx, blocks, "range", small = true)
+    val groups = rootFiles(h).map(_.footer.getBlocks.size)
+    assert(groups.sum > 2 * groups.size, s"fixture: row groups per file $groups")
+    same("small row groups and pages")
+    rewritePostings(idx, blocks.map(b => b.copy(term = exotic(b.term))), "range")
+    same("supplementary-plane and U+E000 terms", termSets.map(ts => ts ++ ts.map(exotic)))
   }
 
   test("phrase query on an index without the positional tier fails loudly") {

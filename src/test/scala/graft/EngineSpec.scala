@@ -281,22 +281,22 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
     assert(warmJobs <= 1, s"warm query ran $warmJobs jobs — term cache not effective")
   }
 
-  test("a cold coordinator-path query runs exactly one Spark job: the probe") {
-    // fresh index state: its first query resolves the stats (one job) and
-    // the postings relation (no job — declared schema); every later query
-    // on terms nobody fetched yet pays its pruned probe scan and nothing
-    // else (no schema-inference job, no re-listing)
+  test("a cold coordinator-path query runs no Spark job") {
+    // fresh index state: its first query resolves the stats (one job); every
+    // later query on terms nobody fetched yet reads its blocks on the driver
+    // (Live.readBlocks) and runs no job at all — no planning, no scan job,
+    // no re-listing
     val h3 = IndexBuilder.build(spark, corpus, tmpDir("graft-jobs-idx"),
       IndexBuilder.Config(salts = 4, mode = Analyzer.Code))
     Searcher.topK(spark, h3, "sparkSession", 10).collect()
     for ((q, i) <- Seq("read parquet", "shuffle write buffer", "catalystRule").zipWithIndex) {
       val jobs = jobsOf(s"graft-cold-q$i")(Searcher.topK(spark, h3, q, 10).collect())
-      assert(jobs == 1, s"cold coordinator query '$q' ran $jobs jobs, want 1 (the probe)")
+      assert(jobs == 0, s"cold coordinator query '$q' ran $jobs jobs, want 0")
     }
   }
 
   test("term-range postings: a cold probe reads only the files whose range holds its terms") {
-    import graft.index.TermRanges
+    import graft.index.{PostingsReader, TermRanges}
     val h = IndexBuilder.build(spark, corpus, tmpDir("graft-ranges-idx"),
       IndexBuilder.Config(salts = 4, mode = Analyzer.Code))
     val v = h.snapshot
@@ -312,12 +312,41 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
       val holding = files.filter(_.mayHold(TermRanges.utf8(t))).map(_.path)
       assert(holding.size < files.size, s"'$t' must eliminate files")
       assert(local(v.postingsOf(spark, Seq(t)).inputFiles.toSeq) == local(holding), s"files read for '$t'")
-      val tasks = tasksOf(s"graft-range-probe-$i")(
-        Searcher.topKTermsSnap(spark, v, Seq(t), 10).collect())
-      assert(tasks >= 1 && tasks <= holding.size, s"probe of '$t' ran $tasks tasks over ${holding.size} file(s)")
+      // the coordinator probe opens exactly those files, on the driver
+      val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      PostingsReader.beforeOpen = p => opened.add(p)
+      val jobs =
+        try jobsOf(s"graft-range-probe-$i")(Searcher.topKTermsSnap(spark, v, Seq(t), 10).collect())
+        finally PostingsReader.beforeOpen = _ => ()
+      assert(jobs == 0, s"probe of '$t' ran $jobs jobs")
+      assert(opened.toArray.toSeq == holding, s"files the probe of '$t' opened")
     }
     // a term outside every file's range: empty, and no job at all
     assert(jobsOf("graft-range-none")(assert(v.postingsOf(spark, Seq("~")).collect().isEmpty)) == 0)
+  }
+
+  test("driver probe: maxBlocks blocks are served, maxBlocks + 1 distribute") {
+    import graft.index.{Codec, LiveMemo}
+    // the hottest terms, until their blocks pass the probe's 64-block floor
+    val hot = handle.termstats(spark).collect().sortBy(t => (-t.df, t.term)).map(_.term)
+      .filter(t => Analyzer.tokens(t, Analyzer.Code).toSeq == Seq(t)).take(8).toSeq
+    val blocks = handle.snapshot.live(spark).readBlocks(hot, Int.MaxValue).length
+    assert(blocks > 64, s"fixture: $blocks blocks")
+    val want = Oracle.topK(spark, corpus, hot.mkString(" "), 10, Analyzer.Code).collect()
+    for ((maxBlocks, onDriver) <- Seq(blocks -> true, (blocks - 1) -> false)) {
+      // a fresh memo: both cases start cold
+      val v = handle.snapshot
+      val live = new LiveMemo(Searcher.MaxCachedPostings).of(spark, v)
+      live.stats // the state's one stats job, outside the count
+      var got = Array.empty[Hit]
+      val jobs = jobsOf(s"graft-probe-bound-$maxBlocks") {
+        got = Searcher.topKTermsSnap(spark, v, hot, 10,
+          driverPathMaxPostings = maxBlocks.toLong * Codec.BlockSize).collect()
+      }
+      assertRankIdentical(got, want, s"maxBlocks=$maxBlocks")
+      assert((jobs == 0) == onDriver, s"maxBlocks=$maxBlocks over $blocks blocks ran $jobs jobs")
+      assert(live.blocks.keySet == (if (onDriver) hot.toSet else Set.empty[String]))
+    }
   }
 
   test("searchAgg's exhaustive composed plan carries NO global sort (no range exchange)") {

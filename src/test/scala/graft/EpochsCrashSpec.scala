@@ -280,4 +280,43 @@ class EpochsCrashSpec extends AnyFunSuite with SparkSuite {
     assert(!Fs.tryRename(s"$dir/gone", s"$dir/c"), "a missing source loses")
     assert(Fs.tryRename(s"$dir/a", s"$dir/c") && Fs.exists(s"$dir/c") && !Fs.exists(s"$dir/a"))
   }
+
+  test("a rewritten protocol file never fails another reader's checksum") {
+    import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
+    val p = s"${tmpDir("graft-fs-crc")}/_MAINT"
+    val path = new Path(p)
+    // a reader in another process: its own checksummed local file system
+    val peer = FileSystem.newInstance(path.toUri, spark.sessionState.newHadoopConf())
+    def peerRead(): String = {
+      val in = peer.open(path)
+      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+      finally in.close()
+    }
+    val crc = new Path(path.getParent, s".${path.getName}.crc")
+    try {
+      // a sidecar an older, checksummed write left is removed by the next write
+      val out = peer.create(path, true)
+      out.write("old-token".getBytes("UTF-8")); out.close()
+      assert(peer.exists(crc), "fixture: the checksummed write leaves a sidecar")
+      Fs.writeString(p, "a-much-longer-token")
+      assert(!peer.exists(crc) && peerRead() == "a-much-longer-token")
+      // two writers (a lock holder's heartbeat and a stealer, say) rewriting
+      // the file with alternating lengths beside the reader: with a sidecar,
+      // their rewrites interleave into a file and a .crc from different writes
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val writers = Seq(0, 1).map(w => new Thread(() => {
+        var i = w
+        while (!stop.get) { Fs.writeString(p, if (i % 2 == 0) "x" * 7 else "y" * 70000); i += 1 }
+      }))
+      var reads, failures = 0
+      val deadline = System.nanoTime + 3000000000L
+      writers.foreach(_.start())
+      try while (System.nanoTime < deadline) {
+        try peerRead() catch { case _: ChecksumException => failures += 1 }
+        reads += 1
+      } finally { stop.set(true); writers.foreach(_.join()) }
+      assert(failures == 0, s"$failures of $reads reads failed their checksum")
+      assert(!peer.exists(crc))
+    } finally peer.close()
+  }
 }
